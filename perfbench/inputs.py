@@ -4,9 +4,8 @@ answers the benchmark checks against stored beside them.
 Everything here is plain Python (no Spark): the synthetic graph comes from
 ``graven_spark.sources.synth``, the crawl answer from
 ``graven_spark.oracle.crawl_oracle`` and the mega-round answer from an exact,
-Bloom-free reference written below. The one Spark-built input, the
-mega-round's Bloom shards, is made by :func:`ensure_shards` once a session
-exists. Generation time is never part of a metric.
+Bloom-free reference written below. Generation time is never part of a
+metric.
 
 The seed renames every host and permutes which host gets which tree shape
 (and which seed rank), so URL hashes, bucket placement and Bloom bits move
@@ -253,10 +252,6 @@ class Inputs:
     def seen(self) -> str:
         return os.path.join(self.dir, "seen.parquet")
 
-    @property
-    def shards(self) -> str:
-        return os.path.join(self.dir, "shards")
-
 
 def ensure_inputs(cache_root: str, kind: str, scale: str, seed: int) -> Inputs:
     """Generate (once) and return the inputs for a ``kind`` in
@@ -288,13 +283,3 @@ def ensure_inputs(cache_root: str, kind: str, scale: str, seed: int) -> Inputs:
         os.replace(tmp, done)
     with open(done) as f:
         return Inputs(d, json.load(f))
-
-
-def ensure_shards(spark, inputs: Inputs, spec) -> None:
-    """Build the pre-seeded seen set's Bloom shards with the engine (once)."""
-    from graven_spark.operators.bloom import build_shards
-
-    if os.path.exists(os.path.join(inputs.shards, "_SUCCESS")):
-        return
-    seen = spark.read.parquet(inputs.seen)
-    build_shards(seen, spec).write.mode("overwrite").parquet(inputs.shards)

@@ -34,7 +34,6 @@ import traceback  # noqa: E402
 HERE = os.path.dirname(os.path.abspath(__file__))
 ROOT = os.path.dirname(HERE)
 STATE = os.path.join(ROOT, ".perfbench")
-SETUPS = 3  # set-ups per untraced run; setup_s is their median
 DRIVER_MEM = "2g"
 
 
@@ -138,32 +137,19 @@ def _timed(wl, spark, inp, reg, state: str) -> tuple[float | None, object]:
         return None, None
 
 
-def _set_up(wl, inp, work: str, cores: int, setups: int, excluded: float,
-            event_log: str | None):
-    """``setups`` timed set-ups: each starts a session (the first launches
-    the JVM and counts from process start, later ones restart the session
-    inside it) and registers the inputs. Then one warm-up, timed apart, on
-    the same inputs (a crawl's first depth, or one mega-round), so the timed
-    operations run on a warm JVM; it comes after the last restart, which
-    would lose part of that warmth. Input generation and the Spark-built
-    inputs (``excluded`` seconds) are not counted."""
+def _set_up(wl, inp, work: str, cores: int, excluded: float, traced: bool,
+            event_log: str | None) -> tuple:
+    """The run's one set-up, timed from process start to the first timed
+    operation: the session (which launches the JVM), the Spark-built inputs,
+    input registration and the workload's warm-up. The ``excluded`` seconds
+    of input generation before it, cached per seed, are not counted."""
     from workloads import reset_dir
 
-    spark, times = None, []
-    for i in range(setups):
-        t0 = time.perf_counter()
-        if spark is not None:
-            spark.stop()
-        spark = _session(work, cores, event_log)
-        if i == 0:
-            t = time.perf_counter()
-            wl.prepare(spark, inp)  # cached per seed
-            t0 = T_START + excluded + time.perf_counter() - t
-        reg = wl.register(spark, inp)
-        times.append(time.perf_counter() - t0)
-    t = time.perf_counter()
-    wl.warm(spark, inp, reg, reset_dir(os.path.join(work, "warm")))
-    return spark, reg, times, time.perf_counter() - t
+    spark = _session(work, cores, event_log)
+    wl.prepare(spark, inp, work)
+    reg = wl.register(spark, inp)
+    wl.warm(spark, inp, reg, reset_dir(os.path.join(work, "warm")), traced)
+    return spark, reg, time.perf_counter() - T_START - excluded
 
 
 def run(workload: str, seed: int, seconds: float, trace: bool, scale: str,
@@ -190,8 +176,7 @@ def run(workload: str, seed: int, seconds: float, trace: bool, scale: str,
         inp.answer = {k: v + 1 if isinstance(v, int) else v for k, v in inp.answer.items()}
     excluded = time.perf_counter() - t
     log_dir = os.path.join(work, "eventlog") if trace else None
-    spark, reg, setups, warm_s = _set_up(wl, inp, work, cores, 1 if trace else SETUPS,
-                                         excluded, log_dir)
+    spark, reg, setup_s = _set_up(wl, inp, work, cores, excluded, trace, log_dir)
     state = os.path.join(work, "op")
     # memory is sampled in traced runs only: the sampler thread would compete
     # with the driver's py4j calls for the GIL during timed operations
@@ -211,21 +196,22 @@ def run(workload: str, seed: int, seconds: float, trace: bool, scale: str,
                 break
     op_s = statistics.median(walls) if walls else 0.0
     print(f"perfbench: {workload} seed={seed} ops={attempted} failed={failed} "
-          f"walls={[round(w, 3) for w in walls]} setups={[round(s, 3) for s in setups]} "
-          f"warm_s={warm_s:.3f}", file=sys.stderr)
+          f"walls={[round(w, 3) for w in walls]} setup_s={setup_s:.3f} "
+          f"inputs_s={excluded:.3f}", file=sys.stderr)
     if not trace:
         spark.stop()
         return {
             "correct": failed == 0, "attempted": attempted, "failed": failed,
             "metrics": {
-                "setup_s": (statistics.median(setups), "s"),
+                "setup_s": (setup_s, "s"),
                 "op_p50_s": (op_s, "s"),
                 "urls_per_s": (statistics.median(urls) / op_s if op_s else 0.0, "URLs/s"),
             },
         }
 
-    # traced: after the one untraced operation above, the same operation
-    # driven layer by layer under spans, in the same session (event log on)
+    # traced: after the one untraced operation above (warm on every
+    # workload), the same operation driven layer by layer under spans, in the
+    # same session (event log on)
     tr = Tracer()
     try:
         traced = wl.traced(spark, inp, wl.register(spark, inp), reset_dir(state), tr)

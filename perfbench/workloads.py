@@ -27,10 +27,10 @@ from graven_spark.operators.politeness import gate_robots, select_round
 from graven_spark.operators.ranking import with_global_rank
 from graven_spark.plans.driver import crawl
 from graven_spark.plans.frontier import CrawlConfig, init_run, run_round
-from graven_spark.sources.checkpoint import RoundMeta, RoundStore
+from graven_spark.sources.checkpoint import RoundStore
 
 from eventlog import Tracer
-from inputs import POLITE_RETRIES, Inputs, ensure_inputs, ensure_shards
+from inputs import POLITE_RETRIES, Inputs, ensure_inputs
 
 # bench.py's Bloom spec: 32 shards of 2 Mbit, 7 hashes
 BLOOM = BloomSpec(n_buckets=32, bits_per_shard=1 << 21, n_hashes=7)
@@ -193,7 +193,7 @@ class CrawlBfs:
     def inputs(self, cache: str, scale: str, seed: int) -> Inputs:
         return ensure_inputs(cache, self.kind, scale, seed)
 
-    def prepare(self, spark: SparkSession, inp: Inputs) -> None:
+    def prepare(self, spark: SparkSession, inp: Inputs, work: str) -> None:
         """Spark-built inputs: none for a crawl."""
 
     def register(self, spark: SparkSession, inp: Inputs) -> dict:
@@ -206,10 +206,14 @@ class CrawlBfs:
     def run(self, spark: SparkSession, inp: Inputs, reg: dict, state: str):
         return crawl(spark, inp.pages, reg["seeds"], reg["robots"], state, self.cfg)
 
-    def warm(self, spark: SparkSession, inp: Inputs, reg: dict, state: str) -> None:
-        """None: the timed crawl starts in a fresh JVM, as a CLI crawl does.
-        A warm-up short of a whole crawl leaves most of the JIT cost in the
-        crawl, and a whole one doubles the run."""
+    def warm(self, spark: SparkSession, inp: Inputs, reg: dict, state: str,
+             traced: bool) -> None:
+        """Untraced: none, so the timed crawl starts in a fresh JVM, as a CLI
+        crawl does. Traced: one discarded crawl, so that the untraced crawl
+        and the traced one that ``trace.overhead_frac`` compares both run
+        warm."""
+        if traced:
+            self.run(spark, inp, reg, state)
 
     def check(self, spark: SparkSession, inp: Inputs, out) -> Outcome:
         return self._check(spark, out.store, out.final_round, inp)
@@ -296,12 +300,15 @@ class ScheduleMega:
     def inputs(self, cache: str, scale: str, seed: int) -> Inputs:
         return ensure_inputs(cache, self.kind, scale, seed)
 
-    def prepare(self, spark: SparkSession, inp: Inputs) -> None:
-        ensure_shards(spark, inp, BLOOM)
+    def prepare(self, spark: SparkSession, inp: Inputs, work: str) -> None:
+        """The pre-seeded seen set's Bloom shards, built with the engine in
+        every run, so each run's warm-up starts from the same JVM state."""
+        self.shards = os.path.join(work, "shards")
+        build_shards(spark.read.parquet(inp.seen), BLOOM).write.parquet(self.shards)
 
     def register(self, spark: SparkSession, inp: Inputs) -> dict:
         return {"seen": spark.read.parquet(inp.seen),
-                "shards": spark.read.parquet(inp.shards),
+                "shards": spark.read.parquet(self.shards),
                 "robots": _frame(spark, inp.robots, ROBOTS_SCHEMA)}
 
     @staticmethod
@@ -343,14 +350,16 @@ class ScheduleMega:
             bc.destroy()
         return n, digest
 
-    warm = run  # warm-up: one mega-round
+    def warm(self, spark: SparkSession, inp: Inputs, reg: dict, state: str,
+             traced: bool) -> None:
+        """One mega-round, so the timed ones run on a warm JVM."""
+        self.run(spark, inp, reg, state)
 
     def traced(self, spark: SparkSession, inp: Inputs, reg: dict, state: str,
                tr: Tracer) -> Traced:
-        """The mega-round one operator at a time, each on a pinned input,
-        then what committing it would cost: a shard delta and its merge, the
-        round's checkpoint writes, and a compaction of the pre-seeded seen
-        set with the admitted urls."""
+        """The mega-round one operator at a time, each on a pinned input.
+        Nothing is committed, so the checkpoint and Bloom build/merge
+        layers read 0 here."""
         pages = spark.read.parquet(inp.pages)
         seen, shards = reg["seen"], reg["shards"]
         with tr.span("round") as s:
@@ -361,25 +370,10 @@ class ScheduleMega:
             new, seen_n = _probe_admit(tr, cand, [seen], shards, seen)
             n, digest = _digest(new, "url", "priority")
             s.attrs["depth_after"] = 1
-        delta = _build_merge(tr, new, shards)
-        store = RoundStore(state, compact_every=1)
-        store.write(0, "seen_delta", seen)
-        store.commit(0, RoundMeta(round=0, priority_base=0, frontier_count=0))
-        with tr.span("checkpoint.write"):
-            store.write(1, "frontier", new.filter(F.col("is_dir")))
-            store.write(1, "seen_delta",
-                        new.select(url_hash(F.col("url")).alias("url_hash"), "url"))
-            store.write(1, "shards_delta", delta)
-        store.commit(1, RoundMeta(round=1, priority_base=0, frontier_count=0))
-        with tr.span("checkpoint.compact") as s:
-            s.attrs["compacted"] = store.maybe_compact_seen(spark, 1)
-        for df in (fetched, cand, new, delta):
+        for df in (fetched, cand, new):
             df.unpersist()
-        return Traced(
-            self.check(spark, inp, (n, digest)), primary=["round"],
-            commit_spans=["checkpoint.write"], round_mb=dir_mb(store.round_dir(1)),
-            seen_n=seen_n,
-        )
+        return Traced(self.check(spark, inp, (n, digest)), primary=["round"],
+                      commit_spans=[], round_mb=0.0, seen_n=seen_n)
 
 
 WORKLOADS = {"crawl_bfs": CrawlBfs, "crawl_polite": CrawlPolite,
