@@ -192,7 +192,8 @@ def main(argv: list[str] | None = None) -> int:
                             "defer to the next round")
         c.add_argument("--no-bloom", action="store_true")
         c.add_argument("--bloom-buckets", type=int, default=32)
-        c.add_argument("--bloom-bits", type=int, default=1 << 21)
+        c.add_argument("--bloom-bits", type=int, default=1 << 21,
+                       help="bits per Bloom shard: a power of two >= 64")
         c.add_argument("--seen-buckets", type=int, default=32,
                        help="bucket count for the compacted seen base table")
         c.add_argument("--update-domain", action="append", default=[],
@@ -330,6 +331,12 @@ def main(argv: list[str] | None = None) -> int:
                    default="json")
 
     args = p.parse_args(argv)
+    if args.cmd in ("crawl", "run"):
+        # reject a bad Bloom spec before the session starts
+        try:
+            bloom = BloomSpec(n_buckets=args.bloom_buckets, bits_per_shard=args.bloom_bits)
+        except ValueError as e:
+            p.error(str(e))
     spark = build_session(app_name=f"graven_spark_{args.cmd}")
     if args.silent:
         spark.sparkContext.setLogLevel("OFF")
@@ -438,7 +445,7 @@ def main(argv: list[str] | None = None) -> int:
                 update_prefix = ""  # every recorded url matches
         cfg = CrawlConfig(
             use_bloom=not args.no_bloom,
-            bloom=BloomSpec(n_buckets=args.bloom_buckets, bits_per_shard=args.bloom_bits),
+            bloom=bloom,
             max_rounds=args.max_rounds,
             max_retries=args.max_retries,
             jar_limit=args.jar_limit,

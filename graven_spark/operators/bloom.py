@@ -2,12 +2,12 @@
 partitioned Bloom/cuckoo filter"; SURVEY.md §4.2.2).
 
 The seen set is split into ``n_buckets`` shards by ``pmod(xxhash64(url), B)``
-— the same bucketing the exact ``seen`` table uses — and each shard is a
-plain Bloom bitarray stored as one ``BinaryType`` row ``(bucket, filter)``.
-Shards are built/merged distributed (``applyInPandas`` per bucket, numpy
-bitwise ops) and probed with a **cogrouped** ``applyInPandas`` so a candidate
-batch only ever meets its own bucket's shard — no broadcast of the full
-filter, which at a 10^10-URL frontier would be tens of GB.
+— the same bucketing the exact ``seen`` table uses — and each shard is one
+``(bucket int, longs array<bigint>)`` row: the shard's bitarray packed
+little-endian into 64-bit words, so bit ``pos`` is bit ``pos & 63`` of word
+``pos >> 6``. Shards are built/merged distributed (``applyInPandas`` per
+bucket, numpy bitwise ops) and probed by ONE join on ``bucket`` plus a JVM
+bit-test expression — no Python worker on the candidate path.
 
 Probe semantics: bloom-negative ⇒ definitely new (skips the exact anti-join
 entirely); bloom-positive ⇒ maybe seen ⇒ exact anti-join against the ``seen``
@@ -15,7 +15,7 @@ table decides. Correctness therefore never depends on the filter (tested with
 the filter on/off); it only shrinks the expensive join's input.
 
 Hashing: double hashing h_i = h1 + i*h2 (mod m_bits) over two JVM-computed
-xxhash64 values — k memberships per URL at numpy speed, no Python hashing.
+xxhash64 values — k memberships per URL, no Python hashing.
 
 Reference parity: replaces the row-at-a-time UNIQUE-key probe at
 /root/reference/graven/db/graven_database.py:103-115.
@@ -30,8 +30,12 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-SHARD_SCHEMA = "bucket int, filter binary"
+SHARD_SCHEMA = "bucket int, longs array<bigint>"
 _H2_SALT = "graven_spark.bloom.h2"
+# Total filter size up to which the probe broadcasts the shards; above it
+# (the 10^10-URL filter is tens of GB) the shards stay distributed and the
+# candidates shuffle to them on ``bucket``.
+BROADCAST_LIMIT = 256 << 20
 
 
 @dataclass(frozen=True)
@@ -39,6 +43,17 @@ class BloomSpec:
     n_buckets: int = 16
     bits_per_shard: int = 1 << 20  # 128 KiB/shard default; size for expected n/bucket
     n_hashes: int = 7
+
+    def __post_init__(self) -> None:
+        # whole 64-bit words, and numpy's ``% bits`` must equal the JVM's
+        # ``& (bits - 1)`` mask — both need a power of two >= 64
+        bits = self.bits_per_shard
+        if bits < 64 or bits & (bits - 1):
+            raise ValueError(f"bloom bits_per_shard must be a power of two >= 64, got {bits}")
+        if self.n_buckets < 1 or self.n_hashes < 1:
+            raise ValueError(
+                f"bloom n_buckets and n_hashes must be >= 1, got {self.n_buckets}, {self.n_hashes}"
+            )
 
     @property
     def shard_nbytes(self) -> int:
@@ -63,22 +78,14 @@ def _bit_positions(h1: np.ndarray, h2: np.ndarray, spec: BloomSpec) -> np.ndarra
     return ((h1[:, None] + ks[None, :] * h2[:, None]) % np.uint64(spec.bits_per_shard)).astype(np.int64)
 
 
-def _set_bits(filt: np.ndarray, pos: np.ndarray) -> None:
-    np.bitwise_or.at(filt, pos >> 3, (1 << (pos & 7)).astype(np.uint8))
-
-
-def _test_bits(filt: np.ndarray, pos: np.ndarray) -> np.ndarray:
-    """(n, k) positions → (n,) all-bits-set membership."""
-    return ((filt[pos >> 3] >> (pos & 7)) & 1).all(axis=1)
-
-
 def build_shards(urls: DataFrame, spec: BloomSpec, url_col: str = "url") -> DataFrame:
-    """Distributed shard build: one (bucket, filter) row per non-empty bucket."""
+    """Distributed shard build: one (bucket, longs) row per non-empty bucket."""
 
     def build(pdf: pd.DataFrame) -> pd.DataFrame:
-        filt = np.zeros(spec.shard_nbytes, dtype=np.uint8)
-        _set_bits(filt, _bit_positions(pdf["_h1"].to_numpy(), pdf["_h2"].to_numpy(), spec))
-        return pd.DataFrame({"bucket": [int(pdf["bucket"].iloc[0])], "filter": [filt.tobytes()]})
+        words = np.zeros(spec.bits_per_shard // 64, dtype=np.uint64)
+        pos = _bit_positions(pdf["_h1"].to_numpy(), pdf["_h2"].to_numpy(), spec).ravel()
+        np.bitwise_or.at(words, pos >> 6, np.left_shift(np.uint64(1), (pos & 63).astype(np.uint64)))
+        return pd.DataFrame({"bucket": [int(pdf["bucket"].iloc[0])], "longs": [words.view(np.int64)]})
 
     hashed = with_bloom_hashes(urls.select(url_col), url_col, spec)
     return hashed.groupBy("bucket").applyInPandas(build, SHARD_SCHEMA)
@@ -88,93 +95,13 @@ def merge_shards(*shard_dfs: DataFrame) -> DataFrame:
     """OR together shard generations (old ∪ per-round deltas)."""
 
     def merge(pdf: pd.DataFrame) -> pd.DataFrame:
-        acc: np.ndarray | None = None
-        for raw in pdf["filter"]:
-            arr = np.frombuffer(raw, dtype=np.uint8)
-            acc = arr.copy() if acc is None else np.bitwise_or(acc, arr)
-        return pd.DataFrame({"bucket": [int(pdf["bucket"].iloc[0])], "filter": [acc.tobytes()]})
+        words = np.bitwise_or.reduce(np.stack(pdf["longs"].to_list()), axis=0)
+        return pd.DataFrame({"bucket": [int(pdf["bucket"].iloc[0])], "longs": [words]})
 
     unioned = shard_dfs[0]
     for df in shard_dfs[1:]:
         unioned = unioned.unionByName(df)
     return unioned.groupBy("bucket").applyInPandas(merge, SHARD_SCHEMA)
-
-
-def broadcast_shard_map(shards: DataFrame, track: list | None = None):
-    """Collect the shard rows once and broadcast the bucket→bitarray map —
-    callers that probe repeatedly against the SAME shard generation (the
-    batched crawl round: up to max_batch_rounds depths share one shard set)
-    pass the handle to :func:`probe` instead of paying one driver collect +
-    broadcast per depth. ``track`` collects the handle for destroy()."""
-    sc = shards.sparkSession.sparkContext
-    shard_map = {
-        int(r["bucket"]): np.frombuffer(r["filter"], dtype=np.uint8)
-        for r in shards.collect()
-    }
-    bc = sc.broadcast(shard_map)
-    if track is not None:
-        track.append(bc)
-    return bc
-
-
-def _longs_df(spark, shard_map: dict, spec: BloomSpec) -> DataFrame:
-    """Shard bitarrays as (bucket, array<bigint>) rows for the JVM probe.
-    Little-endian 8-byte packing, so bit ``pos`` of the byte-level filter is
-    bit ``pos & 63`` of long ``pos >> 6`` — exactly the numpy build-side
-    layout (``_set_bits``: byte pos>>3, bit pos&7)."""
-    import pandas as pd
-
-    rows = pd.DataFrame({
-        "bucket": list(shard_map.keys()),
-        "_longs": [
-            arr.view("<u8").astype("int64") for arr in shard_map.values()
-        ],
-    })
-    return spark.createDataFrame(rows, "bucket int, _longs array<bigint>")
-
-
-def probe_jvm(
-    candidates: DataFrame,
-    shard_map: dict,
-    spec: BloomSpec,
-    url_col: str = "url",
-    longs_df: DataFrame | None = None,
-) -> DataFrame:
-    """Pure-JVM broadcast probe: the shard map rides as a 32-row broadcast
-    relation of packed longs; membership is ``n_hashes`` element_at + shift
-    + mask tests per row, whole-stage-codegen, no Python worker and no
-    Arrow round-trip of the candidate set (guide §4.1). Bit positions
-    reproduce the numpy build side exactly when ``bits_per_shard`` is a
-    power of two (uint64 wraparound == Java long wraparound, and
-    ``% bits == & (bits-1)``); :func:`probe` falls back to the pandas UDF
-    otherwise."""
-    spark = candidates.sparkSession
-    longs = longs_df if longs_df is not None else _longs_df(spark, shard_map, spec)
-    hashed = with_bloom_hashes(candidates, url_col, spec)
-    joined = hashed.join(F.broadcast(longs), "bucket", "left")
-    mask = F.lit(spec.bits_per_shard - 1).cast("long")
-    # Reduce mod 2^m BEFORE the multiply-add: (h1 + k*h2) mod 2^m ==
-    # ((h1 & mask) + k*(h2 & mask)) & mask, and the reduced operands can't
-    # overflow a long — ANSI mode (session default) would abort on the raw
-    # uint64-wraparound form. The odd bit of h2 survives the mask.
-    h1m = F.col("_h1").bitwiseAND(mask)
-    h2m = F.col("_h2").bitwiseOR(F.lit(1)).bitwiseAND(mask)
-    bits = []
-    for k in range(spec.n_hashes):
-        pos = (h1m + F.lit(k) * h2m).bitwiseAND(mask)
-        word = F.element_at(F.col("_longs"), (F.shiftright(pos, 6) + 1).cast("int"))
-        bits.append(
-            F.call_function(
-                "shiftright", word, pos.bitwiseAND(F.lit(63)).cast("int")
-            ).bitwiseAND(F.lit(1)) == 1
-        )
-    all_set = bits[0]
-    for b in bits[1:]:
-        all_set = all_set & b
-    maybe = F.when(F.col("_longs").isNull(), F.lit(False)).otherwise(all_set)
-    return joined.withColumn("maybe_seen", maybe).drop(
-        "_h1", "_h2", "bucket", "_longs"
-    )
 
 
 def probe(
@@ -183,89 +110,35 @@ def probe(
     spec: BloomSpec,
     url_col: str = "url",
     track: list | None = None,
-    shard_bc=None,
 ) -> DataFrame:
-    """Default probe: broadcast the shard map (collected once per round,
-    ``n_buckets × shard_nbytes`` — e.g. 32×256 KiB = 8 MiB) and test
-    membership in a scalar pandas UDF over just the three hash columns.
-    Only 24 bytes/row cross the Arrow boundary and there is **no shuffle**;
-    measured ~10× faster than the cogrouped path at 7.5M candidates and it
-    scales with cores. ``admit_new`` switches to :func:`probe_cogrouped`
-    automatically when the total filter size exceeds its broadcast limit
-    (e.g. the full 10^10-URL frontier), where shards must stay distributed.
+    """Adds ``maybe_seen`` to ``candidates``: a left join to ``shards`` on
+    ``bucket`` puts each candidate next to its shard's words, then
+    ``n_hashes`` element_at + shift + mask tests decide membership
+    (whole-stage codegen, no Python worker). The shards are broadcast when
+    the whole filter (``n_buckets × shard_nbytes``) fits
+    ``BROADCAST_LIMIT``; above it the join shuffles on ``bucket``, so each
+    shard moves once per bucket, not once per candidate.
 
-    ``track``: optional list collecting the broadcast handle so the caller
-    can ``destroy()`` it once its actions finish (one broadcast per round
-    would otherwise accumulate over a long crawl). ``shard_bc``: a handle
-    from :func:`broadcast_shard_map` to reuse across probes of the same
-    shard generation (skips this call's collect+broadcast).
-
-    Dispatch: power-of-two ``bits_per_shard`` (every shipped spec) takes the
-    pure-JVM :func:`probe_jvm`; anything else keeps the vectorized pandas
-    probe (the numpy ``%`` on uint64 and the JVM ``&`` mask only agree for
-    powers of two)."""
-    if spec.bits_per_shard & (spec.bits_per_shard - 1) == 0:
-        if shard_bc is not None:
-            # memoize the packed-longs relation on the shared handle: one
-            # conversion per shard generation, not per probe
-            longs = getattr(shard_bc, "_graven_longs_df", None)
-            if longs is None:
-                longs = _longs_df(candidates.sparkSession, shard_bc.value, spec)
-                shard_bc._graven_longs_df = longs
-            return probe_jvm(candidates, shard_bc.value, spec, url_col, longs)
-        shard_map = {
-            int(r["bucket"]): np.frombuffer(r["filter"], dtype=np.uint8)
-            for r in shards.collect()
-        }
-        return probe_jvm(candidates, shard_map, spec, url_col)
-
-    bc = shard_bc if shard_bc is not None else broadcast_shard_map(shards, track)
-
-    @F.pandas_udf("boolean")
-    def maybe_seen_udf(bucket: pd.Series, h1: pd.Series, h2: pd.Series) -> pd.Series:
-        shards_local = bc.value
-        out = np.zeros(len(bucket), dtype=bool)
-        bvals = bucket.to_numpy()
-        h1v, h2v = h1.to_numpy(), h2.to_numpy()
-        for b in np.unique(bvals):
-            filt = shards_local.get(int(b))
-            if filt is None:
-                continue
-            mask = bvals == b
-            pos = _bit_positions(h1v[mask], h2v[mask], spec)
-            out[mask] = _test_bits(filt, pos)
-        return pd.Series(out)
-
+    Bit positions equal the numpy build side's: ``bits_per_shard`` is a
+    power of two (BloomSpec enforces it), so uint64 wraparound mod 2^m is
+    the JVM mask. ``track`` is accepted and ignored — the benchmark still
+    passes it and destroys whatever it collected."""
     hashed = with_bloom_hashes(candidates, url_col, spec)
-    return (
-        hashed.withColumn("maybe_seen", maybe_seen_udf("bucket", "_h1", "_h2"))
-        .drop("_h1", "_h2", "bucket")
-    )
-
-
-def probe_cogrouped(candidates: DataFrame, shards: DataFrame, spec: BloomSpec, url_col: str = "url") -> DataFrame:
-    """Cogrouped probe: adds ``maybe_seen`` boolean. Candidates co-shuffled
-    with their (single) shard row by bucket — shard bytes move once per
-    bucket, not once per candidate. The scale path for filters too large to
-    broadcast; prefer :func:`probe` otherwise."""
-    out_schema = ", ".join(
-        f"`{f.name}` {f.dataType.simpleString()}" for f in candidates.schema.fields
-    ) + ", maybe_seen boolean"
-
-    def cogroup(cand: pd.DataFrame, shard: pd.DataFrame) -> pd.DataFrame:
-        if len(cand) == 0:
-            return cand.drop(columns=["_h1", "_h2", "bucket"]).assign(maybe_seen=pd.Series(dtype=bool))
-        if len(shard) == 0:
-            maybe = np.zeros(len(cand), dtype=bool)
-        else:
-            filt = np.frombuffer(shard["filter"].iloc[0], dtype=np.uint8)
-            pos = _bit_positions(cand["_h1"].to_numpy(), cand["_h2"].to_numpy(), spec)
-            maybe = _test_bits(filt, pos)
-        return cand.drop(columns=["_h1", "_h2", "bucket"]).assign(maybe_seen=maybe)
-
-    hashed = with_bloom_hashes(candidates, url_col, spec)
-    return (
-        hashed.groupBy("bucket")
-        .cogroup(shards.groupBy("bucket"))
-        .applyInPandas(cogroup, out_schema)
-    )
+    if spec.n_buckets * spec.shard_nbytes <= BROADCAST_LIMIT:
+        shards = F.broadcast(shards)
+    joined = hashed.join(shards, "bucket", "left")
+    mask = F.lit(spec.bits_per_shard - 1).cast("long")
+    # Reduce mod 2^m BEFORE the multiply-add: (h1 + k*h2) mod 2^m ==
+    # ((h1 & mask) + k*(h2 & mask)) & mask, and the reduced operands can't
+    # overflow a long — ANSI mode would abort on the raw uint64-wraparound
+    # form. The odd bit of h2 survives the mask.
+    h1m = F.col("_h1").bitwiseAND(mask)
+    h2m = F.col("_h2").bitwiseOR(F.lit(1)).bitwiseAND(mask)
+    all_set = F.lit(True)
+    for k in range(spec.n_hashes):
+        pos = (h1m + F.lit(k) * h2m).bitwiseAND(mask)
+        word = F.element_at(F.col("longs"), (F.shiftright(pos, 6) + 1).cast("int"))
+        bit = F.call_function("shiftright", word, pos.bitwiseAND(F.lit(63)).cast("int"))
+        all_set = all_set & (bit.bitwiseAND(F.lit(1)) == 1)
+    maybe = F.when(F.col("longs").isNull(), F.lit(False)).otherwise(all_set)
+    return joined.withColumn("maybe_seen", maybe).drop("_h1", "_h2", "bucket", "longs")

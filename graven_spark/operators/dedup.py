@@ -4,6 +4,9 @@ check-then-insert on a UNIQUE ``uri`` key,
 /root/reference/graven/worker/crawler.py:82-84 +
 /root/reference/graven/db/graven_database.py:103-115 — our MERGE-style
 admission is the race-free version, SURVEY.md §7.4.3).
+
+Admission only consumes the ``maybe_seen`` column of :func:`bloom.probe`;
+the probe and its broadcast-or-shuffle choice live in ``bloom.py``.
 """
 
 from __future__ import annotations
@@ -11,12 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .bloom import BloomSpec, probe, probe_cogrouped
-
-# Above this total filter size the broadcast probe would strain the driver
-# (the 10^10-URL filter is tens of GB); switch to the cogrouped probe where
-# shards stay distributed. Overridable per call / via CrawlConfig.
-BLOOM_BROADCAST_LIMIT = 256 << 20
+from .bloom import BloomSpec, probe
 
 
 def first_occurrence(candidates: DataFrame, key: str = "url", order: str = "priority") -> DataFrame:
@@ -54,10 +52,8 @@ def admit_new(
     seen: DataFrame | list[DataFrame] | None,
     shards: DataFrame | None = None,
     spec: BloomSpec | None = None,
-    broadcast_limit: int = BLOOM_BROADCAST_LIMIT,
     track: list | None = None,
     dedup_first: bool = False,
-    shard_bc=None,
 ) -> DataFrame:
     """Rows of ``candidates`` whose url is in no part of ``seen``.
 
@@ -71,11 +67,9 @@ def admit_new(
     candidate side is already hash-partitioned on url, so later parts only
     shuffle their own (small) side.
 
-    The Bloom probe path is auto-selected by total filter size:
-    ≤ ``broadcast_limit`` ⇒ broadcast probe (no shuffle, scalar pandas UDF);
-    above ⇒ cogrouped probe (shards stay distributed). ``track``, when
-    given, collects broadcast handles for the caller to destroy after its
-    actions complete.
+    The Bloom probe (:func:`bloom.probe`) is one join on ``bucket``; it
+    picks broadcast or shuffled shards from the spec's size itself.
+    ``track`` is accepted and ignored — the benchmark still passes it.
 
     ``dedup_first=True`` folds the within-batch first-occurrence dedup INTO
     the admission: probe → anti-joins → first_occurrence. The joins run
@@ -103,15 +97,7 @@ def admit_new(
         for p in parts:
             out = out.join(p.select("url"), "url", "left_anti")
         return first_occurrence(out) if dedup_first else out
-    spec = spec or BloomSpec()
-    if spec.n_buckets * spec.shard_nbytes > broadcast_limit:
-        probed = probe_cogrouped(candidates, shards, spec)
-    else:
-        # shard_bc: pre-broadcast shard map shared across the batched crawl
-        # round's depths (one driver collect per shard GENERATION, not per
-        # probe — bloom.broadcast_shard_map)
-        probed = probe(candidates, shards, spec, track=track, shard_bc=shard_bc)
-    out = probed
+    out = probe(candidates, shards, spec or BloomSpec())
     for p in parts:
         pu = p.select(F.col("url").alias("_seen_url"))
         cond = (F.col("url") == F.col("_seen_url")) & F.col("maybe_seen")

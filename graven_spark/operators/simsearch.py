@@ -54,12 +54,14 @@ def cosine_topk(
     vec_col: str = "embedding",
     id_col: str = "vec_id",
 ) -> DataFrame:
-    """Exact top-k by cosine similarity to a constant query vector."""
+    """Exact top-k by cosine similarity to a constant query vector. A
+    zero-norm vector has no similarity (NULL) and is never returned, even
+    when fewer than ``k`` vectors score."""
     q = F.array(*[F.lit(float(x)) for x in query_vec])
     scored = embeddings.select(
         id_col,
         F.round(cosine_sim(F.col(vec_col), q), 4).alias("cos_sim"),
-    )
+    ).filter(F.col("cos_sim").isNotNull())
     return scored.orderBy(F.desc("cos_sim"), F.col(id_col)).limit(k)
 
 

@@ -26,8 +26,8 @@ Scale notes (explicitly engineered, SURVEY.md §4.2):
 - ``seen`` is only ever read with column pruning (url) and only probed by
   the bloom-positive slice;
 - per-round parquet round-trip keeps the iterative plan O(1) per round;
-  every persisted handle and the per-round Bloom broadcast are released
-  before the round returns (nothing accumulates over a long crawl).
+  every persisted handle, the Bloom shards included, is released before
+  the round returns (nothing accumulates over a long crawl).
 
 Retry/requeue (U4, reference /root/reference/graven/worker/generator.py:71-76
 + scanner.py:80-85): a selected directory URL whose fetch fails re-enters
@@ -54,7 +54,7 @@ from ..functions.extract import (
     extract_text_memo,
 )
 from ..operators.bloom import BloomSpec, build_shards, merge_shards
-from ..operators.dedup import BLOOM_BROADCAST_LIMIT, admit_new, first_occurrence
+from ..operators.dedup import admit_new, first_occurrence
 from ..operators.politeness import DEFAULT_BUDGET, gate_robots, select_round
 from ..operators.ranking import with_global_rank
 from ..sources.checkpoint import SEEN_BUCKETS_DEFAULT, RoundMeta, RoundStore
@@ -99,7 +99,6 @@ class CrawlConfig:
     # (bench `dedup_extract` micro).
     dedup_content: bool = False
     seen_buckets: int = SEEN_BUCKETS_DEFAULT
-    bloom_broadcast_limit: int = BLOOM_BROADCAST_LIMIT
     # Frontier-size-adaptive round batching (SURVEY.md §7.4.5): when the
     # frontier holds fewer than batch_threshold rows, up to max_batch_rounds
     # logical depths are processed IN MEMORY before one parquet round-trip +
@@ -273,10 +272,8 @@ def _round_dataflow(
     frontier: DataFrame,
     seen_parts: list[DataFrame],
     shards: DataFrame | None,
-    bloom_bcs: list,
     batch_deltas: list[DataFrame],
     truncate: bool = False,
-    shard_bc=None,
     frontier_rows: int | None = None,
 ) -> _RoundFlow:
     """The per-depth dataflow for logical round k: politeness select →
@@ -289,8 +286,7 @@ def _round_dataflow(
     chain in memory (each depth's logical plan builds on the last; 16
     chained depths of un-truncated plan OOM the driver just *printing* the
     tree). Mid-batch fault tolerance is not lost: a crashed batch recomputes
-    from the committed round. ``shard_bc``: pre-broadcast Bloom shard map
-    shared across the batch's depths (bloom.broadcast_shard_map)."""
+    from the committed round."""
     # -- politeness selection (W3/T3) --------------------------------------
     flagged = select_round(frontier, robots, cfg.default_budget, cfg.n_salts,
                            delay_window_s=cfg.delay_window_s)
@@ -399,11 +395,7 @@ def _round_dataflow(
     # probe → within-batch FIFO first-occurrence dedup → exact anti-joins;
     # dedup_first keeps the aggregate's url-partitioning visible to the
     # joins (one candidate shuffle total — see admit_new docstring)
-    new0 = admit_new(
-        cand, seen_parts, shards, cfg.bloom,
-        broadcast_limit=cfg.bloom_broadcast_limit, track=bloom_bcs,
-        dedup_first=True, shard_bc=shard_bc,
-    )
+    new0 = admit_new(cand, seen_parts, shards, cfg.bloom, dedup_first=True)
     for d in batch_deltas:
         new0 = new0.join(d.select("url"), "url", "left_anti")
 
@@ -541,19 +533,12 @@ def run_round(
     seen_deltas = store.read_seen_deltas(spark, k)
     seen_parts = [p for p in (seen_base, seen_deltas) if p is not None]
     shards, shards_rebuilt = validated_shards(spark, store, meta, cfg, k)
-    bloom_bcs: list = []
-    # ONE shard collect+broadcast per committed transition: every depth of a
+    # ONE shard materialization per committed transition: every depth of a
     # batched round probes the same shard generation (new-in-batch urls are
-    # handled by the exact batch_deltas anti-joins), so the per-depth driver
-    # collect the round-5 shape paid was pure overhead.
-    shard_bc = None
-    if (
-        shards is not None
-        and cfg.bloom.n_buckets * cfg.bloom.shard_nbytes <= cfg.bloom_broadcast_limit
-    ):
-        from ..operators.bloom import broadcast_shard_map
-
-        shard_bc = broadcast_shard_map(shards, track=bloom_bcs)
+    # handled by the exact batch_deltas anti-joins), and the commit's merge
+    # reads it once more.
+    if shards is not None:
+        shards = shards.persist()
 
     batching = 0 < meta.frontier_count < cfg.batch_threshold
     max_inner = cfg.max_batch_rounds if batching else 1
@@ -566,10 +551,9 @@ def run_round(
     while True:
         flow = _round_dataflow(
             spark, pages_path, robots, cfg, logical_k, priority_base,
-            frontier, seen_parts, shards, bloom_bcs,
+            frontier, seen_parts, shards,
             batch_deltas=[f.new for f in flows],
             truncate=batching,
-            shard_bc=shard_bc,
             frontier_rows=frontier_rows,
         )
         flows.append(flow)
@@ -661,6 +645,6 @@ def run_round(
     for f in flows:
         for df in f.persisted:
             df.unpersist()
-    for bc in bloom_bcs:
-        bc.destroy()
+    if shards is not None:
+        shards.unpersist()
     return next_meta

@@ -32,11 +32,14 @@ Compaction is crash-safe: the consolidated base is written to a temp dir and
 completely or not at all, so a killed compaction can never shadow the deltas
 with a partial base (resume re-runs the compaction idempotently).
 
-Bloom shards are cumulative — only the latest committed round's ``shards/``
-is read. The Bloom spec that built them is recorded in ``meta.json``; a
-resume with a different spec (or with the filter toggled on) must rebuild
-shards from the full seen set, never trust mismatched ones (false negatives
-in the conditional anti-join would silently admit duplicates).
+Bloom shards are an LSM too: the newest full ``shards/`` set OR'd with the
+``shards_delta/`` sets after it, each row ``(bucket, longs array<bigint>)``.
+The Bloom spec that built them is recorded in ``meta.json``; a resume with a
+different spec (or with the filter toggled on) must rebuild shards from the
+full seen set, never trust mismatched ones (false negatives in the
+conditional anti-join would silently admit duplicates). A state whose full
+shards predate the packed-longs layout (``bucket, filter binary``) reads as
+having no shards, so it is rebuilt the same way.
 
 Reading a round always goes through parquet, which also truncates the
 iterative plan lineage: every round's Spark plan has constant size.
@@ -245,15 +248,15 @@ class RoundStore:
         the per-round shard deltas after it (the same LSM shape as the seen
         set — a full rewrite of a tens-of-GB filter every round would be
         pure write amplification at a 10^10-URL frontier). The merge is one
-        tiny groupBy over (generations × buckets) rows."""
-        full_k = None
-        for j in range(k, -1, -1):
-            if os.path.exists(self._p(j, "shards")):
-                full_k = j
-                break
+        tiny groupBy over (generations × buckets) rows. ``None`` when there
+        is no full set, or it is in the old ``(bucket, filter)`` layout."""
+        full_k = self.last_full_shards_round(k)
         if full_k is None:
             return None
-        parts = [spark.read.parquet(self._p(full_k, "shards"))]
+        full = spark.read.parquet(self._p(full_k, "shards"))
+        if "longs" not in full.columns:
+            return None
+        parts = [full]
         for j in range(full_k + 1, k + 1):
             p = self._p(j, "shards_delta")
             if os.path.exists(p):

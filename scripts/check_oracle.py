@@ -2,7 +2,11 @@
 ``queries()`` entry on Spark and its ``oracle_sql()`` on DuckDB at sf0.01,
 compare row count + column names + order-insensitive values.
 
-Usage: python scripts/check_oracle.py [sf_dir] [only_query ...]
+Usage: python scripts/check_oracle.py [--bare] [sf_dir] [only_query ...]
+
+``--bare`` runs the Spark side in a session built with no repo config
+(``SparkSession.builder.master(...).getOrCreate()``: Arrow conversion off,
+Spark's defaults everywhere), so the answers can be checked both ways.
 """
 
 from __future__ import annotations
@@ -13,6 +17,7 @@ from pathlib import Path
 
 import duckdb
 import pandas as pd
+from pyspark.sql import SparkSession
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
@@ -38,10 +43,16 @@ def normalize(df: pd.DataFrame) -> pd.DataFrame:
 
 
 def main() -> int:
-    sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
-    only = set(sys.argv[2:])
-    spark = build_session(master="local[8]", shuffle_partitions=8,
-                          extra_conf={"spark.driver.memory": "6g"})
+    args = sys.argv[1:]
+    bare = "--bare" in args
+    args = [a for a in args if a != "--bare"]
+    sf_dir = args[0] if args else "/root/testdata/sf0.01"
+    only = set(args[1:])
+    if bare:
+        spark = SparkSession.builder.master("local[8]").getOrCreate()
+    else:
+        spark = build_session(master="local[8]", shuffle_partitions=8,
+                              extra_conf={"spark.driver.memory": "6g"})
     con = duckdb.connect()
     for t in TABLES:
         con.sql(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')")

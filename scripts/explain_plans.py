@@ -20,6 +20,7 @@ from pyspark.sql import functions as F
 
 from graven_spark.functions.canon import host_of, url_hash
 from graven_spark.functions.extract import extract_links
+from graven_spark.operators import bloom
 from graven_spark.operators.bloom import BloomSpec, build_shards
 from graven_spark.operators.dedup import admit_new, first_occurrence
 from graven_spark.operators.politeness import select_round
@@ -29,6 +30,8 @@ from graven_spark.sources import synth
 
 OUT = os.path.join(os.path.dirname(os.path.abspath(__file__)), "..", "PLANS.md")
 EXTRA_CHECKS: list[tuple[str, bool]] = []
+PYTHON_NODES = ("ArrowEvalPython", "BatchEvalPython", "FlatMapGroupsInPandas",
+                "FlatMapCoGroupsInPandas")
 
 
 def formatted(df) -> str:
@@ -36,6 +39,26 @@ def formatted(df) -> str:
     with contextlib.redirect_stdout(buf):
         df.explain("formatted")
     return buf.getvalue()
+
+
+def _marker(ln: str) -> int | None:
+    """Column of a plan-tree line's ``+-``/``:-`` node marker."""
+    cands = [p for p in (ln.find("+-"), ln.find(":-")) if p >= 0]
+    return min(cands) if cands else None
+
+
+def without_shard_side(plan: str) -> list[str]:
+    """The plan's tree lines minus the Bloom probe join's shard side (the
+    right child of the ``LeftOuter`` join on bucket). Building or merging
+    shards runs pandas UDFs and a bucket shuffle by design; the checks
+    below are about the candidate/seen path."""
+    tree = plan.split("\n\n(1)")[0].splitlines()
+    j = next(i for i, ln in enumerate(tree) if "LeftOuter" in ln)
+    child = _marker(tree[j]) + 3
+    r = next(i for i in range(j + 1, len(tree))
+             if _marker(tree[i]) == child and tree[i][child:].startswith("+-"))
+    end = next((i for i in range(r + 1, len(tree)) if (_marker(tree[i]) or 0) <= child), len(tree))
+    return tree[:r] + tree[end:]
 
 
 def main() -> None:
@@ -125,17 +148,20 @@ def main() -> None:
     # At sandbox sizes AQE rightly broadcasts the tiny base (bucketing then
     # "disabled by query planner"). The audit pins the SCALE plan — the one
     # a 10^10-row base gets — by ruling out auto-broadcast for this section.
+    # The probe's strategy is the spec's choice, not the session's: the
+    # shards broadcast at this spec size, and shuffle on bucket when the
+    # filter is over bloom.BROADCAST_LIMIT (forced to 0 for the second plan).
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", -1)
-    eng = admit_new(
-        cand2,
-        [base, deltas],
-        store.read_shards(spark, kf),
-        spec,
-        dedup_first=True,
-    )
+    shards2 = store.read_shards(spark, kf)
+    eng = admit_new(cand2, [base, deltas], shards2, spec, dedup_first=True)
     eng_plan = formatted(eng)
+    limit, bloom.BROADCAST_LIMIT = bloom.BROADCAST_LIMIT, 0
+    eng_shuffled_plan = formatted(
+        admit_new(cand2, [base, deltas], shards2, spec, dedup_first=True))
+    bloom.BROADCAST_LIMIT = limit
     spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
-    n_exchanges = len([ln for ln in eng_plan.splitlines() if ") Exchange" in ln])
+    cand_path = without_shard_side(eng_plan)
+    n_exchanges = sum("- Exchange (" in ln for ln in cand_path)
     seen_scan_ok = "Bucketed: true" in eng_plan and "SelectedBucketsCount" in eng_plan
     # Expected data movement in the WHOLE admission plan: exactly TWO
     # Exchanges — (1) the candidate set's single hash shuffle on url feeding
@@ -155,14 +181,28 @@ def main() -> None:
     )
     extra = [
         ("engine admission: bucketed base scan (Bucketed: true + SelectedBucketsCount)", seen_scan_ok),
-        (f"engine admission: exactly 2 Exchanges (candidate agg + delta side); got {n_exchanges}", n_exchanges == 2),
+        (f"engine admission: exactly 2 Exchanges outside the broadcast shard side "
+         f"(candidate shuffle on url + delta side); got {n_exchanges}", n_exchanges == 2),
         (f"engine admission: base scan's parent is the join, not a Sort (got `{parent.strip()}`)",
          "Sort" not in parent),
     ]
+    for label, plan, join in (("broadcast", eng_plan, "BroadcastHashJoin LeftOuter"),
+                              ("shuffled", eng_shuffled_plan, "SortMergeJoin LeftOuter")):
+        found = [n for n in PYTHON_NODES if any(n in ln for ln in without_shard_side(plan))]
+        extra += [
+            (f"engine admission, {label} Bloom probe: a {join} on bucket", join in plan),
+            (f"engine admission, {label} Bloom probe: zero {'/'.join(PYTHON_NODES)} "
+             f"nodes outside the shard side; found {found or 'none'}", not found),
+        ]
     sections.append((
         "ENGINE admission (RoundStore bucketed seen_full base + deltas)",
         eng_plan,
         ["LeftAnti", "Bucketed: true", "SelectedBucketsCount"],
+    ))
+    sections.append((
+        "ENGINE admission, shuffled Bloom probe (filter over the broadcast limit)",
+        eng_shuffled_plan,
+        ["LeftAnti", "SortMergeJoin LeftOuter"],
     ))
     EXTRA_CHECKS.extend(extra)
 
@@ -259,11 +299,6 @@ def main() -> None:
     # walk the ref scan's ANCESTOR chain up to the join: no Exchange allowed
     ntree = nvd_plan.split("\n\n(1)")[0].splitlines()
     ref_idx = next(i for i, ln in enumerate(ntree) if "plans_cve_ref" in ln)
-
-    def _marker(ln):
-        cands = [p for p in (ln.find("+-"), ln.find(":-")) if p >= 0]
-        return min(cands) if cands else None
-
     cur = _marker(ntree[ref_idx])
     ref_side_clean = True
     for ln in reversed(ntree[:ref_idx]):

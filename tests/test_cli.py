@@ -7,6 +7,8 @@ from __future__ import annotations
 import json
 import os
 
+import pytest
+
 from graven_spark.__main__ import main, read_seeds
 
 
@@ -18,6 +20,16 @@ def test_read_seeds_csv_order(spark, tmp_path):
         (0, "https://b.example.com/r"),
         (1, "https://a.example.com/r"),
     ]  # file order = priority (cli_parser.py:246-259 semantics)
+
+
+def test_cli_rejects_bad_bloom_bits(tmp_path, capsys):
+    """A Bloom size the probe cannot serve is a usage error, raised before
+    any Spark session starts."""
+    with pytest.raises(SystemExit) as exc:
+        main(["crawl", "--pages", "p", "--seeds", "s", "--state", str(tmp_path),
+              "--bloom-bits", "3000"])
+    assert exc.value.code == 2
+    assert "power of two" in capsys.readouterr().err
 
 
 def test_cli_crawl_and_export(spark, smoke_graph, tmp_path):

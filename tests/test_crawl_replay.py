@@ -155,6 +155,18 @@ def test_bloom_off_equals_bloom_on(spark, smoke_graph, tmp_path):
     _assert_match(spark, out_off, ora)
 
 
+def test_replay_session_independent(spark, smoke_graph, tmp_path):
+    """The engine's answers must not depend on the session config: a
+    Bloom-on crawl in a fresh session with Arrow conversion off and ANSI on
+    still replays the oracle."""
+    bare = spark.newSession()
+    bare.conf.set("spark.sql.execution.arrow.pyspark.enabled", "false")
+    bare.conf.set("spark.sql.ansi.enabled", "true")
+    cfg = CrawlConfig(use_bloom=True, bloom=BloomSpec(n_buckets=8, bits_per_shard=1 << 16))
+    out, ora = _run_both(bare, tmp_path, smoke_graph, with_robots=False, cfg=cfg)
+    _assert_match(bare, out, ora)
+
+
 @pytest.mark.slow
 def test_replay_t2_multihost_skewed(spark, t2_graph, tmp_path):
     """8 hosts, ~6k pages, one host owns half the URLs (salting path),

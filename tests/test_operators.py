@@ -3,8 +3,11 @@ first-occurrence dedup, politeness selection, global ranking."""
 
 from __future__ import annotations
 
+import numpy as np
+import pytest
 from pyspark.sql import functions as F
 
+from graven_spark.operators import bloom
 from graven_spark.operators.bloom import BloomSpec, build_shards, merge_shards, probe
 from graven_spark.operators.dedup import admit_new, first_occurrence
 from graven_spark.operators.politeness import gate_robots, select_round
@@ -120,48 +123,59 @@ def test_global_rank_dense_and_ordered(spark):
     pinned.unpersist()
 
 
-def test_probe_jvm_matches_pandas_probe_exactly(spark):
-    """The pure-JVM bit-test probe must agree with the vectorized pandas
-    probe bit-for-bit on every url (members AND non-members — false
-    positives included, since both must test the same numpy-built bit
-    positions). A non-power-of-two spec exercises the pandas fallback."""
-    from graven_spark.operators.bloom import broadcast_shard_map, probe_jvm
-    import numpy as np
+def _probe_reference(spark, members: list[str], cand: list[str], spec: BloomSpec) -> dict:
+    """Driver-side oracle: a candidate is maybe-seen iff every one of its
+    numpy ``_bit_positions`` was set by some member of its bucket — plain
+    position sets, independent of how the shards pack their bits."""
 
-    members = spark.createDataFrame(
-        [(f"m{i}",) for i in range(400)], "url string")
-    shards = build_shards(members, SPEC)
-    cand = spark.createDataFrame(
-        [(f"m{i}",) for i in range(400)] + [(f"x{i}",) for i in range(2000)],
-        "url string")
+    def hashed(urls):
+        df = spark.createDataFrame([(u,) for u in urls], "url string")
+        rows = bloom.with_bloom_hashes(df, "url", spec).collect()
+        pos = bloom._bit_positions(np.array([r._h1 for r in rows]), np.array([r._h2 for r in rows]), spec)
+        return [(r.url, r.bucket, set(p.tolist())) for r, p in zip(rows, pos)]
 
-    shard_map = {
-        int(r["bucket"]): np.frombuffer(r["filter"], dtype=np.uint8)
-        for r in shards.collect()
-    }
-    got_jvm = {r.url: r.maybe_seen
-               for r in probe_jvm(cand, shard_map, SPEC).collect()}
-    # reference: the numpy kernels the builder/pandas probe share, driver-side
-    from graven_spark.operators import bloom as B
-
-    hashed = B.with_bloom_hashes(cand, "url", SPEC).collect()
-    got_ref = {}
-    for r in hashed:
-        filt = shard_map.get(int(r.bucket))
-        if filt is None:
-            got_ref[r.url] = False
-            continue
-        pos = B._bit_positions(
-            np.array([r._h1]), np.array([r._h2]), SPEC)
-        got_ref[r.url] = bool(B._test_bits(filt, pos)[0])
-    assert got_jvm == got_ref
-    assert all(got_jvm[f"m{i}"] for i in range(400))  # no false negatives
-    assert broadcast_shard_map is not None  # imported surface stays exported
+    set_bits: dict[int, set] = {}
+    for _, bucket, pos in hashed(members):
+        set_bits.setdefault(bucket, set()).update(pos)
+    return {url: pos <= set_bits.get(bucket, set()) for url, bucket, pos in hashed(cand)}
 
 
-def test_probe_odd_bits_falls_back_and_finds_members(spark):
-    odd = BloomSpec(n_buckets=4, bits_per_shard=3000, n_hashes=5)
-    urls = spark.createDataFrame([(f"u{i}",) for i in range(300)], "url string")
-    shards = build_shards(urls, odd)
-    probed = probe(urls.select("url"), shards, odd)
-    assert probed.filter(~F.col("maybe_seen")).count() == 0
+def test_probe_strategies_match_numpy_reference(spark, monkeypatch):
+    """The broadcast and the shuffled probe must agree bit for bit with the
+    numpy reference on every url — members AND non-members, so false
+    positives must match too (the dense spec makes ~8% of them)."""
+    dense = BloomSpec(n_buckets=4, bits_per_shard=1 << 9, n_hashes=3)
+    member_urls = [f"m{i}" for i in range(400)]
+    cand_urls = member_urls + [f"x{i}" for i in range(2000)]
+    members = spark.createDataFrame([(u,) for u in member_urls], "url string")
+    cand = spark.createDataFrame([(u,) for u in cand_urls], "url string")
+    shards = build_shards(members, dense)
+    want = _probe_reference(spark, member_urls, cand_urls, dense)
+
+    broadcast = probe(cand, shards, dense)
+    monkeypatch.setattr(bloom, "BROADCAST_LIMIT", 0)
+    shuffled = probe(cand, shards, dense)
+    assert "BroadcastHashJoin" in broadcast._jdf.queryExecution().sparkPlan().toString()
+    assert "SortMergeJoin" in shuffled._jdf.queryExecution().sparkPlan().toString()
+    for probed in (broadcast, shuffled):
+        got = {r.url: r.maybe_seen for r in probed.collect()}
+        assert got == want
+    assert all(want[u] for u in member_urls)  # no false negatives
+    false_pos = sum(want[u] for u in cand_urls[len(member_urls):])
+    assert 0 < false_pos < 1000
+
+
+def test_bloom_spec_rejects_invalid_sizes():
+    """Sizes the packed-longs probe cannot serve fail at construction: a
+    shard must hold whole 64-bit words, and numpy's ``%`` only equals the
+    JVM's mask for a power of two."""
+    for bad in (
+        dict(bits_per_shard=3000),
+        dict(bits_per_shard=32),
+        dict(bits_per_shard=0),
+        dict(n_buckets=0),
+        dict(n_hashes=0),
+    ):
+        with pytest.raises(ValueError):
+            BloomSpec(**bad)
+    assert BloomSpec(bits_per_shard=64).shard_nbytes == 8

@@ -5,12 +5,19 @@ reference's status-reset re-claim resume
 
 from __future__ import annotations
 
+import glob
 import os
 import shutil
 
+import numpy as np
+import pyarrow as pa
+import pyarrow.parquet as pq
+
+from graven_spark.oracle import crawl_oracle
 from graven_spark.plans.driver import crawl
 from graven_spark.plans.frontier import CrawlConfig
 from graven_spark.operators.bloom import BloomSpec
+from graven_spark.sources.checkpoint import RoundStore
 
 from .conftest import pages_dict, robots_dict  # noqa: F401
 
@@ -58,3 +65,43 @@ def test_kill_and_resume_identical(spark, smoke_graph, tmp_path):
     # the junk dir was overwritten by the committed real round 3
     assert os.path.exists(os.path.join(junk, "_COMMIT"))
     shutil.rmtree(junk, ignore_errors=True)
+
+
+def _to_old_shard_layout(path: str) -> None:
+    """Rewrite a shard artifact as the pre-packed-longs layout: one
+    ``(bucket int, filter binary)`` row per bucket, the same bits as
+    little-endian bytes."""
+    t = pq.read_table(path)
+    filters = [np.asarray(w, dtype="<i8").tobytes() for w in t.column("longs").to_pylist()]
+    old = pa.table({"bucket": t.column("bucket"), "filter": pa.array(filters, pa.binary())})
+    shutil.rmtree(path)
+    os.makedirs(path)
+    pq.write_table(old, os.path.join(path, "part-00000.parquet"))
+
+
+def test_resume_over_old_format_shards(spark, smoke_graph, tmp_path):
+    """A state whose shards are in the old ``(bucket, filter)`` layout
+    resumes by rebuilding them from the seen set (and re-baselining in the
+    new layout) — same seen set as an uninterrupted (oracle) crawl."""
+    pages_path = str(tmp_path / "pages.parquet")
+    smoke_graph.pages.to_parquet(pages_path, index=False)
+    seeds = spark.createDataFrame(smoke_graph.seeds)
+    uninterrupted = crawl_oracle(
+        pages_dict(smoke_graph.pages),
+        list(smoke_graph.seeds.sort_values("seed_rank")["url"]),
+    )
+
+    part_dir = str(tmp_path / "part")
+    crawl(spark, pages_path, seeds, None, part_dir, _cfg(max_rounds=2))
+    old = sorted(glob.glob(os.path.join(part_dir, "round_*", "shards*")))
+    assert old
+    for path in old:
+        _to_old_shard_layout(path)
+    assert RoundStore(part_dir).read_shards(spark, 2) is None
+
+    resumed = crawl(spark, pages_path, seeds, None, part_dir, _cfg())
+    assert set(_collect(spark, resumed)[0]) == uninterrupted.seen
+    store = RoundStore(part_dir)
+    last_full = store.last_full_shards_round(resumed.final_round)
+    assert last_full > 2
+    assert "longs" in spark.read.parquet(os.path.join(part_dir, f"round_{last_full:06d}", "shards")).columns

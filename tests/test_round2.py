@@ -1,5 +1,5 @@
 """Round-2 semantics: retry/requeue (U4), domain lifecycle, budget-0
-politeness, Bloom probe auto-selection, Bloom-spec-mismatch resume,
+politeness, Bloom probe strategies, Bloom-spec-mismatch resume,
 crash-safe compaction, cycle fixtures, and the update (re-process) modes."""
 
 from __future__ import annotations
@@ -125,23 +125,26 @@ def test_select_round_bytes(spark):
         assert {k for k in a if k[0] == f"h{h}"} == want
 
 
-# -- Bloom probe auto-selection ----------------------------------------------
+# -- Bloom probe strategies ---------------------------------------------------
 
-def test_admit_new_probe_paths_agree(spark):
+def test_admit_new_probe_paths_agree(spark, monkeypatch):
+    """Admission through the broadcast and the shuffled probe admits exactly
+    the candidates not in seen."""
+    from graven_spark.operators import bloom
+
     cand = spark.createDataFrame(
         [(f"u{i}", i) for i in range(200)], "url string, priority long"
     )
     seen = spark.createDataFrame(
         [(0, f"u{i}") for i in range(0, 200, 2)], "url_hash long, url string"
     )
-    from graven_spark.operators.bloom import build_shards
-
     spec = _bloom(bits=1 << 12, buckets=4)
-    shards = build_shards(seen, spec)
-    via_broadcast = admit_new(cand, seen, shards, spec)  # default limit
-    via_cogrouped = admit_new(cand, seen, shards, spec, broadcast_limit=0)
+    shards = bloom.build_shards(seen, spec)
+    via_broadcast = admit_new(cand, seen, shards, spec)
+    monkeypatch.setattr(bloom, "BROADCAST_LIMIT", 0)
+    via_shuffled = admit_new(cand, seen, shards, spec)
     a = sorted(r.url for r in via_broadcast.collect())
-    b = sorted(r.url for r in via_cogrouped.collect())
+    b = sorted(r.url for r in via_shuffled.collect())
     assert a == b == [f"u{i}" for i in sorted(range(1, 200, 2), key=lambda x: f"u{x}")]
 
 

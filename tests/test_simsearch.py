@@ -100,3 +100,16 @@ def test_embed_near_dup_zero_norm_survives_ansi(spark):
     pairs = simsearch.embed_near_dup(vecs, threshold=0.9, dim=4, n_planes=2)
     got = {(r.id_a, r.id_b) for r in pairs.collect()}
     assert got == {(0, 1)}
+
+
+def test_cosine_topk_drops_null_scores(spark):
+    """Zero-norm vectors score NULL (try_divide). With more of them than
+    scored vectors and k above the scored count, the top-k must return only
+    the scored vectors, not pad the limit with NULL rows."""
+    rows = [(i, [0.0, 0.0, 0.0, 0.0]) for i in range(10, 16)] + [
+        (0, [1.0, 0.0, 0.0, 0.0]),
+        (1, [0.0, 1.0, 0.0, 0.0]),
+    ]
+    vecs = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+    got = simsearch.cosine_topk(vecs, [1.0, 0.0, 0.0, 0.0], k=5).collect()
+    assert [(r.vec_id, r.cos_sim) for r in got] == [(0, 1.0), (1, 0.0)]
