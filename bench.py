@@ -318,8 +318,8 @@ def run_queries(spark, sf_dir: str) -> dict[str, float]:
 
 
 def measure_dedup_extract(spark, n_pages: int = 60_000, dup_rate: float = 0.3) -> dict:
-    """Quantify --dedup-content at one duplicate rate: extract_text per URL
-    vs once per distinct body (``dedup_body_extract``).
+    """Quantify content-dedup extraction at one duplicate rate: extract_links
+    per URL vs once per distinct body (``dedup_body_extract``).
 
     Deterministic: page i's body is unique for i < n*(1-dup_rate), else one
     of 64 shared template bodies. Reported OUTSIDE the suite total so wall
@@ -327,15 +327,11 @@ def measure_dedup_extract(spark, n_pages: int = 60_000, dup_rate: float = 0.3) -
     """
     from pyspark.sql import functions as F
 
-    from graven_spark.functions.extract import (
-        dedup_body_extract,
-        extract_links,
-        extract_links_memo,
-    )
+    from graven_spark.functions.extract import dedup_body_extract, extract_links
 
-    # link-heavy dir-listing bodies: extract_links is the expensive UDF (the
-    # byte-exact reference regex runs a per-document finditer loop; it cannot
-    # vectorize, SURVEY §2.2 P1) — the path --dedup-content exists to thin
+    # link-heavy dir-listing bodies: extract_links is the expensive
+    # extractor (the byte-exact reference regex scan plus per-match group
+    # re-extraction) — the work per-body dedup exists to thin
     links = "\n".join(
         f'<a href="sub{j}/">sub{j}/</a>  <a href="lib-{j}.jar">lib-{j}.jar</a>'
         f"  2024-01-0{1 + j % 9} 12:3{j % 10}  {j * 137}"
@@ -358,15 +354,12 @@ def measure_dedup_extract(spark, n_pages: int = 60_000, dup_rate: float = 0.3) -
         .localCheckpoint()  # pin the corpus so both paths read identical input
     )
     out: dict = {"pages": n_pages, "dup_rate": dup_rate}
-    for tag in ("per_url", "memo", "shuffle_dedup"):
+    for tag in ("per_url", "shuffle_dedup"):
         best = None
         for _ in range(3):
             t0 = time.time()
             if tag == "per_url":
                 df = pages.select("url", extract_links(F.col("html")).alias("ext"))
-            elif tag == "memo":
-                df = pages.select(
-                    "url", extract_links_memo(F.col("html")).alias("ext"))
             else:
                 keyed = pages.withColumn("body_sha", F.sha2(F.col("html"), 256))
                 df = dedup_body_extract(keyed, extract_links, "ext")
@@ -374,17 +367,16 @@ def measure_dedup_extract(spark, n_pages: int = 60_000, dup_rate: float = 0.3) -
             dt = time.time() - t0
             best = dt if best is None or dt < best else best
         out[f"{tag}_sec"] = round(best, 2)
-    out["memo_speedup"] = round(out["per_url_sec"] / out["memo_sec"], 2)
     out["shuffle_speedup"] = round(out["per_url_sec"] / out["shuffle_dedup_sec"], 2)
     pages.unpersist()
     return out
 
 
 def dedup_extract_sweep(spark) -> list[dict]:
-    """--dedup-content is a measured tradeoff, not a free win: sweep the
+    """Per-body dedup is a measured tradeoff, not a free win: sweep the
     exact-duplicate rate to show the crossover (low duplication → the
-    sha+shuffle overhead loses; mirror-heavy → one UDF call per template
-    body wins)."""
+    sha+shuffle overhead loses; mirror-heavy → one extraction per template
+    body could win)."""
     return [measure_dedup_extract(spark, dup_rate=r) for r in (0.3, 0.9)]
 
 

@@ -9,9 +9,9 @@ Spark-first:
 - the URL-seen UNIQUE-key probe (reference: ``graven/db/graven_database.py:103-115``)
   becomes a partitioned-Bloom pre-filter + exact ``left_anti`` join;
 - the per-stage thread pools and claim-check scheduler become deterministic
-  round membership + per-host politeness token buckets inside
-  ``groupBy(host).applyInPandas``;
-- link/text extraction runs only in vectorized Arrow pandas UDFs.
+  round membership + per-host politeness token buckets computed by JVM
+  window functions over the frontier;
+- link/text extraction runs as JVM regex expressions (no Python worker).
 
 Nothing in this package is a port: the reference is a threaded row-at-a-time
 pipeline over MySQL; this engine is columnar, declarative, and

@@ -165,12 +165,6 @@ def main(argv: list[str] | None = None) -> int:
                             "many seconds, so a host's Crawl-delay d yields "
                             "a per-round budget max(1, floor(SECONDS/d)); "
                             "hosts without Crawl-delay keep --budget")
-        c.add_argument("--dedup-content", action="store_true",
-                       help="extract once per DISTINCT page body within each "
-                            "Arrow batch (batch-local memoization, zero "
-                            "shuffle) instead of once per URL; outputs are "
-                            "unchanged — byte-identical bodies extract "
-                            "identically")
         c.add_argument("--normalize-urls", action="store_true",
                        help="apply RFC 3986 syntactic normalization "
                             "(lowercase scheme/host, default-port strip, "
@@ -451,7 +445,6 @@ def main(argv: list[str] | None = None) -> int:
             jar_limit=args.jar_limit,
             delay_window_s=args.delay_window,
             normalize_urls=args.normalize_urls,
-            dedup_content=args.dedup_content,
             seen_buckets=args.seen_buckets,
             update_domains=update_domains,
             update_url_prefix=update_prefix,

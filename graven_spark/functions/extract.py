@@ -22,9 +22,9 @@ regex explicitly:
   White_Space set *plus* the FS/GS/RS/US controls 0x1c-0x1f, which Java's
   ``(?U)\\s`` (= \\p{White_Space}) excludes.
 
-Equivalence is pinned by tests/test_extract_udf.py (graph fixtures) and the
-differential fuzz in tests/test_extract_jvm_parity.py (adversarial
-whitespace/digit/control-char documents, both kernels row by row).
+Equivalence is pinned by tests/test_extract_jvm_parity.py: the graph
+fixtures plus a differential fuzz (adversarial whitespace/digit/control-char
+documents, both kernels row by row).
 
 ``extract_links`` reproduces ``finditer`` document order via
 ``regexp_extract_all(..., 0)`` (same non-overlapping leftmost-match walk),
@@ -164,17 +164,9 @@ def extract_links(html: Column) -> Column:
     )).otherwise(_let(links_all, finish))
 
 
-# --dedup-content twins. With the JVM extractors there is no Python batch to
-# memoize within — extraction is already cheaper than hashing bodies — so
-# the memo twins ARE the plain extractors (same symbol contract, same
-# results; the bench's dedup_extract micro now reports memo_speedup ≈ 1).
-extract_text_memo = extract_text
-extract_links_memo = extract_links
-
-
 def dedup_body_extract(keyed, udf, out_col, html_col="html", sha_col="body_sha"):
-    """Run an extraction function once per DISTINCT page body
-    (``--dedup-content``, the oracled shuffle variant).
+    """Run an extraction function once per DISTINCT page body (oracled by
+    the ``dedup_content_extract`` query).
 
     ``keyed`` must already carry ``sha_col`` (``sha2(html, 256)``). The bodies
     are grouped on the sha — ``first(html)`` gets a map-side partial combine,
@@ -182,7 +174,7 @@ def dedup_body_extract(keyed, udf, out_col, html_col="html", sha_col="body_sha")
     partition — the extractor runs over that (much smaller) distinct set, and
     the per-body outputs join back to the URL rows on the sha. Byte-identical
     bodies extract to byte-identical results, so outputs are unchanged vs the
-    per-URL path (equivalence-tested in tests/test_dedup_content.py).
+    per-URL path.
 
     The join-back carries NO broadcast hint on purpose: the distinct-body set
     is unbounded (a low-duplication corpus leaves it nearly the full input),
@@ -191,8 +183,8 @@ def dedup_body_extract(keyed, udf, out_col, html_col="html", sha_col="body_sha")
     broadcast at runtime exactly when the distinct side turns out small
     (mirror-heavy corpora), which is the only case the hint would have been
     right. With the JVM extractors the sha+shuffle overhead exceeds the saved
-    extraction time at every duplicate rate (bench `dedup_extract` micro) —
-    kept as the documented/oracled variant. Returns ``keyed`` minus
+    extraction time at every duplicate rate (bench `dedup_extract` micro),
+    which is why the crawl extracts per URL. Returns ``keyed`` minus
     ``html_col``/``sha_col`` plus ``out_col``."""
     per_body = (
         keyed.select(sha_col, html_col)

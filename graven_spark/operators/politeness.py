@@ -8,12 +8,10 @@ Selection is **threshold-based** so the full frontier never shuffles:
    per host) splits hosts into *within-budget* (everything selected, no
    further work) and *over-budget*;
 2. over-budget hosts' rows — and only those — are pruned by a salted
-   `(host, salt)` window to ≤ ``n_salts × budget`` rows per host (JVM-side;
-   the hot host spreads over ``n_salts`` slices), then an exact per-host
-   token bucket in ``groupBy(host).applyInPandas`` consumes tokens in
-   priority order and emits one row per host: the **selection threshold**
-   (the budget-th smallest priority). This is the one place per-host
-   sequential logic lives (SURVEY.md §2.10);
+   `(host, salt)` window to ≤ ``n_salts × budget`` rows per host (the hot
+   host spreads over ``n_salts`` slices), then a per-host ``row_number``
+   window over the pruned rows picks the **selection threshold** (the
+   budget-th smallest priority) — one JVM window, no Python worker;
 3. the frontier gets its ``selected`` flag from a broadcast join of the
    per-host thresholds — no full-row shuffle, no Python round-trip, no
    multi-million-row broadcast.
@@ -31,7 +29,6 @@ enter the frontier at all. The rules table is tiny → broadcast hash join.
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
@@ -97,7 +94,7 @@ def host_thresholds(
 ) -> DataFrame:
     """Per-host selection thresholds: (host, _thr). Hosts within budget get
     _thr = +inf; over-budget hosts get the budget-th smallest priority via
-    salted prune + exact token bucket.
+    salted prune + a per-host row_number window.
 
     Per-host budgets come from the robots frame's shape: a legacy
     ``crawl_delay_tokens`` column is taken as-is; an RFC table's
@@ -143,13 +140,28 @@ def host_thresholds(
         .select("host", "priority", "_budget")
     )
 
-    def kth(pdf: pd.DataFrame) -> pd.DataFrame:
-        budget = int(pdf["_budget"].iloc[0])
-        prios = pdf["priority"].nsmallest(budget)
-        return pd.DataFrame({"host": [pdf["host"].iloc[0]], "_thr": [int(prios.iloc[-1])]})
+    # an over-budget host keeps ≥ budget rows through the per-salt prune,
+    # so its row numbered _budget always exists
+    wh = Window.partitionBy("host").orderBy("priority")
+    return (
+        pruned.withColumn("_rn", F.row_number().over(wh))
+        .filter(F.col("_rn") == F.col("_budget"))
+        .select("host", F.col("priority").alias("_thr"))
+        .unionByName(none_hosts)
+    )
 
-    thr_big = pruned.groupBy("host").applyInPandas(kth, "host string, _thr long")
-    return thr_big.unionByName(none_hosts)
+
+def _flag_selected(frontier: DataFrame, thr: DataFrame) -> DataFrame:
+    """Frontier + ``selected`` = priority ≤ the host's ``_thr`` (broadcast
+    join; a host without a threshold row selects everything)."""
+    return (
+        frontier.join(F.broadcast(thr), "host", "left")
+        .withColumn(
+            "selected",
+            F.col("priority") <= F.coalesce(F.col("_thr"), F.lit(_MAX_PRIO)),
+        )
+        .select(*frontier.columns, "selected")
+    )
 
 
 def select_round_bytes(
@@ -167,14 +179,14 @@ def select_round_bytes(
 
     Scale shape mirrors :func:`select_round`: hosts whose TOTAL bytes fit
     the budget are selected by one map-side-combinable sum (no further
-    work); only over-budget hosts' rows reach the per-host sequential
-    cumsum in ``groupBy(host).applyInPandas``, which emits one threshold row
-    per host — the frontier gets its flag from a broadcast threshold join,
-    never a full-row shuffle. When ``min_row_bytes`` is known, over-budget
-    hosts' rows are first pruned by a salted window to
-    ``n_salts × (ceil(budget/min_row_bytes)+1)`` rows (a hot host's 10^7
-    rows never reach the Python worker)."""
-    cols = frontier.columns
+    work); only over-budget hosts' rows reach a per-host running-sum
+    window, which yields one threshold row per host (the largest admitted
+    priority) — the frontier gets its flag from a broadcast threshold join,
+    never a full-row shuffle. A NULL ``bytes_col`` row is admitted only as
+    its host's first row and adds nothing to the running total. When
+    ``min_row_bytes`` is known, over-budget hosts' rows are first pruned by
+    a salted window to ``n_salts × (ceil(budget/min_row_bytes)+1)`` rows (a
+    hot host's 10^7 rows never reach one window partition)."""
     sums = frontier.groupBy("host").agg(F.sum(F.col(bytes_col)).alias("_tot"))
     over = sums.filter(F.col("_tot") > byte_budget).select("host")
     big = frontier.select("host", "priority", bytes_col).join(F.broadcast(over), "host")
@@ -189,23 +201,19 @@ def select_round_bytes(
             F.col("_rn") <= cap
         ).drop("_rn")
 
-    def cum(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("priority")
-        ok = pdf[bytes_col].cumsum() <= byte_budget
-        ok.iloc[0] = True  # progress guarantee
-        return pd.DataFrame(
-            {"host": [pdf["host"].iloc[0]], "_thr": [int(pdf["priority"][ok].max())]}
-        )
-
-    thr = big.groupBy("host").applyInPandas(cum, "host string, _thr long")
-    return (
-        frontier.join(F.broadcast(thr), "host", "left")
-        .withColumn(
-            "selected",
-            F.col("priority") <= F.coalesce(F.col("_thr"), F.lit(_MAX_PRIO)),
-        )
-        .select(*cols, "selected")
+    w = Window.partitionBy("host").orderBy("priority").rowsBetween(
+        Window.unboundedPreceding, Window.currentRow
     )
+    admitted = (
+        F.col(bytes_col).isNotNull() & (F.sum(bytes_col).over(w) <= byte_budget)
+    ) | (F.row_number().over(w) == 1)
+    thr = (
+        big.withColumn("_ok", admitted)
+        .filter("_ok")
+        .groupBy("host")
+        .agg(F.max("priority").alias("_thr"))
+    )
+    return _flag_selected(frontier, thr)
 
 
 def select_round(
@@ -220,18 +228,10 @@ def select_round(
     Returns the frontier with a ``selected`` boolean column. Deterministic:
     per host, the ``budget`` smallest ``priority`` values win.
     """
-    cols = frontier.columns
     if robots is None and default_budget >= DEFAULT_BUDGET:
         # politeness disabled → selection is a no-op; don't pay anything.
         return frontier.withColumn("selected", F.lit(True))
 
     thr = host_thresholds(frontier, robots, default_budget, n_salts,
                           delay_window_s=delay_window_s)
-    return (
-        frontier.join(F.broadcast(thr), "host", "left")
-        .withColumn(
-            "selected",
-            F.col("priority") <= F.coalesce(F.col("_thr"), F.lit(_MAX_PRIO)),
-        )
-        .select(*cols, "selected")
-    )
+    return _flag_selected(frontier, thr)

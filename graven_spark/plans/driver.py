@@ -29,11 +29,18 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.canon import canonicalize, host_of
+from ..functions.canon import host_of
 from ..functions.extract import extract_text
 from ..operators.bloom import build_shards
 from ..sources.checkpoint import RoundMeta, RoundStore
-from .frontier import FRONTIER_COLS, CrawlConfig, _meta_bloom, init_run, run_round
+from .frontier import (
+    CrawlConfig,
+    _meta_bloom,
+    _seen_delta,
+    init_run,
+    run_round,
+    seed_frontier,
+)
 
 
 @dataclass
@@ -73,9 +80,9 @@ def _reopen_domains(
 ) -> RoundMeta:
     """One committed round transition k → k+1 that re-opens
     ``cfg.update_domains``: purged seen base + rebuilt shards + re-seeded
-    roots + IN_PROGRESS domain stamps. Re-seeding applies the same robots
-    gate and first-occurrence dedup as init_run — a blocked or duplicated
-    seed must not slip in through the update path.
+    roots + IN_PROGRESS domain stamps. Re-seeding takes the hosts' rows of
+    the same ``seed_frontier`` as init_run — a blocked, duplicated or
+    un-normalized seed must not slip in through the update path.
 
     The host set is a DATAFRAME join, never a collected list / IN-literal:
     ``update_domains == "*"`` (the ``-u`` flag) reads the recorded domains
@@ -83,49 +90,25 @@ def _reopen_domains(
     frame. Either way the seen purge is an anti-join — at a multi-million-
     host 100× crawl neither the driver memory nor the plan size grows with
     the host count."""
-    from ..operators.dedup import first_occurrence
-    from ..operators.politeness import gate_robots
-
     meta = store.meta(k)
     store.clean_uncommitted_above(k)
     if cfg.update_domains == "*":
         # every recorded host (reference cli_parser.py:66-71 -u semantics);
         # host cardinality ~ domains table — AQE picks the join strategy
         hosts_df = store.read_domains(spark, k).select("host")
-    elif isinstance(cfg.update_domains, str):
-        # any other bare string would iterate per CHARACTER below,
-        # silently matching no host and no-opping the update
-        raise ValueError(
-            f"update_domains must be a list of hosts or '*', got the "
-            f"string {cfg.update_domains!r}"
-        )
     else:
         hosts_df = F.broadcast(
             spark.createDataFrame(
                 [(h,) for h in cfg.update_domains], "host string"
             )
         )
-    reseed = (
-        seeds.select(
-            canonicalize(F.col("url")).alias("url"),
-            F.col("seed_rank").cast("long").alias("priority"),
-        )
-        .withColumn("host", host_of(F.col("url")))
-        .join(hosts_df, "host", "left_semi")
-        .withColumn("depth", F.lit(0))
-        .withColumn("parent_url", F.lit(None).cast("string"))
-        .withColumn("discovery_idx", F.col("priority").cast("int"))
-        .withColumn("retry_count", F.lit(0))
-    )
-    reseed = first_occurrence(gate_robots(reseed, robots)).select(*FRONTIER_COLS)
+    reseed = seed_frontier(seeds, robots, cfg).join(hosts_df, "host", "left_semi")
     purged = (
         store.read_seen(spark, k)
         .withColumn("host", host_of(F.col("url")))
         .join(hosts_df, "host", "left_anti")
         .drop("host")
     )
-    from .frontier import _seen_delta
-
     seen_next = purged.unionByName(_seen_delta(reseed))
     next_frontier = store.read_frontier(spark, k).unionByName(reseed)
     store.write(k + 1, "frontier", next_frontier)

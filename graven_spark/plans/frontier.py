@@ -2,10 +2,10 @@
 
     frontier_k → politeness select (token buckets) → global FIFO rank
       → fetch join against pages (broadcast the budget-bounded round set)
-      → extract links (Arrow UDF) → absolutize → batch dedup (first
+      → extract links (JVM regex) → absolutize → batch dedup (first
         occurrence) → robots gate → Bloom-prefiltered anti-join vs seen
       → split: dirs → frontier_{k+1} ∪ deferred ∪ retries ; leaves →
-        fetch join → extract text (Arrow UDF) → results
+        fetch join → extract text (JVM regex) → results
       → seen MERGE (append delta), lineage rows, shard update, domain
         lifecycle rows, atomic commit.
 
@@ -47,12 +47,7 @@ from pyspark.sql import functions as F
 
 from ..core import LISTING_TS_SPARK_FORMAT, PRIORITY_STRIDE, SEED_PRIORITY_BASE
 from ..functions.canon import canonicalize, host_of, url_hash
-from ..functions.extract import (
-    extract_links,
-    extract_links_memo,
-    extract_text,
-    extract_text_memo,
-)
+from ..functions.extract import extract_links, extract_text
 from ..operators.bloom import BloomSpec, build_shards, merge_shards
 from ..operators.dedup import admit_new, first_occurrence
 from ..operators.politeness import DEFAULT_BUDGET, gate_robots, select_round
@@ -70,7 +65,6 @@ class CrawlConfig:
     use_bloom: bool = True
     bloom: BloomSpec = field(default_factory=BloomSpec)
     default_budget: int = DEFAULT_BUDGET
-    n_salts: int = 8
     compact_every: int = 8
     max_rounds: int = 1000
     max_retries: int = 0  # U4: failed dir fetches requeue up to this many times
@@ -90,14 +84,6 @@ class CrawlConfig:
     # reference's concat absolutization does no normalization, so replay
     # parity requires the raw strings.
     normalize_urls: bool = False
-    # Content-dedup extraction flag. Since round 6 the extractors are pure
-    # JVM expressions (functions/extract.py) — cheaper than hashing bodies —
-    # so the batch-local memo twins are the plain extractors (identical
-    # results, flag is a no-op on the plan) and the global groupBy(body_sha)
-    # variant (functions/extract.dedup_body_extract) remains the documented/
-    # oracled alternative, still slower at every measured duplicate rate
-    # (bench `dedup_extract` micro).
-    dedup_content: bool = False
     seen_buckets: int = SEEN_BUCKETS_DEFAULT
     # Frontier-size-adaptive round batching (SURVEY.md §7.4.5): when the
     # frontier holds fewer than batch_threshold rows, up to max_batch_rounds
@@ -193,15 +179,13 @@ def validated_shards(
     return shards, False
 
 
-def init_run(
-    spark: SparkSession,
-    store: RoundStore,
-    seeds: DataFrame,
-    robots: DataFrame | None,
-    cfg: CrawlConfig,
-) -> RoundMeta:
-    """Seed admission → round 0 state (reference: crawler.py:189-203; seed
-    file order is the inter-root priority, cli_parser.py:246-259)."""
+def seed_frontier(
+    seeds: DataFrame, robots: DataFrame | None, cfg: CrawlConfig
+) -> DataFrame:
+    """Seed rows as depth-0 frontier rows: canonicalized (and normalized when
+    ``cfg.normalize_urls``), robots-gated, one row per url at its best seed
+    rank. Both the initial seeding and the ``--update-domain`` re-seed build
+    on this, so a re-opened host gets the same root rows it started with."""
     seed_url = canonicalize(F.col("url"))
     if cfg.normalize_urls:
         from ..functions.urlnorm import normalize_url
@@ -218,8 +202,19 @@ def init_run(
         .withColumn("discovery_idx", F.col("priority").cast("int"))
         .withColumn("retry_count", F.lit(0))
     )
-    cand = gate_robots(cand, robots)
-    frontier0 = first_occurrence(cand).select(*FRONTIER_COLS)
+    return first_occurrence(gate_robots(cand, robots)).select(*FRONTIER_COLS)
+
+
+def init_run(
+    spark: SparkSession,
+    store: RoundStore,
+    seeds: DataFrame,
+    robots: DataFrame | None,
+    cfg: CrawlConfig,
+) -> RoundMeta:
+    """Seed admission → round 0 state (reference: crawler.py:189-203; seed
+    file order is the inter-root priority, cli_parser.py:246-259)."""
+    frontier0 = seed_frontier(seeds, robots, cfg)
 
     store.write(0, "frontier", frontier0)
     frontier0 = store.read_frontier(spark, 0)
@@ -288,7 +283,7 @@ def _round_dataflow(
     tree). Mid-batch fault tolerance is not lost: a crashed batch recomputes
     from the committed round."""
     # -- politeness selection (W3/T3) --------------------------------------
-    flagged = select_round(frontier, robots, cfg.default_budget, cfg.n_salts,
+    flagged = select_round(frontier, robots, cfg.default_budget,
                            delay_window_s=cfg.delay_window_s)
     selected = flagged.filter(F.col("selected")).drop("selected")
     deferred = flagged.filter(~F.col("selected")).drop("selected").select(*FRONTIER_COLS)
@@ -324,16 +319,11 @@ def _round_dataflow(
         n_selected = cfg.jar_limit
 
     # -- fetch join (J2): huge pages scan ⋈ broadcast round set -------------
-    # --dedup-content swaps in the batch-memoized UDF twins: same plan, same
-    # outputs, each Arrow batch extracts once per distinct body (zero-shuffle;
-    # the global groupBy(body_sha) variant, dedup_body_extract, measured
-    # slower at every duplicate rate — bench `dedup_extract` micro).
-    x_links = extract_links_memo if cfg.dedup_content else extract_links
     pages = spark.read.parquet(pages_path).select("url", "html")
     fetched = (
         pages.join(F.broadcast(ranked), "url", "inner")
         .withColumn("page_bytes", F.length("html").cast("long"))
-        .withColumn("ext", x_links(F.col("html")))
+        .withColumn("ext", extract_links(F.col("html")))
         .drop("html")
         .persist()
     )
@@ -443,11 +433,8 @@ def _round_dataflow(
         F.lit(k).alias("round"),
         F.to_timestamp(F.col("ts_str"), LISTING_TS_SPARK_FORMAT).alias("publish_ts"),
     ]
-    # --dedup-content: batch-memoized twin (leaf corpora are where
-    # near-mirror duplication concentrates; same outputs, zero shuffle)
-    x_text = extract_text_memo if cfg.dedup_content else extract_text
     results = leaf_pages.withColumn(
-        "text", x_text(F.col("html"))
+        "text", extract_text(F.col("html"))
     ).select(*result_cols)
     errors_dead_leaf = (
         new_leaves.join(F.broadcast(leaf_pages.select("url")), "url", "left_anti")

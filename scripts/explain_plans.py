@@ -23,7 +23,7 @@ from graven_spark.functions.extract import extract_links
 from graven_spark.operators import bloom
 from graven_spark.operators.bloom import BloomSpec, build_shards
 from graven_spark.operators.dedup import admit_new, first_occurrence
-from graven_spark.operators.politeness import select_round
+from graven_spark.operators.politeness import select_round, select_round_bytes
 from graven_spark.operators.textops import exact_dedup
 from graven_spark.session import build_session
 from graven_spark.sources import synth
@@ -216,10 +216,25 @@ def main() -> None:
         F.lit(None).cast("string").alias("parent_url"),
         F.lit(0).alias("discovery_idx"), F.lit(0).alias("retry_count"),
     )
-    sel = select_round(frontier, robots)
+    sel_plan = formatted(select_round(frontier, robots))
+    bytes_plan = formatted(select_round_bytes(
+        frontier.withColumn("est_bytes", F.length("url").cast("long")), byte_budget=200
+    ))
+    for label, plan in (("select_round", sel_plan), ("select_round_bytes", bytes_plan)):
+        EXTRA_CHECKS.append((
+            f"politeness, {label}: per-host threshold from a JVM Window, zero "
+            f"{'/'.join(PYTHON_NODES)} nodes",
+            "Window" in plan and not any(n in plan for n in PYTHON_NODES),
+        ))
     sections.append((
         "Politeness selection (threshold broadcast join; no frontier shuffle)",
-        formatted(sel),
+        sel_plan,
+        ["BroadcastHashJoin"],
+    ))
+    sections.append((
+        "Byte-budget politeness selection (running-sum window; threshold "
+        "broadcast join)",
+        bytes_plan,
         ["BroadcastHashJoin"],
     ))
 
@@ -400,7 +415,7 @@ def main() -> None:
         and "body_sha" in dedup_plan,
     ))
     sections.append((
-        "Content-dedup extraction (--dedup-content: one UDF call per "
+        "Content-dedup extraction (dedup_body_extract: one extraction per "
         "distinct body, join back to URLs on body_sha)",
         dedup_plan,
         ["partial_first"],

@@ -1,47 +1,5 @@
-"""Content-dedup extraction (--dedup-content): outputs must be
-byte-identical to the per-URL extraction path, and the dedup plan must
-run the Arrow UDF above a body_sha aggregate (once per distinct body)."""
-
-import pytest
-
-from graven_spark.plans.driver import crawl
-from graven_spark.plans.frontier import CrawlConfig
-from graven_spark.sources.synth import generate_graph, mini_specs
-
-
-def _run(spark, tmp_path, name, cfg, graph):
-    pages_path = str(tmp_path / "pages.parquet")
-    if not (tmp_path / "pages.parquet").exists():
-        pages = graph.pages.copy()
-        pages["warc_ts"] = pages["warc_ts"].astype("datetime64[us]")
-        pages.to_parquet(pages_path, index=False)
-    seeds = spark.createDataFrame(graph.seeds)
-    return crawl(spark, pages_path, seeds, None, str(tmp_path / name), cfg)
-
-
-def _snapshot(spark, out):
-    seen = sorted(r.url for r in out.seen(spark).collect())
-    results = sorted(
-        (r.url, r.text, str(r.warc_ts), r.depth, r.round, str(r.publish_ts))
-        for r in out.results(spark).collect()
-    )
-    errors = sorted(
-        (r.round, r.url, r.stage, r.reason) for r in out.errors(spark).collect()
-    )
-    lineage = sorted(
-        (r.round, r.urls_in, r.urls_out, r.bytes_fetched)
-        for r in out.lineage(spark).collect()
-    )
-    return seen, results, errors, lineage
-
-
-def test_dedup_content_outputs_identical(spark, tmp_path):
-    # shared leaf corpus → many URLs with byte-identical bodies, the case
-    # dedup actually collapses; dir listings stay unique per URL
-    graph = generate_graph(mini_specs(), leaf_texts=["alpha body", "beta body"])
-    base = _run(spark, tmp_path, "off", CrawlConfig(), graph)
-    dedup = _run(spark, tmp_path, "on", CrawlConfig(dedup_content=True), graph)
-    assert _snapshot(spark, base) == _snapshot(spark, dedup)
+"""Content-dedup extraction (``dedup_body_extract``): the extraction must
+run above a body_sha aggregate (once per distinct body)."""
 
 
 def test_dedup_content_plan_shape(spark, tmp_path):

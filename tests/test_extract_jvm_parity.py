@@ -1,8 +1,10 @@
-"""Differential parity of the JVM extraction expressions vs the pure-Python
-kernels (core.extract_links_strict_py / core.extract_text_py) on adversarial
-documents: Python-vs-Java regex divergence classes (Unicode whitespace,
-0x1c-0x1f controls, Unicode digits, \\r / NEL line semantics for ``.``),
-strict-failure truncation, NULLs, and random fuzz documents."""
+"""Parity of the JVM extraction expressions vs the pure-Python kernels
+(core.extract_links_strict_py / core.extract_text_py), the byte-identical
+extraction invariant (BASELINE.json input_hint): on the synthetic graph's
+pages, and differentially on adversarial documents — Python-vs-Java regex
+divergence classes (Unicode whitespace, 0x1c-0x1f controls, Unicode digits,
+\\r / NEL line semantics for ``.``), strict-failure truncation, NULLs, and
+random fuzz documents."""
 
 from __future__ import annotations
 
@@ -114,3 +116,25 @@ def test_fuzz_structured_listings(spark, n):
         lines.append("</pre></html>")
         bodies.append("\n".join(lines).encode())
     _check(spark, bodies)
+
+
+def test_extract_text_udf_byte_identical(spark, smoke_graph):
+    df = spark.createDataFrame(smoke_graph.pages[["url", "html"]])
+    got = {r.url: r.t for r in df.select("url", extract_text(F.col("html")).alias("t")).collect()}
+    for r in smoke_graph.pages.itertuples():
+        assert got[r.url] == extract_text_py(r.html) == r.text
+
+
+def test_extract_links_udf_matches_python(spark, smoke_graph):
+    df = spark.createDataFrame(smoke_graph.pages[["url", "html"]])
+    got = {
+        r.url: (r.e.links, r.e.parse_failed)
+        for r in df.select("url", extract_links(F.col("html")).alias("e")).collect()
+    }
+    for r in smoke_graph.pages.itertuples():
+        links, failed = extract_links_strict_py(r.html)
+        g_links, g_failed = got[r.url]
+        assert g_failed == failed
+        assert [(l.href, l.is_dir, l.ts_str) for l in g_links] == [
+            (l.href, l.is_dir, l.ts_str) for l in links
+        ]

@@ -102,6 +102,12 @@ def test_select_round_bytes(spark):
         for i in range(20):
             rows.append((f"h{h}", h * 100 + i, 7 + (i * 13) % 40))
     rows.append(("big", 999, 10_000))  # oversized first row: progress row
+    # unknown sizes: a NULL row is admitted only as the host's first row and
+    # adds nothing to the running total; NULL rows below the threshold ride
+    # along (running totals -, 60, -, 90, 110 → admitted 700 as the first
+    # row, 701 and 703; threshold 703)
+    for i, b_ in enumerate([None, 60, None, 30, 20]):
+        rows.append(("nul", 700 + i, b_))
     fr = spark.createDataFrame(rows, "host string, priority long, est_bytes long")
 
     def sel_set(df):
@@ -111,6 +117,7 @@ def test_select_round_bytes(spark):
     b = sel_set(select_round_bytes(fr, byte_budget=100, min_row_bytes=7))
     assert a == b  # salted prune is a pure optimization
     assert ("big", 999) in a  # progress guarantee
+    assert {k for k in a if k[0] == "nul"} == {("nul", 700 + i) for i in range(4)}
     # per-host: admitted = maximal prefix with cumsum <= budget (min 1 row)
     for h in range(3):
         prefix = [(f"h{h}", h * 100 + i) for i in range(20)]
@@ -304,6 +311,31 @@ def test_update_domain_reopens_and_recrawls(spark, smoke_graph, tmp_path):
     assert sorted((r.url, r.text) for r in second.results(spark).collect()) == want_res
     doms = {r.host: r.status for r in second.domains(spark).collect()}
     assert doms["host0.example.com"] == "COMPLETED"
+
+
+def test_update_domain_reseeds_normalized_roots(spark, smoke_graph, tmp_path):
+    """--update-domain under --normalize-urls re-seeds the host's root in
+    the same normalized form the first crawl seeded and purged it in: an
+    un-normalized re-seed of a ``:443`` seed matches no host, and the purged
+    domain is never crawled again."""
+    pages_path = str(tmp_path / "pages.parquet")
+    smoke_graph.pages.to_parquet(pages_path, index=False)
+    raw = smoke_graph.seeds.copy()
+    raw["url"] = raw["url"].str.replace(".example.com/", ".example.com:443/")
+    seeds = spark.createDataFrame(raw)
+    d = str(tmp_path / "state")
+
+    first = crawl(spark, pages_path, seeds, None, d,
+                  CrawlConfig(bloom=_bloom(), normalize_urls=True, max_rounds=1))
+    roots = [r.url for r in first.frontier(spark, 0).collect()
+             if r.host == "host0.example.com"]
+    assert len(roots) == 1 and ":443" not in roots[0]
+
+    cfg2 = CrawlConfig(bloom=_bloom(), normalize_urls=True, max_rounds=2,
+                       update_domains=["host0.example.com"])
+    second = crawl(spark, pages_path, seeds, None, d, cfg2)
+    assert second.final_round == first.final_round + 1
+    assert roots[0] in {r.url for r in second.frontier(spark, second.final_round).collect()}
 
 
 def test_update_jar_restamps_results(spark, smoke_graph, tmp_path):
