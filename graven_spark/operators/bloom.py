@@ -112,10 +112,12 @@ def probe(
     track: list | None = None,
 ) -> DataFrame:
     """Adds ``maybe_seen`` to ``candidates``: a left join to ``shards`` on
-    ``bucket`` puts each candidate next to its shard's words, then
-    ``n_hashes`` element_at + shift + mask tests decide membership
-    (whole-stage codegen, no Python worker). The shards are broadcast when
-    the whole filter (``n_buckets × shard_nbytes``) fits
+    ``bucket`` puts each candidate next to its shard's words, then one SQL
+    expression — ``n_hashes`` element_at + shift + mask tests, parsed by a
+    single ``F.expr`` so building it costs one py4j call, not one per Column
+    operation — decides membership (whole-stage codegen, no Python worker;
+    a candidate whose bucket has no shard is not seen). The shards are
+    broadcast when the whole filter (``n_buckets × shard_nbytes``) fits
     ``BROADCAST_LIMIT``; above it the join shuffles on ``bucket``, so each
     shard moves once per bucket, not once per candidate.
 
@@ -127,18 +129,15 @@ def probe(
     if spec.n_buckets * spec.shard_nbytes <= BROADCAST_LIMIT:
         shards = F.broadcast(shards)
     joined = hashed.join(shards, "bucket", "left")
-    mask = F.lit(spec.bits_per_shard - 1).cast("long")
     # Reduce mod 2^m BEFORE the multiply-add: (h1 + k*h2) mod 2^m ==
     # ((h1 & mask) + k*(h2 & mask)) & mask, and the reduced operands can't
     # overflow a long — ANSI mode would abort on the raw uint64-wraparound
     # form. The odd bit of h2 survives the mask.
-    h1m = F.col("_h1").bitwiseAND(mask)
-    h2m = F.col("_h2").bitwiseOR(F.lit(1)).bitwiseAND(mask)
-    all_set = F.lit(True)
+    mask = f"{spec.bits_per_shard - 1}L"
+    tests = []
     for k in range(spec.n_hashes):
-        pos = (h1m + F.lit(k) * h2m).bitwiseAND(mask)
-        word = F.element_at(F.col("longs"), (F.shiftright(pos, 6) + 1).cast("int"))
-        bit = F.call_function("shiftright", word, pos.bitwiseAND(F.lit(63)).cast("int"))
-        all_set = all_set & (bit.bitwiseAND(F.lit(1)) == 1)
-    maybe = F.when(F.col("longs").isNull(), F.lit(False)).otherwise(all_set)
+        pos = f"(((_h1 & {mask}) + {k}L * ((_h2 | 1L) & {mask})) & {mask})"
+        word = f"element_at(longs, CAST(shiftright({pos}, 6) + 1 AS INT))"
+        tests.append(f"((shiftright({word}, CAST({pos} & 63L AS INT)) & 1L) = 1L)")
+    maybe = F.expr(f"CASE WHEN longs IS NULL THEN false ELSE {' AND '.join(tests)} END")
     return joined.withColumn("maybe_seen", maybe).drop("_h1", "_h2", "bucket", "longs")

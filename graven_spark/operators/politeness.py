@@ -5,8 +5,10 @@ reference analog: global 100-request cap,
 Selection is **threshold-based** so the full frontier never shuffles:
 
 1. ``groupBy(host).count()`` (map-side combined — tiny shuffle of one row
-   per host) splits hosts into *within-budget* (everything selected, no
-   further work) and *over-budget*;
+   per host), with the per-host budgets broadcast-joined onto its one row
+   per host (the only read of the robots frame), splits hosts into
+   *within-budget* (everything selected, no further work) and
+   *over-budget* — a budget ≤ 0 host always lands here;
 2. over-budget hosts' rows — and only those — are pruned by a salted
    `(host, salt)` window to ≤ ``n_salts × budget`` rows per host (the hot
    host spreads over ``n_salts`` slices), then a per-host ``row_number``
@@ -93,8 +95,9 @@ def host_thresholds(
     delay_window_s: float | None = None,
 ) -> DataFrame:
     """Per-host selection thresholds: (host, _thr). Hosts within budget get
-    _thr = +inf; over-budget hosts get the budget-th smallest priority via
-    salted prune + a per-host row_number window.
+    no row (select everything); over-budget hosts get the budget-th smallest
+    priority via salted prune + a per-host row_number window, and budget ≤ 0
+    hosts ``_MIN_PRIO`` (select nothing).
 
     Per-host budgets come from the robots frame's shape: a legacy
     ``crawl_delay_tokens`` column is taken as-is; an RFC table's
@@ -112,42 +115,40 @@ def host_thresholds(
         and "crawl_delay" in robots.columns
     ):
         budgets = rfc_delay_budgets(robots, delay_window_s)
+    # budgets join the one-row-per-host counts, not the frontier: that join
+    # is the only read of robots.
+    counts = frontier.groupBy("host").agg(F.count("*").alias("_n"))
+    budget = F.lit(default_budget)
     if budgets is not None:
-        hosted = frontier.join(F.broadcast(budgets), "host", "left").withColumn(
-            "_budget", F.coalesce("_budget", F.lit(default_budget))
-        )
-    else:
-        hosted = frontier.withColumn("_budget", F.lit(default_budget))
-
-    counts = hosted.groupBy("host", "_budget").agg(F.count("*").alias("_n"))
-    # budget ≤ 0 hosts select NOTHING (threshold below every real priority) —
-    # they must not fall through to the salted prune, whose empty result
-    # would coalesce to +inf and invert budget 0 into "unlimited".
-    none_hosts = counts.filter(F.col("_budget") <= 0).select(
-        "host", F.lit(_MIN_PRIO).alias("_thr")
+        counts = counts.join(F.broadcast(budgets), "host", "left")
+        budget = F.coalesce(F.col("_budget"), budget)
+    # A budget ≤ 0 host is over budget too (n ≥ 1): it keeps one row through
+    # the prune and gets a threshold below every real priority — it must not
+    # drop out of ``over``, whose missing row would mean "select everything".
+    over = (
+        counts.withColumn("_budget", budget)
+        .filter(F.col("_n") > F.col("_budget"))
+        .select("host", "_budget", F.greatest(F.col("_budget"), F.lit(1)).alias("_keep"))
     )
-    over = counts.filter(
-        (F.col("_n") > F.col("_budget")) & (F.col("_budget") > 0)
-    ).select("host", "_budget")
 
     # Only over-budget hosts' rows shuffle; everyone else is done already.
-    big = hosted.select("host", "url", "priority").join(F.broadcast(over), "host")
+    big = frontier.select("host", "url", "priority").join(F.broadcast(over), "host")
     salt = F.pmod(F.xxhash64("url"), F.lit(n_salts))
     w = Window.partitionBy(F.col("host"), salt).orderBy("priority")
     pruned = (
         big.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") <= F.col("_budget"))
-        .select("host", "priority", "_budget")
+        .filter(F.col("_rn") <= F.col("_keep"))
+        .select("host", "priority", "_budget", "_keep")
     )
 
-    # an over-budget host keeps ≥ budget rows through the per-salt prune,
-    # so its row numbered _budget always exists
+    # an over-budget host keeps ≥ _keep rows through the per-salt prune,
+    # so its row numbered _keep always exists
     wh = Window.partitionBy("host").orderBy("priority")
     return (
         pruned.withColumn("_rn", F.row_number().over(wh))
-        .filter(F.col("_rn") == F.col("_budget"))
-        .select("host", F.col("priority").alias("_thr"))
-        .unionByName(none_hosts)
+        .filter(F.col("_rn") == F.col("_keep"))
+        .select("host", F.when(F.col("_budget") > 0, F.col("priority"))
+                .otherwise(F.lit(_MIN_PRIO)).alias("_thr"))
     )
 
 

@@ -14,14 +14,16 @@ the key's own value distribution analytically:
    projection, order-monotonic, no sampling shuffle (crawl priorities are
    either uniform 64-bit url hashes or dense ``rank*STRIDE + idx`` ints, so
    equal-width buckets are balanced either way);
-3. per-bucket counts (map-side combinable, ≤ nb rows collected) → driver
-   computes cumulative offsets;
+3. per-bucket counts (map-side combinable, ≤ nb rows) → an exclusive
+   running sum over ``Window.orderBy(bucket)`` gives each bucket's offset —
+   a single-partition window, but over ≤ nb rows, never the data;
 4. ``row_number() OVER (PARTITION BY bucket ORDER BY key) + offset[bucket]``
-   — one hash shuffle on the bucket id, fully whole-stage-codegen JVM work;
-   no Python/Arrow round trip anywhere.
+   — the offsets broadcast-join in, and one hash shuffle on the bucket id
+   is the only data movement; fully whole-stage-codegen JVM work, no
+   Python/Arrow round trip anywhere.
 
-Every stage is parallel and the only data collected is one stats row plus
-one long per bucket, so the same plan holds on 1000 executors.
+Every stage is parallel and the only data collected is one stats row, so
+the same plan holds on 1000 executors.
 """
 
 from __future__ import annotations
@@ -42,10 +44,11 @@ def with_global_rank(
 ) -> tuple[DataFrame, int, DataFrame]:
     """Attach a dense 0-based global rank by ``order_col`` (numeric, must be
     unique). Returns ``(ranked_df, total_rows, pinned)`` — the count falls
-    out of the bucket offsets for free; ``pinned`` is the persisted input
-    handle the CALLER must ``unpersist()`` after its actions complete (the
-    stats pass, the counts pass and the final rank job would each re-execute
-    the upstream plan otherwise, but the cache must not leak round-over-round).
+    out of the stats row for free; ``pinned`` is the persisted input handle
+    the CALLER must ``unpersist()`` after its actions complete (the stats
+    pass and the final rank job — whose offsets side reads the input again —
+    would each re-execute the upstream plan otherwise, but the cache must
+    not leak round-over-round).
 
     ``size_hint``: the caller's known upper bound on ``df``'s row count (the
     crawl loop tracks the frontier count across rounds). Below
@@ -84,23 +87,16 @@ def with_global_rank(
     ).cast("int")
     bdf = df.withColumn("_rb", bucket)
 
-    counts = {r["_rb"]: r["count"] for r in bdf.groupBy("_rb").count().collect()}
-    offsets, acc = [], 0
-    for b in range(nb):
-        offsets.append(acc)
-        acc += counts.get(b, 0)
-    assert acc == total
-
-    # Offsets ride in as a broadcast relation, not an nb-literal array in the
-    # plan (nb = 4×parallelism ⇒ thousands of plan literals on a cluster).
-    # The broadcast join adds no shuffle; the window's hash shuffle on _rb is
-    # still the only data movement.
-    offsets_df = spark.createDataFrame(
-        [(b, off) for b, off in enumerate(offsets)], "_rb int, _off long"
+    # Offsets ride in as a broadcast relation built on the JVM, not an
+    # nb-literal array in the plan (nb = 4×parallelism ⇒ thousands of plan
+    # literals on a cluster) nor a driver round trip.
+    counts = bdf.groupBy("_rb").agg(F.count("*").alias("_n"))
+    offsets = counts.select(
+        "_rb", (F.sum("_n").over(Window.orderBy("_rb")) - F.col("_n")).alias("_off")
     )
     w = Window.partitionBy("_rb").orderBy(order_col)
     ranked = (
-        bdf.join(F.broadcast(offsets_df), "_rb")
+        bdf.join(F.broadcast(offsets), "_rb")
         .withColumn(
             rank_col,
             F.row_number().over(w).cast("long") - 1 + F.col("_off"),

@@ -47,12 +47,17 @@ def _marker(ln: str) -> int | None:
     return min(cands) if cands else None
 
 
+def _tree(plan: str) -> str:
+    """The formatted plan's node tree, without the per-node details."""
+    return plan.split("\n\n(1)")[0]
+
+
 def without_shard_side(plan: str) -> list[str]:
     """The plan's tree lines minus the Bloom probe join's shard side (the
     right child of the ``LeftOuter`` join on bucket). Building or merging
     shards runs pandas UDFs and a bucket shuffle by design; the checks
     below are about the candidate/seen path."""
-    tree = plan.split("\n\n(1)")[0].splitlines()
+    tree = _tree(plan).splitlines()
     j = next(i for i, ln in enumerate(tree) if "LeftOuter" in ln)
     child = _marker(tree[j]) + 3
     r = next(i for i in range(j + 1, len(tree))
@@ -104,7 +109,7 @@ def main() -> None:
 
     # 3. seen admission: bloom probe + single anti-join
     cand = (
-        spark.createDataFrame([(u,) for u in graph.pages.url.head(50)], "url string")
+        spark.createDataFrame(graph.pages[["url"]].head(50))
         .withColumn("priority", url_hash(F.col("url")))
         .withColumn("host", host_of(F.col("url")))
     )
@@ -170,7 +175,7 @@ def main() -> None:
     # first-occurrence SortAggregate then REUSE (zero exchange AND zero sort
     # on the bucketed seen base side, no candidate re-shuffle, no second
     # sort for the aggregate), and (2) the small post-compaction delta side.
-    tree = eng_plan.split("\n\n(1)")[0].splitlines()
+    tree = _tree(eng_plan).splitlines()
     scan_idx = next(
         i for i, ln in enumerate(tree) if "Scan parquet spark_catalog" in ln
     )
@@ -206,9 +211,13 @@ def main() -> None:
     ))
     EXTRA_CHECKS.extend(extra)
 
-    # 4. politeness threshold selection
+    # 4. politeness threshold selection. The robots frame comes from a
+    # Python list, so it plans as a `Scan ExistingRDD` (every read forks
+    # Python workers); the frontier comes from pandas (a LocalTableScan), so
+    # each ExistingRDD scan in the plan is one read of robots.
     robots = spark.createDataFrame(
-        graph.robots,
+        [(r.host, list(r.disallow_prefixes), int(r.crawl_delay_tokens))
+         for r in graph.robots.itertuples()],
         schema="host string, disallow_prefixes array<string>, crawl_delay_tokens int",
     )
     frontier = cand.select(
@@ -219,6 +228,12 @@ def main() -> None:
     sel_plan = formatted(select_round(frontier, robots))
     bytes_plan = formatted(select_round_bytes(
         frontier.withColumn("est_bytes", F.length("url").cast("long")), byte_budget=200
+    ))
+    robots_reads = _tree(sel_plan).count("Scan ExistingRDD")
+    EXTRA_CHECKS.append((
+        f"politeness, select_round: robots read once (exactly 1 `Scan ExistingRDD`); "
+        f"got {robots_reads}",
+        robots_reads == 1,
     ))
     for label, plan in (("select_round", sel_plan), ("select_round_bytes", bytes_plan)):
         EXTRA_CHECKS.append((
@@ -236,6 +251,27 @@ def main() -> None:
         "broadcast join)",
         bytes_plan,
         ["BroadcastHashJoin"],
+    ))
+
+    # 4b. analytic global rank: the per-bucket offsets are a JVM running
+    # sum, broadcast-joined — no driver round trip, no Python-made relation
+    from graven_spark.operators.ranking import with_global_rank
+
+    keys = spark.range(20000).select(F.xxhash64("id").alias("priority"))
+    ranked, _, pinned = with_global_rank(keys, num_partitions=16)
+    rank_plan = formatted(ranked)
+    pinned.unpersist()
+    found = [n for n in ("Scan ExistingRDD",) + PYTHON_NODES if n in rank_plan]
+    EXTRA_CHECKS.append((
+        f"analytic with_global_rank: zero `Scan ExistingRDD` and zero "
+        f"{'/'.join(PYTHON_NODES)} nodes; found {found or 'none'}",
+        not found,
+    ))
+    sections.append((
+        "Analytic global rank (per-bucket counts → running-sum offsets, "
+        "broadcast; per-bucket row_number)",
+        rank_plan,
+        ["Window", "BroadcastHashJoin"],
     ))
 
     # 5. training op: exact dedup (map-side combinable hash aggregate)
@@ -312,7 +348,7 @@ def main() -> None:
     nvd_plan = formatted(nvd_batch_lookup(ids, spark.table("plans_cve_ref")))
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev_thresh)
     # walk the ref scan's ANCESTOR chain up to the join: no Exchange allowed
-    ntree = nvd_plan.split("\n\n(1)")[0].splitlines()
+    ntree = _tree(nvd_plan).splitlines()
     ref_idx = next(i for i, ln in enumerate(ntree) if "plans_cve_ref" in ln)
     cur = _marker(ntree[ref_idx])
     ref_side_clean = True

@@ -101,6 +101,32 @@ def test_select_round_salt_count_invariant(spark):
     assert len(base) == 12  # mega budget 7 + 5 singleton hosts
 
 
+def test_select_round_mixed_budgets_read_robots_once(spark):
+    """One host per budget case — 0, NULL, no robots row, equal to its row
+    count, below it — selects what a plain-Python per-host sort selects, and
+    the plan scans the robots frame once (budgets join the per-host counts,
+    not the frontier)."""
+    n_rows = {"zero": 3, "null": 5, "none": 4, "equal": 4, "below": 6}
+    budgets = {"zero": 0, "null": None, "equal": 4, "below": 2}
+    default = 3
+    rows = [(f"https://{h}/p{i}/", h, 0, (i * 7919) % 101 - 50, None, 0, 0)
+            for h, n in n_rows.items() for i in range(n)]
+    robots = spark.createDataFrame(
+        [(h, [], b) for h, b in budgets.items()],
+        "host string, disallow_prefixes array<string>, crawl_delay_tokens int",
+    )
+    flagged = select_round(_frontier(spark, rows), robots, default_budget=default, n_salts=2)
+    want = set()
+    for h in n_rows:
+        budget = default if budgets.get(h) is None else budgets[h]
+        host_rows = sorted((r for r in rows if r[1] == h), key=lambda r: r[3])
+        want |= {r[0] for r in host_rows[:max(budget, 0)]}
+    assert {r.url for r in flagged.filter("selected").collect()} == want
+    plan = flagged._jdf.queryExecution().sparkPlan().toString()
+    robots_scans = [ln for ln in plan.splitlines() if "ExistingRDD" in ln and "crawl_delay_tokens" in ln]
+    assert len(robots_scans) == 1, plan
+
+
 def test_gate_robots_prefix(spark):
     cand = spark.createDataFrame(
         [("https://h1/block/a/", "h1"), ("https://h1/ok/", "h1"), ("https://h9/x/", "h9")],
@@ -123,6 +149,20 @@ def test_global_rank_dense_and_ordered(spark):
     pinned.unpersist()
 
 
+def test_global_rank_sparse_buckets(spark):
+    """Analytic path with most of 64 buckets empty (keys at the extremes of
+    the long range) and with a single row: ranks stay dense and equal each
+    key's sort position."""
+    keys = [-(1 << 62), -(1 << 62) + 1, -1, 0, 1, 2, 1000, (1 << 62) - 1, 1 << 62, 7]
+    df = spark.createDataFrame([(k,) for k in keys], "priority long")
+    for d, want in ((df, sorted(keys)), (df.filter(F.col("priority") == 1), [1])):
+        ranked, n, pinned = with_global_rank(d, "priority", "rnk", num_partitions=64)
+        rows = sorted((r.rnk, r.priority) for r in ranked.collect())
+        assert n == len(want)
+        assert rows == list(enumerate(want))
+        pinned.unpersist()
+
+
 def _probe_reference(spark, members: list[str], cand: list[str], spec: BloomSpec) -> dict:
     """Driver-side oracle: a candidate is maybe-seen iff every one of its
     numpy ``_bit_positions`` was set by some member of its bucket — plain
@@ -143,26 +183,33 @@ def _probe_reference(spark, members: list[str], cand: list[str], spec: BloomSpec
 def test_probe_strategies_match_numpy_reference(spark, monkeypatch):
     """The broadcast and the shuffled probe must agree bit for bit with the
     numpy reference on every url — members AND non-members, so false
-    positives must match too (the dense spec makes ~8% of them)."""
+    positives must match too (the dense spec makes ~8% of them). The edge
+    specs — one word and one hash per shard, and 2^24-bit shards — run
+    under ANSI mode, which aborts on any long overflow in the bit test."""
+    assert spark.conf.get("spark.sql.ansi.enabled") == "true"
     dense = BloomSpec(n_buckets=4, bits_per_shard=1 << 9, n_hashes=3)
     member_urls = [f"m{i}" for i in range(400)]
     cand_urls = member_urls + [f"x{i}" for i in range(2000)]
     members = spark.createDataFrame([(u,) for u in member_urls], "url string")
     cand = spark.createDataFrame([(u,) for u in cand_urls], "url string")
-    shards = build_shards(members, dense)
-    want = _probe_reference(spark, member_urls, cand_urls, dense)
-
-    broadcast = probe(cand, shards, dense)
-    monkeypatch.setattr(bloom, "BROADCAST_LIMIT", 0)
-    shuffled = probe(cand, shards, dense)
-    assert "BroadcastHashJoin" in broadcast._jdf.queryExecution().sparkPlan().toString()
-    assert "SortMergeJoin" in shuffled._jdf.queryExecution().sparkPlan().toString()
-    for probed in (broadcast, shuffled):
-        got = {r.url: r.maybe_seen for r in probed.collect()}
-        assert got == want
-    assert all(want[u] for u in member_urls)  # no false negatives
-    false_pos = sum(want[u] for u in cand_urls[len(member_urls):])
-    assert 0 < false_pos < 1000
+    limit = bloom.BROADCAST_LIMIT
+    for spec in (dense, BloomSpec(bits_per_shard=64, n_hashes=1),
+                 BloomSpec(n_buckets=2, bits_per_shard=1 << 24)):
+        shards = build_shards(members, spec)
+        want = _probe_reference(spark, member_urls, cand_urls, spec)
+        monkeypatch.setattr(bloom, "BROADCAST_LIMIT", limit)
+        broadcast = probe(cand, shards, spec)
+        monkeypatch.setattr(bloom, "BROADCAST_LIMIT", 0)
+        shuffled = probe(cand, shards, spec)
+        assert "BroadcastHashJoin" in broadcast._jdf.queryExecution().sparkPlan().toString()
+        assert "SortMergeJoin" in shuffled._jdf.queryExecution().sparkPlan().toString()
+        for probed in (broadcast, shuffled):
+            got = {r.url: r.maybe_seen for r in probed.collect()}
+            assert got == want
+        assert all(want[u] for u in member_urls)  # no false negatives
+        if spec == dense:
+            false_pos = sum(want[u] for u in cand_urls[len(member_urls):])
+            assert 0 < false_pos < 1000
 
 
 def test_bloom_spec_rejects_invalid_sizes():
