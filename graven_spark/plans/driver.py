@@ -24,7 +24,7 @@ Re-process modes (applied as one extra committed round transition on resume):
 
 from __future__ import annotations
 
-from dataclasses import dataclass
+from dataclasses import dataclass, replace
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -35,9 +35,9 @@ from ..operators.bloom import build_shards
 from ..sources.checkpoint import RoundMeta, RoundStore
 from .frontier import (
     CrawlConfig,
-    _meta_bloom,
     _seen_delta,
     init_run,
+    round_meta,
     run_round,
     seed_frontier,
 )
@@ -111,11 +111,8 @@ def _reopen_domains(
     )
     seen_next = purged.unionByName(_seen_delta(reseed))
     next_frontier = store.read_frontier(spark, k).unionByName(reseed)
-    store.write(k + 1, "frontier", next_frontier)
     store.mark_updated()  # the re-crawl re-emits result rows for purged urls
     store.write_seen_full(spark, k + 1, seen_next)
-    if cfg.use_bloom:
-        store.write(k + 1, "shards", build_shards(store.read_seen(spark, k + 1), cfg.bloom))
     # Stamp IN_PROGRESS for every host that actually got frontier rows at
     # k+1 — full-outer against the prior table so an update host with a seed
     # but NO prior domain row gets its IN_PROGRESS/start_round=k+1 row
@@ -130,16 +127,13 @@ def _reopen_domains(
         F.when(is_re, F.lit(None).cast("int"))
         .otherwise(F.col("end_round")).alias("end_round"),
     )
-    store.write(k + 1, "domains", domains)
-    next_meta = RoundMeta(
-        round=k + 1,
-        priority_base=meta.priority_base,
-        frontier_count=next_frontier.count(),
-        seen_buckets=cfg.seen_buckets,
-        seen_bucketed=True,  # write_seen_full ran pre-commit
-        **_meta_bloom(cfg),
+    artifacts = {"frontier": next_frontier, "domains": domains}
+    if cfg.use_bloom:
+        artifacts["shards"] = build_shards(store.read_seen(spark, k + 1), cfg.bloom)
+    next_meta = round_meta(  # write_seen_full ran pre-commit
+        cfg, k + 1, meta.priority_base, next_frontier.count(), seen_bucketed=True
     )
-    store.commit(k + 1, next_meta)
+    store.commit(k + 1, next_meta, artifacts)
     return next_meta
 
 
@@ -153,7 +147,10 @@ def _update_urls(
     """One committed round transition k → k+1 re-processing every recorded
     result url under ``cfg.update_url_prefix`` (re-fetch + re-extract; the
     url's depth/publish_ts are carried from the prior row, round is
-    re-stamped — read_results keeps the newest row per url)."""
+    re-stamped — read_results keeps the newest row per url). Seen and the
+    Bloom shards are untouched: round k+1 carries round k's meta forward,
+    so the next round validates the shards against the spec that built
+    them."""
     meta = store.meta(k)
     store.clean_uncommitted_above(k)
     targets = (
@@ -187,23 +184,14 @@ def _update_urls(
             F.lit(cfg.update_url_prefix).alias("prefix"),
         )).alias("details"),
     )
-    frontier = store.read_frontier(spark, k)
-    store.write(k + 1, "frontier", frontier)
-    store.write(k + 1, "results_delta", refreshed)
-    store.write(k + 1, "errors_delta", refetch_failed)
     store.mark_updated()
-    store.write(k + 1, "domains", store.read_domains(spark, k))
-    shards = store.read_shards(spark, k)
-    if shards is not None:
-        store.write(k + 1, "shards", shards)
-    next_meta = RoundMeta(
-        round=k + 1,
-        priority_base=meta.priority_base,
-        frontier_count=meta.frontier_count,
-        seen_buckets=cfg.seen_buckets,
-        **_meta_bloom(cfg),
-    )
-    store.commit(k + 1, next_meta)
+    next_meta = replace(meta, round=k + 1, seen_bucketed=False)
+    store.commit(k + 1, next_meta, {
+        "frontier": store.read_frontier(spark, k),
+        "results_delta": refreshed,
+        "errors_delta": refetch_failed,
+        "domains": store.read_domains(spark, k),
+    })
     return next_meta
 
 

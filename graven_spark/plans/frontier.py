@@ -109,13 +109,26 @@ def _seen_delta(new_urls: DataFrame) -> DataFrame:
     )
 
 
-def _meta_bloom(cfg: CrawlConfig) -> dict:
-    return {
-        "bloom_on": cfg.use_bloom,
-        "bloom_buckets": cfg.bloom.n_buckets if cfg.use_bloom else 0,
-        "bloom_bits": cfg.bloom.bits_per_shard if cfg.use_bloom else 0,
-        "bloom_hashes": cfg.bloom.n_hashes if cfg.use_bloom else 0,
-    }
+def round_meta(
+    cfg: CrawlConfig, k: int, priority_base: int, frontier_count: int,
+    seen_bucketed: bool = False,
+) -> RoundMeta:
+    """Meta for a committed round whose shard chain (if any) was built with
+    ``cfg.bloom`` — every transition that writes shards builds them from the
+    config. A transition that writes none carries its predecessor's meta
+    forward instead, so the stamp always describes the chain on disk."""
+    on = cfg.use_bloom
+    return RoundMeta(
+        round=k,
+        priority_base=priority_base,
+        frontier_count=frontier_count,
+        seen_buckets=cfg.seen_buckets,
+        seen_bucketed=seen_bucketed,
+        bloom_on=on,
+        bloom_buckets=cfg.bloom.n_buckets if on else 0,
+        bloom_bits=cfg.bloom.bits_per_shard if on else 0,
+        bloom_hashes=cfg.bloom.n_hashes if on else 0,
+    )
 
 
 def _domains_step(
@@ -218,27 +231,19 @@ def init_run(
 
     store.write(0, "frontier", frontier0)
     frontier0 = store.read_frontier(spark, 0)
-    store.write(0, "seen_delta", _seen_delta(frontier0))
-    store.write(
-        0,
-        "domains",
-        frontier0.select("host").distinct().select(
+    artifacts = {
+        "seen_delta": _seen_delta(frontier0),
+        "domains": frontier0.select("host").distinct().select(
             "host",
             F.lit("IN_PROGRESS").alias("status"),
             F.lit(0).alias("start_round"),
             F.lit(None).cast("int").alias("end_round"),
         ),
-    )
+    }
     if cfg.use_bloom:
-        store.write(0, "shards", build_shards(frontier0, cfg.bloom))
-    meta = RoundMeta(
-        round=0,
-        priority_base=SEED_PRIORITY_BASE,
-        frontier_count=frontier0.count(),
-        seen_buckets=cfg.seen_buckets,
-        **_meta_bloom(cfg),
-    )
-    store.commit(0, meta)
+        artifacts["shards"] = build_shards(frontier0, cfg.bloom)
+    meta = round_meta(cfg, 0, SEED_PRIORITY_BASE, frontier0.count())
+    store.commit(0, meta, artifacts)
     return meta
 
 
@@ -575,59 +580,28 @@ def run_round(
         errors = errors.unionByName(f.errors)
         lineage = lineage.unionByName(f.lineage)
 
-    # The commit's artifacts are independent of each other and all derive
-    # from persisted/checkpointed frames — write them CONCURRENTLY (guide
-    # §2.6: actions are only sequential because the driver calls them
-    # sequentially; a small pool lets each write's tail back-fill the idle
-    # cores of the others). Profiled round 5: the seven sequential writes
-    # were ~half of full_crawl's wall time, almost all of it per-job fixed
-    # latency on KB-scale frames. Any failure propagates before commit, so
-    # the crash-safety contract (commit marker last) is unchanged.
-    writes: list[tuple[str, DataFrame]] = [
-        ("frontier", flows[-1].next_frontier),
-        ("seen_delta", _seen_delta(all_new)),
-        ("results_delta", results),
-        ("errors_delta", errors),
-        ("lineage", lineage),
-        ("domains", domains),
-    ]
+    # the artifacts are independent and all derive from persisted or
+    # checkpointed frames, so the commit writes them concurrently
+    artifacts = {
+        "frontier": flows[-1].next_frontier,
+        "seen_delta": _seen_delta(all_new),
+        "results_delta": results,
+        "errors_delta": errors,
+        "lineage": lineage,
+        "domains": domains,
+    }
     if cfg.use_bloom:
         # LSM shards: per-round writes are DELTAS (O(new urls) bytes, not
         # O(total filter) — a 10^10-URL filter is tens of GB); a full merged
         # baseline is re-materialized only at compaction cadence or after a
-        # spec-change rebuild.
+        # spec-change rebuild (the stored chain carries the old spec).
         delta = build_shards(all_new, cfg.bloom)
-        last_full = store.last_full_shards_round(k)
-        full_due = (
-            shards_rebuilt or shards is None
-            or commit_k % cfg.compact_every == 0
-            # batched commits stride past the modulus rounds — re-baseline
-            # by distance so the delta chain stays bounded
-            or commit_k - (last_full if last_full is not None else 0) >= cfg.compact_every
-        )
-        if full_due:
-            shards_next = merge_shards(shards, delta) if shards is not None else delta
-            writes.append(("shards", shards_next))
+        if shards_rebuilt or store.compaction_due(commit_k):
+            artifacts["shards"] = merge_shards(shards, delta)
         else:
-            writes.append(("shards_delta", delta))
-
-    from concurrent.futures import ThreadPoolExecutor
-
-    # one thread per artifact: the writes are KB-scale latency-bound jobs
-    # (guide §2.6 recommends 2-3 in flight for big jobs; these are tiny and
-    # the cluster-side work still queues through the scheduler) — measured
-    # 24.6 → 21.5-22.4 s full_crawl vs a 4-wide pool
-    with ThreadPoolExecutor(max_workers=len(writes)) as pool:
-        list(pool.map(lambda nd: store.write(commit_k, nd[0], nd[1]), writes))
-
-    next_meta = RoundMeta(
-        round=commit_k,
-        priority_base=priority_base,
-        frontier_count=flows[-1].next_count,
-        seen_buckets=cfg.seen_buckets,
-        **_meta_bloom(cfg),
-    )
-    store.commit(commit_k, next_meta)
+            artifacts["shards_delta"] = delta
+    next_meta = round_meta(cfg, commit_k, priority_base, flows[-1].next_count)
+    store.commit(commit_k, next_meta, artifacts)
 
     for f in flows:
         for df in f.persisted:

@@ -31,6 +31,10 @@ def _cfg(max_rounds: int = 1000) -> CrawlConfig:
     )
 
 
+def _bloom(bits: int = 1 << 16, buckets: int = 8) -> BloomSpec:
+    return BloomSpec(n_buckets=buckets, bits_per_shard=bits)
+
+
 def _collect(spark, out):
     seen = sorted(r.url for r in out.seen(spark).collect())
     res = sorted(
@@ -101,7 +105,122 @@ def test_resume_over_old_format_shards(spark, smoke_graph, tmp_path):
 
     resumed = crawl(spark, pages_path, seeds, None, part_dir, _cfg())
     assert set(_collect(spark, resumed)[0]) == uninterrupted.seen
-    store = RoundStore(part_dir)
-    last_full = store.last_full_shards_round(resumed.final_round)
+    last_full = RoundStore(part_dir).newest("shards", resumed.final_round)
     assert last_full > 2
     assert "longs" in spark.read.parquet(os.path.join(part_dir, f"round_{last_full:06d}", "shards")).columns
+
+
+# -- Bloom spec mismatch / toggle on resume ------------------------------------
+
+def test_resume_with_changed_bloom_spec(spark, smoke_graph, tmp_path):
+    """Resuming with different Bloom parameters (or toggling the filter on)
+    must rebuild shards from the full seen set — never admit duplicates from
+    mismatched false negatives."""
+    pages_path = str(tmp_path / "pages.parquet")
+    smoke_graph.pages.to_parquet(pages_path, index=False)
+    seeds = spark.createDataFrame(smoke_graph.seeds)
+
+    full = crawl(spark, pages_path, seeds, None, str(tmp_path / "full"),
+                 CrawlConfig(use_bloom=True, bloom=_bloom()))
+    want_seen = sorted(r.url for r in full.seen(spark).collect())
+
+    # spec change mid-crawl
+    d1 = str(tmp_path / "spec_change")
+    crawl(spark, pages_path, seeds, None, d1,
+          CrawlConfig(use_bloom=True, bloom=_bloom(), max_rounds=2))
+    out1 = crawl(spark, pages_path, seeds, None, d1,
+                 CrawlConfig(use_bloom=True, bloom=_bloom(bits=1 << 14, buckets=4)))
+    assert sorted(r.url for r in out1.seen(spark).collect()) == want_seen
+
+    # bloom toggled ON after bloom-less rounds
+    d2 = str(tmp_path / "toggle_on")
+    crawl(spark, pages_path, seeds, None, d2,
+          CrawlConfig(use_bloom=False, max_rounds=2))
+    out2 = crawl(spark, pages_path, seeds, None, d2,
+                 CrawlConfig(use_bloom=True, bloom=_bloom()))
+    assert sorted(r.url for r in out2.seen(spark).collect()) == want_seen
+
+    # spec change on an --update-jar resume: the update transition writes no
+    # shards, so the next round must still see the old spec and rebuild
+    d3 = str(tmp_path / "update_spec_change")
+    crawl(spark, pages_path, seeds, None, d3,
+          CrawlConfig(use_bloom=True, bloom=_bloom(), max_rounds=2))
+    out3 = crawl(spark, pages_path, seeds, None, d3,
+                 CrawlConfig(use_bloom=True, bloom=_bloom(bits=1 << 20, buckets=4),
+                             update_url_prefix=""))
+    assert sorted(r.url for r in out3.seen(spark).collect()) == want_seen
+
+
+def test_resume_with_changed_seen_buckets(spark, smoke_graph, tmp_path):
+    """The bucketed base must be read with the bucket count it was WRITTEN
+    with (RoundMeta), not the resuming config's — declaring B'≠B over
+    B-bucket files would silently break the anti-join co-partitioning and
+    admit already-seen URLs."""
+    pages_path = str(tmp_path / "pages.parquet")
+    smoke_graph.pages.to_parquet(pages_path, index=False)
+    seeds = spark.createDataFrame(smoke_graph.seeds)
+
+    def cfg(buckets, max_rounds=1000):
+        return CrawlConfig(use_bloom=True, bloom=_bloom(), compact_every=2,
+                           seen_buckets=buckets, max_rounds=max_rounds)
+
+    full = crawl(spark, pages_path, seeds, None, str(tmp_path / "full"), cfg(4))
+    want = sorted(r.url for r in full.seen(spark).collect())
+
+    d = str(tmp_path / "resume")
+    crawl(spark, pages_path, seeds, None, d, cfg(4, max_rounds=3))  # base @2: 4 buckets
+    out = crawl(spark, pages_path, seeds, None, d, cfg(8))  # resume: 8 buckets
+    assert sorted(r.url for r in out.seen(spark).collect()) == want
+
+
+# -- crash-safe compaction ------------------------------------------------------
+
+def test_partial_compaction_tmp_is_ignored(spark, smoke_graph, tmp_path):
+    """A compaction killed mid-write leaves only the temp dir; the seen view
+    must keep reading base+deltas as if the compaction never ran."""
+    pages_path = str(tmp_path / "pages.parquet")
+    smoke_graph.pages.to_parquet(pages_path, index=False)
+    seeds = spark.createDataFrame(smoke_graph.seeds)
+    cfg = CrawlConfig(use_bloom=True, bloom=_bloom(), compact_every=2)
+
+    d = str(tmp_path / "state")
+    crawl(spark, pages_path, seeds, None, d, CrawlConfig(
+        use_bloom=True, bloom=_bloom(), compact_every=2, max_rounds=3))
+    # simulate a crash mid-compaction at the next compaction round
+    junk = os.path.join(d, "round_000003", "_seen_full_tmp")
+    os.makedirs(junk, exist_ok=True)
+    with open(os.path.join(junk, "part-00000.parquet"), "wb") as f:
+        f.write(b"not parquet")
+    resumed = crawl(spark, pages_path, seeds, None, d, cfg)
+
+    full = crawl(spark, pages_path, seeds, None, str(tmp_path / "full"), cfg)
+    assert sorted(r.url for r in resumed.seen(spark).collect()) == sorted(
+        r.url for r in full.seen(spark).collect()
+    )
+    shutil.rmtree(junk, ignore_errors=True)
+
+
+def test_uncommitted_seen_full_swept_on_resume(spark, smoke_graph, tmp_path):
+    """A crash mid-update-transition leaves an uncommitted round dir holding
+    a complete-looking (purged!) seen_full; re-running the round must sweep
+    it — committing around it would silently shadow the real seen set."""
+    pages_path = str(tmp_path / "pages.parquet")
+    smoke_graph.pages.to_parquet(pages_path, index=False)
+    seeds = spark.createDataFrame(smoke_graph.seeds)
+    cfg = CrawlConfig(use_bloom=True, bloom=_bloom())
+
+    d = str(tmp_path / "state")
+    crawl(spark, pages_path, seeds, None, d, CrawlConfig(
+        use_bloom=True, bloom=_bloom(), max_rounds=2))
+    # fake the aborted transition: an uncommitted round_3 with a bogus base
+    bogus = os.path.join(d, "round_000003", "seen_full")
+    os.makedirs(bogus, exist_ok=True)
+    spark.createDataFrame(
+        [(0, "https://bogus.example.com/")], "url_hash long, url string"
+    ).repartition(1).write.mode("overwrite").parquet(bogus)
+
+    resumed = crawl(spark, pages_path, seeds, None, d, cfg)
+    full = crawl(spark, pages_path, seeds, None, str(tmp_path / "full"), cfg)
+    got = sorted(r.url for r in resumed.seen(spark).collect())
+    assert got == sorted(r.url for r in full.seen(spark).collect())
+    assert "https://bogus.example.com/" not in got

@@ -211,9 +211,15 @@ def test_adaptive_batching_deep_chain(spark, tmp_path):
     out = crawl(spark, pages_path, seeds, None, str(tmp_path / "state"), cfg)
     ora = crawl_oracle(pages_dict(graph.pages), [graph.seeds.url[0]])
 
-    n_commits = len(out.store.committed_rounds())
+    store = out.store
+    committed = store.committed_rounds()
     assert out.final_round == depth  # logical rounds preserved
-    assert n_commits <= depth // cfg.max_batch_rounds + 2  # dirs ≪ depth
+    assert len(committed) <= depth // cfg.max_batch_rounds + 2  # dirs ≪ depth
+    # strided commits keep one cadence for both LSMs: a full shard set after
+    # round 0 comes with its seen base, and no delta chain reaches the interval
+    full_shards = [k for k in committed if store.newest("shards", k) == k]
+    assert all(store.newest("seen_full", k) == k for k in full_shards if k > 0)
+    assert all(k - store.newest("shards", k) < cfg.compact_every for k in committed)
 
     assert {r.url for r in out.seen(spark).collect()} == ora.seen
     got_res = sorted(
