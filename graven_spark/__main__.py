@@ -49,6 +49,25 @@ def read_seeds(spark: SparkSession, path: str):
     )
 
 
+def _append_seeds(seeds, extra):
+    """Seeds ``(seed_rank, url)`` followed by ``extra`` ``(_r, url)``, whose
+    1-based ``_r`` orders the appended urls; a url already in ``seeds`` keeps
+    its first occurrence. Appended ranks start at ``max(seed_rank) + 1``, so
+    every seed rank stays unique even when an earlier append's anti-join left
+    gaps. The result is pinned: every round reads it."""
+    if seeds is None:
+        out = extra.select((F.col("_r") - 1).alias("seed_rank"), "url")
+    else:
+        # one action on the seed relation, tiny by construction
+        top = seeds.agg(F.max("seed_rank")).first()[0]
+        base = -1 if top is None else top
+        out = seeds.unionByName(
+            extra.join(seeds.select("url"), "url", "anti")
+            .select((F.col("_r") + base).alias("seed_rank"), "url")
+        )
+    return out.localCheckpoint()
+
+
 def export_archive(results, out: str, kind: str) -> tuple[int, int]:
     """Write results as JSON parts (distributed), then package the parts
     into one archive on the driver (deterministic member order). Returns
@@ -475,19 +494,7 @@ def main(argv: list[str] | None = None) -> int:
             from .functions.sitemap import seeds_from_sitemaps
 
             sm = seeds_from_sitemaps(spark.read.parquet(args.pages), robots)
-            if seeds is None:
-                seeds = sm.select(F.col("seed_rank") - 1, "url") \
-                    .toDF("seed_rank", "url")
-            else:
-                # append after the explicit seeds, first occurrence wins
-                n0 = seeds.count()  # seed files are tiny by construction
-                extra = (
-                    sm.join(seeds.select("url"), "url", "anti")
-                    .select((F.col("seed_rank") + n0 - 1).alias("seed_rank"),
-                            "url")
-                )
-                seeds = seeds.unionByName(extra)
-            seeds = seeds.localCheckpoint()  # pin: read every round
+            seeds = _append_seeds(seeds, sm.withColumnRenamed("seed_rank", "_r"))
         if args.cdx_seeds:
             from pyspark.sql import Window
 
@@ -503,18 +510,7 @@ def main(argv: list[str] | None = None) -> int:
                 F.row_number().over(Window.orderBy("priority", "url"))
                 .alias("_r"), "url",
             )
-            if seeds is None:
-                seeds = cx.select((F.col("_r") - 1).alias("seed_rank"), "url")
-            else:
-                # append after existing seeds, first occurrence wins; rank
-                # gaps from the anti-join preserve order (same as sitemaps)
-                n0 = seeds.count()
-                extra = (
-                    cx.join(seeds.select("url"), "url", "anti")
-                    .select((F.col("_r") + n0 - 1).alias("seed_rank"), "url")
-                )
-                seeds = seeds.unionByName(extra)
-            seeds = seeds.localCheckpoint()
+            seeds = _append_seeds(seeds, cx)
         if args.cmd == "run":
             from .plans.pipeline import run_pipeline
 

@@ -445,23 +445,34 @@ def enrich_from_results(
         # absent from the dump land found=false, exactly the fixture path
         parsed = cve_ref.select("cve_id", "description_en", "base_score", "cwes")
     else:
-        nvd_raw = ids.filter(~nvd_miss(F.col("cve_id"))).select(
-            fixture_nvd(F.col("cve_id")).alias("nvd_json")
-        )
-        parsed = parse_nvd(nvd_raw)
+        parsed = _fixture_nvd(ids)
     cve = _pin(nvd_batch_lookup(ids, parsed).withColumn("run_id", F.lit(run_id)))
+    cve_cwe, cwe = _cwe_tables(cve, run_id)
+    return {
+        "jars": jars, "sboms": sboms, "reports": reports,
+        "scan_errors": scan_errors, "jar_cve": jar_cve,
+        "cve": cve, "cve_cwe": cve_cwe, "cwe": cwe,
+    }
+
+
+def _fixture_nvd(ids: DataFrame) -> DataFrame:
+    """The deterministic fixture NVD source, parsed, for the ``cve_id`` rows
+    of ``ids`` (ids the fixture treats as NVD misses are left out)."""
+    return parse_nvd(ids.filter(~nvd_miss(F.col("cve_id"))).select(
+        fixture_nvd(F.col("cve_id")).alias("nvd_json")
+    ))
+
+
+def _cwe_tables(cve: DataFrame, run_id: str) -> tuple[DataFrame, DataFrame]:
+    """``(cve_cwe, cwe)`` downstream of the enriched ``cve`` table: the
+    cve↔cwe association and the parsed CWE pages, stamped with ``run_id``."""
     cve_cwe = cve_cwe_assoc(cve.select("cve_id", "cwes")).withColumn(
         "run_id", F.lit(run_id)
     )
     cwe_pages = cve_cwe.select("cwe_id").distinct().select(
         "cwe_id", fixture_cwe_html(F.col("cwe_id")).alias("html")
     )
-    cwe = parse_cwe_page(cwe_pages).withColumn("run_id", F.lit(run_id))
-    return {
-        "jars": jars, "sboms": sboms, "reports": reports,
-        "scan_errors": scan_errors, "jar_cve": jar_cve,
-        "cve": cve, "cve_cwe": cve_cwe, "cwe": cwe,
-    }
+    return cve_cwe, parse_cwe_page(cwe_pages).withColumn("run_id", F.lit(run_id))
 
 
 def _stage_row(df: DataFrame, run_id: str, stage: str) -> DataFrame:
@@ -548,23 +559,14 @@ def update_vuln(
     rows keep their original run_id; re-queried rows stamp the new one."""
     missing = cve_prior.filter(~F.col("found")).select("cve_id")
     if cve_ref is None:
-        nvd_raw = missing.filter(~nvd_miss(F.col("cve_id"))).select(
-            fixture_nvd(F.col("cve_id")).alias("nvd_json")
-        )
-        cve_ref = parse_nvd(nvd_raw)
+        cve_ref = _fixture_nvd(missing)
     refreshed = nvd_batch_lookup(missing, cve_ref).withColumn(
         "run_id", F.lit(run_id)
     )
     cve = cve_prior.filter(F.col("found")).unionByName(
         refreshed.select(*cve_prior.columns)
     )
-    cve_cwe = cve_cwe_assoc(cve.select("cve_id", "cwes")).withColumn(
-        "run_id", F.lit(run_id)
-    )
-    cwe_pages = cve_cwe.select("cwe_id").distinct().select(
-        "cwe_id", fixture_cwe_html(F.col("cwe_id")).alias("html")
-    )
-    cwe = parse_cwe_page(cwe_pages).withColumn("run_id", F.lit(run_id))
+    cve_cwe, cwe = _cwe_tables(cve, run_id)
     return {"cve": cve, "cve_cwe": cve_cwe, "cwe": cwe}
 
 

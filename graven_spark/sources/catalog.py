@@ -34,15 +34,6 @@ def iceberg_available(spark: SparkSession) -> bool:
         return False
 
 
-def configured_iceberg_catalogs(spark: SparkSession) -> list[str]:
-    """Names of session catalogs configured as Iceberg SparkCatalogs."""
-    out = []
-    for k, v in spark.sparkContext.getConf().getAll():
-        if k.startswith("spark.sql.catalog.") and k.count(".") == 3 and "iceberg" in v.lower():
-            out.append(k.rsplit(".", 1)[1])
-    return out
-
-
 class IcebergSeenTable:
     """The seen set as one Iceberg table with a bucketed layout.
 

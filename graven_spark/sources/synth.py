@@ -249,12 +249,3 @@ def generate_graph(
         robots=pd.DataFrame(robots),
         specs=specs,
     )
-
-
-def write_parquet(graph: SiteGraph, out_dir: str) -> None:
-    import os
-
-    os.makedirs(out_dir, exist_ok=True)
-    graph.pages.to_parquet(f"{out_dir}/pages.parquet", index=False)
-    graph.seeds.to_parquet(f"{out_dir}/seeds.parquet", index=False)
-    graph.robots.to_parquet(f"{out_dir}/robots.parquet", index=False)

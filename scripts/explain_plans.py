@@ -1,7 +1,7 @@
 """Dump formatted physical plans for the engine's hot paths and grep them
 for the properties we promise (SURVEY.md §4): parquet filter/column
 pushdown, broadcast joins where intended, whole-stage codegen coverage.
-Writes PLANS.md at the repo root for review.
+Writes PLANS.md at the repo root for review and exits 1 when a check fails.
 
 Usage: python scripts/explain_plans.py
 """
@@ -66,7 +66,7 @@ def without_shard_side(plan: str) -> list[str]:
     return tree[:r] + tree[end:]
 
 
-def main() -> None:
+def main() -> int:
     spark = build_session(master="local[4]", shuffle_partitions=4)
     tmp = tempfile.mkdtemp(prefix="plans_")
     graph = synth.generate_graph(synth.smoke_specs())
@@ -161,9 +161,11 @@ def main() -> None:
     eng = admit_new(cand2, [base, deltas], shards2, spec, dedup_first=True)
     eng_plan = formatted(eng)
     limit, bloom.BROADCAST_LIMIT = bloom.BROADCAST_LIMIT, 0
-    eng_shuffled_plan = formatted(
-        admit_new(cand2, [base, deltas], shards2, spec, dedup_first=True))
-    bloom.BROADCAST_LIMIT = limit
+    try:
+        eng_shuffled_plan = formatted(
+            admit_new(cand2, [base, deltas], shards2, spec, dedup_first=True))
+    finally:
+        bloom.BROADCAST_LIMIT = limit
     spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
     cand_path = without_shard_side(eng_plan)
     n_exchanges = sum("- Exchange (" in ln for ln in cand_path)
@@ -511,7 +513,8 @@ def main() -> None:
     with open(OUT, "w") as f:
         f.write("\n".join(lines))
     print(f"PLANS.md written; all checks {'PASS' if ok else 'FAIL'}")
+    return 0 if ok else 1
 
 
 if __name__ == "__main__":
-    main()
+    raise SystemExit(main())

@@ -1,5 +1,6 @@
 """Shared fixtures: one local SparkSession per test session, synthetic
-graphs, and oracle-input converters."""
+graphs, oracle-input converters and the small Bloom spec the crawl tests
+share."""
 
 from __future__ import annotations
 
@@ -11,6 +12,7 @@ import pytest
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
+from graven_spark.operators.bloom import BloomSpec  # noqa: E402
 from graven_spark.session import build_session  # noqa: E402
 from graven_spark.sources import synth  # noqa: E402
 
@@ -48,6 +50,10 @@ def robots_dict(robots: pd.DataFrame) -> dict[str, dict]:
         }
         for r in robots.itertuples()
     }
+
+
+def _bloom(bits: int = 1 << 16, buckets: int = 8) -> BloomSpec:
+    return BloomSpec(n_buckets=buckets, bits_per_shard=bits)
 
 
 @pytest.fixture(scope="session")

@@ -103,3 +103,52 @@ def test_cli_crawl_with_cdx_seeds(spark, smoke_graph, tmp_path):
     ])
     assert rc == 0
     assert os.path.exists(os.path.join(state, "round_000000", "_COMMIT"))
+
+
+def test_cli_appended_seed_ranks_unique(spark, tmp_path):
+    """Sitemap seeds, then CDX seeds, appended after a seed file: the
+    sitemap's anti-join drops a url the seed file already holds, and the CDX
+    seeds must still rank after every sitemap seed — each round-0 priority
+    is distinct."""
+    import datetime as dt
+
+    import pandas as pd
+
+    from graven_spark.__main__ import main
+    from graven_spark.sources.checkpoint import RoundStore
+    from graven_spark.sources.synth import generate_graph, mini_specs
+
+    g = generate_graph(mini_specs())
+    roots = sorted(g.seeds["url"])
+    host0, host1 = roots[0], roots[1]
+    h0 = host0.split("/")[2]
+    a, b, c = sorted(u for u in g.pages["url"] if "host2." in u)[:3]
+    sitemap = "".join(f"<url><loc>{u}</loc></url>" for u in (host1, a, b))
+    extra = pd.DataFrame([
+        {"url": u, "warc_ts": dt.datetime(2024, 1, 1), "html": body,
+         "text": "", "lang": "en"}
+        for u, body in [
+            (f"https://{h0}/robots.txt", b"User-agent: *\nDisallow:\n"
+             b"Sitemap: https://%s/sm.xml\n" % h0.encode()),
+            (f"https://{h0}/sm.xml", f"<urlset>{sitemap}</urlset>".encode()),
+        ]
+    ])
+    pages = str(tmp_path / "pages.parquet")
+    combined = pd.concat([g.pages, extra], ignore_index=True)
+    combined["warc_ts"] = combined["warc_ts"].astype("datetime64[us]")
+    combined.to_parquet(pages, index=False)
+    seeds = tmp_path / "seeds.csv"
+    seeds.write_text(f"{host0}\n{host1}\n")
+    cdxp = tmp_path / "cdx-00000"
+    cdxp.write_text(f'x)/c 20240101000000 {{"url": "{c}", "mime": "text/html", '
+                    '"status": "200"}')
+    state = str(tmp_path / "state")
+    assert main([
+        "crawl", "--pages", pages, "--seeds", str(seeds), "--state", state,
+        "--robots-rfc", "--sitemap-seeds", "--cdx-seeds", str(cdxp),
+        "--max-rounds", "0",
+    ]) == 0
+    prio = [r.priority
+            for r in RoundStore(state).read_frontier(spark, 0).collect()]
+    assert len(prio) == 5
+    assert len(set(prio)) == len(prio), sorted(prio)

@@ -2,7 +2,8 @@
 engine must reproduce the single-threaded reference oracle exactly —
 round-by-round frontier contents + priority order, final URL-seen set,
 results (with byte-identical extracted text), errors, and lineage totals —
-under the same seed list and politeness budget.
+under the same seed list and politeness budget. Also retry/requeue, the
+domain-lifecycle fold and termination on cyclic link graphs.
 """
 
 from __future__ import annotations
@@ -10,12 +11,12 @@ from __future__ import annotations
 import pandas as pd
 import pytest
 
-from graven_spark.oracle import crawl_oracle
+from graven_spark.oracle import crawl_oracle, domains_oracle
 from graven_spark.plans.driver import crawl
 from graven_spark.plans.frontier import CrawlConfig
 from graven_spark.operators.bloom import BloomSpec
 
-from .conftest import pages_dict, robots_dict
+from .conftest import _bloom, pages_dict, robots_dict
 
 FRONTIER_KEY = ["priority", "url", "host", "depth", "parent_url", "discovery_idx"]
 
@@ -178,3 +179,76 @@ def test_replay_t2_multihost_skewed(spark, t2_graph, tmp_path):
     blocked_prefix = "https://host4.example.com/maven2/d0s1/"
     assert not any(u.startswith(blocked_prefix) for u in ora.seen)
     assert any(u.startswith("https://host4.example.com/maven2/d0s2/") for u in ora.seen)
+
+
+# -- retry/requeue, domain lifecycle, cycles -----------------------------------
+
+def test_replay_with_retries(spark, smoke_graph, tmp_path):
+    """Failed dir fetches requeue with retry_count+1 up to max_retries; each
+    attempt logs an error row. Engine must match the oracle exactly,
+    including retry_count in the frontier snapshots."""
+    cfg = CrawlConfig(use_bloom=True, bloom=_bloom(), max_retries=2)
+    pages_path = str(tmp_path / "pages.parquet")
+    smoke_graph.pages.to_parquet(pages_path, index=False)
+    seeds = spark.createDataFrame(smoke_graph.seeds)
+    out = crawl(spark, pages_path, seeds, None, str(tmp_path / "state"), cfg)
+    ora = crawl_oracle(
+        pages_dict(smoke_graph.pages),
+        list(smoke_graph.seeds.sort_values("seed_rank")["url"]),
+        None,
+        max_retries=2,
+    )
+    _assert_match(spark, out, ora)
+    # retry_count is reproduced exactly, and a dead URL really was retried
+    retried = {}
+    for k, snap in enumerate(ora.frontier_snapshots):
+        got = {
+            r.url: r.retry_count
+            for r in out.frontier(spark, k).select("url", "retry_count").collect()
+        }
+        want = {r.url: r.retry_count for r in snap}
+        assert got == want, f"retry_count mismatch at round {k}"
+        retried.update({u: c for u, c in want.items() if c > 0})
+    assert retried and max(retried.values()) == 2
+    # each dead dir erred once per attempt: attempts = 1 + max_retries
+    dead_errs = [e for e in ora.errors if e["stage"] == "crawler"]
+    per_url = {}
+    for e in dead_errs:
+        per_url[e["url"]] = per_url.get(e["url"], 0) + 1
+    assert per_url and set(per_url.values()) == {3}
+
+
+def test_domains_match_oracle_fold(spark, smoke_graph, tmp_path):
+    cfg = CrawlConfig(use_bloom=True, bloom=_bloom())
+    out, ora = _run_both(spark, tmp_path, smoke_graph, with_robots=True, cfg=cfg)
+    got = {
+        r.host: (r.status, r.start_round, r.end_round)
+        for r in out.domains(spark).collect()
+    }
+    assert got == domains_oracle(ora)
+    assert all(s == "COMPLETED" for s, _, _ in got.values())
+
+
+def test_cycles_no_url_fetched_twice(smoke_graph):
+    """The graph contains ancestor back-edges (synth cycle_every); the crawl
+    must terminate with every URL fetched at most once and each back-edge
+    collapsing to exactly one dead-link error."""
+    # the fixture really contains ancestor anchors
+    assert any(
+        b'href="https://host0.example.com/maven2/"' in h
+        for h in smoke_graph.pages.html
+    )
+    ora = crawl_oracle(
+        pages_dict(smoke_graph.pages),
+        list(smoke_graph.seeds.sort_values("seed_rank")["url"]),
+    )
+    # No politeness budget ⇒ every frontier row is fetched in its round, so
+    # "no URL fetched twice" == all snapshot rows globally unique.
+    all_rows = [r.url for snap in ora.frontier_snapshots for r in snap]
+    assert len(all_rows) == len(set(all_rows))
+    # each back-edge URL (parent + absolute root) was seen once, errored once
+    cycle_urls = [u for u in ora.seen if "https://" in u.removeprefix("https://")]
+    assert cycle_urls
+    err_urls = [e["url"] for e in ora.errors]
+    for u in cycle_urls:
+        assert err_urls.count(u) == 1

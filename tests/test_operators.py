@@ -13,6 +13,8 @@ from graven_spark.operators.dedup import admit_new, first_occurrence
 from graven_spark.operators.politeness import gate_robots, select_round
 from graven_spark.operators.ranking import with_global_rank
 
+from .conftest import _bloom
+
 SPEC = BloomSpec(n_buckets=4, bits_per_shard=1 << 12, n_hashes=5)
 
 
@@ -226,3 +228,80 @@ def test_bloom_spec_rejects_invalid_sizes():
         with pytest.raises(ValueError):
             BloomSpec(**bad)
     assert BloomSpec(bits_per_shard=64).shard_nbytes == 8
+
+
+# -- politeness budgets and Bloom probe strategies ---------------------------
+
+def test_budget_zero_selects_nothing(spark):
+    frontier = spark.createDataFrame(
+        [(f"https://h{i % 2}/p{i}/", f"h{i % 2}", 0, i, None, 0, 0) for i in range(10)],
+        "url string, host string, depth int, priority long, parent_url string, "
+        "discovery_idx int, retry_count int",
+    )
+    robots = spark.createDataFrame(
+        [("h0", [], 0), ("h1", [], 3)],
+        "host string, disallow_prefixes array<string>, crawl_delay_tokens int",
+    )
+    sel = select_round(frontier, robots).filter(F.col("selected")).collect()
+    hosts = {r.host for r in sel}
+    assert hosts == {"h1"}  # budget-0 host selects NOTHING, not everything
+    assert len(sel) == 3
+
+
+def test_select_round_bytes(spark):
+    from graven_spark.operators.politeness import select_round_bytes
+
+    rows = []
+    for h in range(3):
+        for i in range(20):
+            rows.append((f"h{h}", h * 100 + i, 7 + (i * 13) % 40))
+    rows.append(("big", 999, 10_000))  # oversized first row: progress row
+    # unknown sizes: a NULL row is admitted only as the host's first row and
+    # adds nothing to the running total; NULL rows below the threshold ride
+    # along (running totals -, 60, -, 90, 110 → admitted 700 as the first
+    # row, 701 and 703; threshold 703)
+    for i, b_ in enumerate([None, 60, None, 30, 20]):
+        rows.append(("nul", 700 + i, b_))
+    fr = spark.createDataFrame(rows, "host string, priority long, est_bytes long")
+
+    def sel_set(df):
+        return {(r.host, r.priority) for r in df.filter(F.col("selected")).collect()}
+
+    a = sel_set(select_round_bytes(fr, byte_budget=100))
+    b = sel_set(select_round_bytes(fr, byte_budget=100, min_row_bytes=7))
+    assert a == b  # salted prune is a pure optimization
+    assert ("big", 999) in a  # progress guarantee
+    assert {k for k in a if k[0] == "nul"} == {("nul", 700 + i) for i in range(4)}
+    # per-host: admitted = maximal prefix with cumsum <= budget (min 1 row)
+    for h in range(3):
+        prefix = [(f"h{h}", h * 100 + i) for i in range(20)]
+        byts = [7 + (i * 13) % 40 for i in range(20)]
+        cum, want = 0, set()
+        for (key, b_) in zip(prefix, byts):
+            cum += b_
+            if cum <= 100 or not want:
+                want.add(key)
+            else:
+                break
+        assert {k for k in a if k[0] == f"h{h}"} == want
+
+
+def test_admit_new_probe_paths_agree(spark, monkeypatch):
+    """Admission through the broadcast and the shuffled probe admits exactly
+    the candidates not in seen."""
+    from graven_spark.operators import bloom
+
+    cand = spark.createDataFrame(
+        [(f"u{i}", i) for i in range(200)], "url string, priority long"
+    )
+    seen = spark.createDataFrame(
+        [(0, f"u{i}") for i in range(0, 200, 2)], "url_hash long, url string"
+    )
+    spec = _bloom(bits=1 << 12, buckets=4)
+    shards = bloom.build_shards(seen, spec)
+    via_broadcast = admit_new(cand, seen, shards, spec)
+    monkeypatch.setattr(bloom, "BROADCAST_LIMIT", 0)
+    via_shuffled = admit_new(cand, seen, shards, spec)
+    a = sorted(r.url for r in via_broadcast.collect())
+    b = sorted(r.url for r in via_shuffled.collect())
+    assert a == b == [f"u{i}" for i in sorted(range(1, 200, 2), key=lambda x: f"u{x}")]
