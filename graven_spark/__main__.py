@@ -345,9 +345,35 @@ def main(argv: list[str] | None = None) -> int:
 
     args = p.parse_args(argv)
     if args.cmd in ("crawl", "run"):
-        # reject a bad Bloom spec before the session starts
+        update_domains = args.update_domain
+        update_prefix = args.update_jar
+        if args.update:
+            # -u/--update: ALL recorded domains + ALL recorded jars
+            # (reference cli_parser.py:66-71 "Supersedes --update-* flags").
+            # "*" makes _reopen_domains JOIN the recorded domains table —
+            # no host list ever reaches the driver or the plan.
+            from .sources.checkpoint import RoundStore
+
+            if RoundStore(args.state).latest_round() is not None:
+                update_domains = "*"
+                update_prefix = ""  # every recorded url matches
+        # reject a bad Bloom spec or config before the session starts
         try:
-            bloom = BloomSpec(n_buckets=args.bloom_buckets, bits_per_shard=args.bloom_bits)
+            cfg = CrawlConfig(
+                use_bloom=not args.no_bloom,
+                bloom=BloomSpec(n_buckets=args.bloom_buckets, bits_per_shard=args.bloom_bits),
+                max_rounds=args.max_rounds,
+                max_retries=args.max_retries,
+                jar_limit=args.jar_limit,
+                delay_window_s=args.delay_window,
+                normalize_urls=args.normalize_urls,
+                seen_buckets=args.seen_buckets,
+                update_domains=update_domains,
+                update_url_prefix=update_prefix,
+                batch_threshold=args.batch_threshold,
+                max_batch_rounds=args.batch_max,
+                **({"default_budget": args.budget} if args.budget is not None else {}),
+            )
         except ValueError as e:
             p.error(str(e))
     spark = build_session(app_name=f"graven_spark_{args.cmd}")
@@ -444,33 +470,6 @@ def main(argv: list[str] | None = None) -> int:
         return 0
 
     if args.cmd in ("crawl", "run"):
-        update_domains = args.update_domain
-        update_prefix = args.update_jar
-        if args.update:
-            # -u/--update: ALL recorded domains + ALL recorded jars
-            # (reference cli_parser.py:66-71 "Supersedes --update-* flags").
-            # "*" makes _reopen_domains JOIN the recorded domains table —
-            # no host list ever reaches the driver or the plan.
-            from .sources.checkpoint import RoundStore
-
-            if RoundStore(args.state).latest_round() is not None:
-                update_domains = "*"
-                update_prefix = ""  # every recorded url matches
-        cfg = CrawlConfig(
-            use_bloom=not args.no_bloom,
-            bloom=bloom,
-            max_rounds=args.max_rounds,
-            max_retries=args.max_retries,
-            jar_limit=args.jar_limit,
-            delay_window_s=args.delay_window,
-            normalize_urls=args.normalize_urls,
-            seen_buckets=args.seen_buckets,
-            update_domains=update_domains,
-            update_url_prefix=update_prefix,
-            batch_threshold=args.batch_threshold,
-            max_batch_rounds=args.batch_max,
-            **({"default_budget": args.budget} if args.budget is not None else {}),
-        )
         if not args.seeds and not args.sitemap_seeds and not args.cdx_seeds:
             p.error("one of --seeds / --sitemap-seeds / --cdx-seeds is required")
         if args.sitemap_seeds and not args.robots_rfc:

@@ -112,7 +112,6 @@ def _reopen_domains(
     seen_next = purged.unionByName(_seen_delta(reseed))
     next_frontier = store.read_frontier(spark, k).unionByName(reseed)
     store.mark_updated()  # the re-crawl re-emits result rows for purged urls
-    store.write_seen_full(spark, k + 1, seen_next)
     # Stamp IN_PROGRESS for every host that actually got frontier rows at
     # k+1 — full-outer against the prior table so an update host with a seed
     # but NO prior domain row gets its IN_PROGRESS/start_round=k+1 row
@@ -127,12 +126,10 @@ def _reopen_domains(
         F.when(is_re, F.lit(None).cast("int"))
         .otherwise(F.col("end_round")).alias("end_round"),
     )
-    artifacts = {"frontier": next_frontier, "domains": domains}
+    artifacts = {"frontier": next_frontier, "seen_full": seen_next, "domains": domains}
     if cfg.use_bloom:
-        artifacts["shards"] = build_shards(store.read_seen(spark, k + 1), cfg.bloom)
-    next_meta = round_meta(  # write_seen_full ran pre-commit
-        cfg, k + 1, meta.priority_base, next_frontier.count(), seen_bucketed=True
-    )
+        artifacts["shards"] = build_shards(seen_next, cfg.bloom)
+    next_meta = round_meta(cfg, k + 1, meta.priority_base, next_frontier.count())
     store.commit(k + 1, next_meta, artifacts)
     return next_meta
 
@@ -185,7 +182,7 @@ def _update_urls(
         )).alias("details"),
     )
     store.mark_updated()
-    next_meta = replace(meta, round=k + 1, seen_bucketed=False)
+    next_meta = replace(meta, round=k + 1)
     store.commit(k + 1, next_meta, {
         "frontier": store.read_frontier(spark, k),
         "results_delta": refreshed,
@@ -208,13 +205,6 @@ def crawl(
     ``tool_meta``: run_log scanner-metadata columns (syft_version /
     grype_version / grype_db_source, /root/reference/ddl/0_run_log.sql)."""
     cfg = cfg or CrawlConfig()
-    if isinstance(cfg.update_domains, str) and cfg.update_domains != "*":
-        # fail at entry, not rounds later inside _reopen_domains: a bare
-        # host string would otherwise iterate per character there
-        raise ValueError(
-            f"update_domains must be a list of hosts or '*', got the "
-            f"string {cfg.update_domains!r}"
-        )
     store = RoundStore(state_dir, compact_every=cfg.compact_every,
                        seen_buckets=cfg.seen_buckets)
 
@@ -237,7 +227,6 @@ def crawl(
     seq = store.log_run_start(cfg.run_id, k, tool_meta=tool_meta)
     while meta.frontier_count > 0 and meta.round < cfg.max_rounds:
         meta = run_round(spark, store, pages_path, robots, cfg, meta.round)
-        store.maybe_compact_seen(spark, meta.round)
         k = meta.round
     store.log_run_end(seq, k)
     return CrawlOutputs(store=store, final_round=k)

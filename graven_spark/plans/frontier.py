@@ -102,6 +102,21 @@ class CrawlConfig:
     # --update-jar analog: re-fetch+re-extract seen leaf urls with this prefix.
     update_url_prefix: str | None = None
 
+    def __post_init__(self) -> None:
+        # reject before anything is committed: init_run writes round 0
+        if self.jar_limit is not None and self.jar_limit < 1:
+            raise ValueError(
+                "jar_limit must be >= 1 — a cap of 0 defers every selected URL "
+                "forever (no round can make progress)"
+            )
+        if isinstance(self.update_domains, str) and self.update_domains != "*":
+            # a bare host string would otherwise iterate per character in
+            # _reopen_domains
+            raise ValueError(
+                f"update_domains must be a list of hosts or '*', got the "
+                f"string {self.update_domains!r}"
+            )
+
 
 def _seen_delta(new_urls: DataFrame) -> DataFrame:
     return new_urls.select(
@@ -110,8 +125,7 @@ def _seen_delta(new_urls: DataFrame) -> DataFrame:
 
 
 def round_meta(
-    cfg: CrawlConfig, k: int, priority_base: int, frontier_count: int,
-    seen_bucketed: bool = False,
+    cfg: CrawlConfig, k: int, priority_base: int, frontier_count: int
 ) -> RoundMeta:
     """Meta for a committed round whose shard chain (if any) was built with
     ``cfg.bloom`` — every transition that writes shards builds them from the
@@ -123,7 +137,6 @@ def round_meta(
         priority_base=priority_base,
         frontier_count=frontier_count,
         seen_buckets=cfg.seen_buckets,
-        seen_bucketed=seen_bucketed,
         bloom_on=on,
         bloom_buckets=cfg.bloom.n_buckets if on else 0,
         bloom_bits=cfg.bloom.bits_per_shard if on else 0,
@@ -311,11 +324,6 @@ def _round_dataflow(
     # -- global per-round cap (T3, cfg.jar_limit): rows ranked past the cap
     # defer with priority intact; the rank is already global, so the cap is
     # one filter — no extra shuffle, no second ordering pass
-    if cfg.jar_limit is not None and cfg.jar_limit < 1:
-        raise ValueError(
-            "jar_limit must be >= 1 — a cap of 0 defers every selected URL "
-            "forever (no round can make progress)"
-        )
     if cfg.jar_limit is not None and n_selected > cfg.jar_limit:
         deferred = deferred.unionByName(
             ranked.filter(F.col("fifo_rank") >= cfg.jar_limit).select(*FRONTIER_COLS)
@@ -427,8 +435,15 @@ def _round_dataflow(
     )
 
     # -- leaf fetch + text extraction (downloader/extractor analog) ---------
+    # results and errors_dead_leaf are written concurrently by the commit,
+    # so they share no pinned frame (both jobs would compute it): the dead
+    # leaves come from a url-only semi-join of pages against the broadcast
+    # leaf set, which never reads html
     pages_full = spark.read.parquet(pages_path).select("url", "warc_ts", "html", "lang")
-    leaf_pages = pages_full.join(F.broadcast(new_leaves), "url", "inner").persist()
+    leaf_pages = pages_full.join(F.broadcast(new_leaves), "url", "inner")
+    leaf_urls = pages_full.select("url").join(
+        F.broadcast(new_leaves.select("url")), "url", "left_semi"
+    )
     result_cols = [
         "url",
         "warc_ts",
@@ -442,7 +457,7 @@ def _round_dataflow(
         "text", extract_text(F.col("html"))
     ).select(*result_cols)
     errors_dead_leaf = (
-        new_leaves.join(F.broadcast(leaf_pages.select("url")), "url", "left_anti")
+        new_leaves.join(F.broadcast(leaf_urls), "url", "left_anti")
         .select(
             F.lit(k).alias("round"), "url",
             F.lit("download").alias("stage"), F.lit("fetch_failed").alias("reason"),
@@ -483,7 +498,7 @@ def _round_dataflow(
         (F.col("_tag") != "n") | F.coalesce(F.col("is_dir"), F.lit(False))
     ).select(*FRONTIER_COLS)
     next_count = next_frontier.count()
-    persisted = [fetched, failed, leaf_pages, pinned]
+    persisted = [fetched, failed, pinned]
     if not truncate:  # checkpointed frames free via ContextCleaner on GC
         persisted += [combined]
     return _RoundFlow(
@@ -552,7 +567,7 @@ def run_round(
         priority_base += flow.n_selected * PRIORITY_STRIDE
         logical_k += 1
         domains = _domains_step(domains, flow.next_frontier, logical_k)
-        # batched mode chains one lazy full-outer join per inner depth onto
+        # batched mode chains one lazy union + groupBy per inner depth onto
         # the domains frame; --batch-max is user-settable, and chained
         # iterative plans are this repo's documented driver-OOM pitfall —
         # truncate the lineage every few depths (tiny data: one row per host)
@@ -584,19 +599,27 @@ def run_round(
     # checkpointed frames, so the commit writes them concurrently
     artifacts = {
         "frontier": flows[-1].next_frontier,
-        "seen_delta": _seen_delta(all_new),
         "results_delta": results,
         "errors_delta": errors,
         "lineage": lineage,
         "domains": domains,
     }
+    # both LSMs write per-round DELTAS (O(new urls) bytes, not O(total) — a
+    # 10^10-URL seen set or filter is tens of GB) and re-baseline at one
+    # cadence: a due round writes the consolidated seen base in place of
+    # its delta
+    due = store.compaction_due(commit_k)
+    if due:
+        artifacts["seen_full"] = store.read_seen(spark, k).unionByName(
+            _seen_delta(all_new)
+        )
+    else:
+        artifacts["seen_delta"] = _seen_delta(all_new)
     if cfg.use_bloom:
-        # LSM shards: per-round writes are DELTAS (O(new urls) bytes, not
-        # O(total filter) — a 10^10-URL filter is tens of GB); a full merged
-        # baseline is re-materialized only at compaction cadence or after a
-        # spec-change rebuild (the stored chain carries the old spec).
+        # a full merged shard baseline is also re-materialized after a
+        # spec-change rebuild (the stored chain carries the old spec)
         delta = build_shards(all_new, cfg.bloom)
-        if shards_rebuilt or store.compaction_due(commit_k):
+        if shards_rebuilt or due:
             artifacts["shards"] = merge_shards(shards, delta)
         else:
             artifacts["shards_delta"] = delta

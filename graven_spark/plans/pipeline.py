@@ -276,8 +276,7 @@ def _jar_key(r: dict) -> tuple:
 
 
 def attach_payload(
-    jars: DataFrame, results: DataFrame, pages: DataFrame,
-    persist: bool = False,
+    jars: DataFrame, results: DataFrame, pages: DataFrame
 ) -> DataFrame:
     """jars + ``payload binary`` — the fetched artifact bytes for each jar
     row, so a REAL syft/grype binary scans the artifact itself, not its URL
@@ -295,18 +294,15 @@ def attach_payload(
 
     ``with_url`` is read twice below (the pages semi-filter and the final
     join) — any shape that both filters pages by the winner-url set AND
-    joins the urls back must reference that set twice, so ``persist=True``
-    (the composed run passes its own persist flag) localCheckpoints the
-    small O(#jars) frame and the results scan + winner aggregate execute
-    exactly once instead of once per reference."""
+    joins the urls back must reference that set twice, so the small
+    O(#jars) frame is localCheckpointed and the results scan + winner
+    aggregate execute exactly once instead of once per reference."""
     cand = results.select(
         "url", F.regexp_replace(F.col("url"), REPO_PREFIX_RE, "").alias("uri")
     )
     cand = cand.withColumn("jar_id", F.element_at(F.split("uri", "/"), -1))
     urls = cand.groupBy("jar_id", "uri").agg(F.min("url").alias("url"))
-    with_url = jars.join(urls, ["jar_id", "uri"], "left")
-    if persist:
-        with_url = with_url.localCheckpoint(eager=True)
+    with_url = jars.join(urls, ["jar_id", "uri"], "left").localCheckpoint(eager=True)
     payloads = pages.join(
         with_url.select("url").distinct(), "url", "left_semi"
     ).select("url", F.col("html").alias("payload"))
@@ -333,7 +329,7 @@ def enrich_from_results(
     spark: SparkSession, results: DataFrame, run_id: str,
     scanner=None, generator=None,
     disable_syft: bool = False, disable_update_vuln: bool = False,
-    persist: bool = True, pages: DataFrame | None = None,
+    pages: DataFrame | None = None,
     cve_ref: DataFrame | None = None,
 ) -> dict[str, DataFrame]:
     """The process/update-vuln stages as one dataflow over a results table
@@ -354,8 +350,8 @@ def enrich_from_results(
     discovered CVE id lands found=false with null enrichment (the state the
     reference's cve table is in before the vuln worker runs,
     ``--disable-update-vuln``); the cwe stages are then naturally empty.
-    ``persist``: eagerly localCheckpoint the stage boundaries (jars,
-    reports, cve) so each stage executes EXACTLY ONCE no matter how many
+    The stage boundaries (jars, reports, cve) are eagerly
+    localCheckpointed, so each stage executes EXACTLY ONCE no matter how many
     output tables are written afterwards — with a real subprocess scanner
     plugged in, re-executing the scanner once per downstream table write
     would re-shell-out per jar per table. On a cluster deployment swap
@@ -375,13 +371,13 @@ def enrich_from_results(
     from ..operators.scanner import split_scan_failures
 
     def _pin(df: DataFrame) -> DataFrame:
-        return df.localCheckpoint(eager=True) if persist else df
+        return df.localCheckpoint(eager=True)
 
     jars = _pin(jar_table(results, run_id))
     # payload attach only when a real tool will read the bytes — the pin
     # bounds it to one execution even though generator AND scanner read it
     scan_input = (
-        _pin(attach_payload(jars, results, pages, persist=persist))
+        _pin(attach_payload(jars, results, pages))
         if pages is not None and (scanner is not None or generator is not None)
         else jars
     )

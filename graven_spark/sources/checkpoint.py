@@ -14,29 +14,32 @@ Layout (round k's directory holds the state *entering* round k):
       round_000001/            # after round 0 ran
         frontier/  seen_delta/ results_delta/ errors_delta/ lineage/
         shards_delta/          domains/       meta.json     _COMMIT
-      round_000008/            # a compaction round adds seen_full/ and
-        seen_full/ shards/     # a full shards/ in place of shards_delta/
+      round_000008/            # a compaction round has seen_full/ in place
+        seen_full/ shards/     # of seen_delta/, full shards/ in place of
+                               # shards_delta/
 
 Every transition commits through ``RoundStore.commit(k, meta, artifacts)``:
 the ``name → DataFrame`` artifacts are written concurrently, then
-``meta.json``, then ``_COMMIT``. An artifact that must be read back before
-the commit (the seeded frontier, a re-opened seen base) is written first on
-its own; the marker still comes last.
+``meta.json``, then ``_COMMIT``. Nothing writes into a round after its
+marker; the one artifact written before the commit on its own is the seeded
+frontier, which ``init_run`` reads back to seed the other artifacts.
 
-``seen`` is an LSM: a bucketed, sorted ``seen_full`` base (written by the
-periodic compaction) plus the per-round ``seen_delta`` parquet files after
-it. The base is written with ``bucketBy(B, url).sortBy(url)`` — one file per
-bucket — and read back through the session catalog as a bucketed table, so
-the per-round admission anti-join needs **no Exchange and no Sort on the
-seen side** (the big, growing side); only the round's bounded candidate set
-shuffles. The small deltas since the last compaction are anti-joined after
-the base probe (candidates are already hash-partitioned on url by then, so
-only the delta side moves).
+``seen`` is an LSM: a bucketed, sorted ``seen_full`` base plus the
+per-round ``seen_delta`` parquet files after it. The base is written with
+``bucketBy(B, url).sortBy(url)`` — one file per bucket — and read back
+through the session catalog as a bucketed table, so the per-round
+admission anti-join needs **no Exchange and no Sort on the seen side** (the
+big, growing side); only the round's bounded candidate set shuffles. The
+small deltas since the last compaction are anti-joined after the base probe
+(candidates are already hash-partitioned on url by then, so only the delta
+side moves).
 
-Compaction is crash-safe: the consolidated base is written to a temp dir and
-``os.rename``d into place — the ``seen_full`` directory either exists
-completely or not at all, so a killed compaction can never shadow the deltas
-with a partial base (resume re-runs the compaction idempotently).
+Compaction is one more commit artifact: a round that re-baselines writes
+``seen_full`` (the previous chain ∪ the round's new urls) instead of its
+``seen_delta``. Crash safety comes from the marker and the sweep, not from
+a rename: a round directory without ``_COMMIT`` is invisible to resume and
+``clean_uncommitted_above`` removes it before the round is re-run, so a
+partial base can never shadow the deltas.
 
 Bloom shards are an LSM too: the newest full ``shards/`` set OR'd with the
 ``shards_delta/`` sets after it, each row ``(bucket, longs array<bigint>)``.
@@ -115,10 +118,11 @@ class RoundMeta:
     priority_base: int
     frontier_count: int
     seen_buckets: int = SEEN_BUCKETS_DEFAULT
-    # True iff this round's seen_full was written by write_seen_full (bucketed
-    # + sorted, one file per bucket). The read path branches on THIS flag —
-    # never on file-name sniffing, which a Spark naming change or a foreign
-    # writer would fool into declaring wrong bucket metadata.
+    # True iff this round's seen_full was written by the bucketed writer
+    # (one sorted file per bucket); ``commit`` stamps it. The read path
+    # branches on THIS flag — never on file-name sniffing, which a Spark
+    # naming change or a foreign writer would fool into declaring wrong
+    # bucket metadata.
     seen_bucketed: bool = False
     bloom_on: bool = False
     bloom_buckets: int = 0
@@ -192,7 +196,11 @@ class RoundStore:
                artifacts: dict[str, DataFrame] | None = None) -> None:
         """Commit round k: write ``artifacts`` (name → frame) concurrently,
         then ``meta.json``, then the ``_COMMIT`` marker. A failed write
-        raises before the marker, so the round stays uncommitted."""
+        raises before the marker, so the round stays uncommitted. A
+        ``seen_full`` artifact goes through the bucketed writer, and
+        ``meta.seen_bucketed`` is stamped to say whether one did."""
+        artifacts = artifacts or {}
+        meta.seen_bucketed = "seen_full" in artifacts
         if artifacts:
             # one thread per artifact: the writes are KB-scale latency-bound
             # jobs, so each write's tail back-fills the cores the others
@@ -210,43 +218,31 @@ class RoundStore:
         with open(self._p(k, "meta.json")) as f:
             return RoundMeta.from_json(f.read())
 
-    def _stamp_seen_bucketed(self, k: int) -> None:
-        """Set seen_bucketed in an already-committed round's meta (compaction
-        runs post-commit). Atomic replace; a crash before the stamp merely
-        degrades the next resume to the plain (Exchange-ful) read path."""
-        m = self.meta(k)
-        m.seen_bucketed = True
-        tmp = self._p(k, "_meta_tmp.json")
-        with open(tmp, "w") as f:
-            f.write(m.to_json())
-        os.replace(tmp, self._p(k, "meta.json"))
-
     # -- writers ------------------------------------------------------------
     def write(self, k: int, name: str, df: DataFrame) -> None:
-        df.write.mode("overwrite").parquet(self._p(k, name))
+        if name == "seen_full":
+            self._write_seen_full(k, df)
+        else:
+            df.write.mode("overwrite").parquet(self._p(k, name))
 
-    def write_seen_full(self, spark: SparkSession, k: int, seen: DataFrame) -> None:
+    def _write_seen_full(self, k: int, seen: DataFrame) -> None:
         """Write the consolidated seen base: bucketed + sorted by url, one
         file per bucket (``repartition(B, url)`` feeds ``bucketBy(B, url)``
-        the same murmur3 pmod), landed via atomic rename. Idempotent."""
-        final = self._p(k, "seen_full")
-        if os.path.exists(final):
-            return
-        tmp = self._p(k, "_seen_full_tmp")
-        shutil.rmtree(tmp, ignore_errors=True)
+        the same murmur3 pmod). ``bucketBy`` needs a catalog table; it is
+        external, so its files survive the drop."""
+        spark = seen.sparkSession
         tmp_tbl = f"graven_seen_tmp_{self._digest}_{k:06d}"
         spark.sql(f"DROP TABLE IF EXISTS {tmp_tbl}")
         (
             seen.repartition(self.seen_buckets, F.col("url"))
             .write.mode("overwrite")
-            .option("path", tmp)
+            .option("path", self._p(k, "seen_full"))
             .bucketBy(self.seen_buckets, "url")
             .sortBy("url")
             .format("parquet")
             .saveAsTable(tmp_tbl)
         )
-        spark.sql(f"DROP TABLE {tmp_tbl}")  # external: files survive the drop
-        os.rename(tmp, final)
+        spark.sql(f"DROP TABLE {tmp_tbl}")
 
     # -- readers ------------------------------------------------------------
     def _read(self, spark: SparkSession, path: str, schema: str) -> DataFrame:
@@ -262,22 +258,17 @@ class RoundStore:
         pure write amplification at a 10^10-URL frontier). The merge is one
         tiny groupBy over (generations × buckets) rows. ``None`` when there
         is no full set, or it is in the old ``(bucket, filter)`` layout."""
-        full_k = self.newest("shards", k)
+        full_k, deltas = self._chain("shards", "shards_delta", k)
         if full_k is None:
             return None
         full = spark.read.parquet(self._p(full_k, "shards"))
         if "longs" not in full.columns:
             return None
-        parts = [full]
-        for j in range(full_k + 1, k + 1):
-            p = self._p(j, "shards_delta")
-            if os.path.exists(p):
-                parts.append(spark.read.parquet(p))
-        if len(parts) == 1:
-            return parts[0]
+        if not deltas:
+            return full
         from ..operators.bloom import merge_shards
 
-        return merge_shards(*parts)
+        return merge_shards(full, *(spark.read.parquet(p) for p in deltas))
 
     def read_domains(self, spark: SparkSession, k: int) -> DataFrame:
         path = self._p(k, "domains")
@@ -287,12 +278,19 @@ class RoundStore:
 
     def newest(self, name: str, upto_k: int) -> int | None:
         """Newest round ≤ upto_k holding artifact ``name`` — the base of an
-        LSM: ``seen_full`` (complete, atomically renamed) or a full
-        ``shards`` set."""
+        LSM: ``seen_full`` or a full ``shards`` set."""
         for k in range(upto_k, -1, -1):
             if os.path.exists(self._p(k, name)):
                 return k
         return None
+
+    def _chain(self, base: str, delta: str, upto_k: int) -> tuple[int | None, list[str]]:
+        """An LSM at round upto_k: the newest round ≤ upto_k holding
+        ``base`` (None if none does) and the ``delta`` paths after it."""
+        kb = self.newest(base, upto_k)
+        start = 0 if kb is None else kb + 1
+        paths = [self._p(j, delta) for j in range(start, upto_k + 1)]
+        return kb, [p for p in paths if os.path.exists(p)]
 
     def compaction_due(self, k: int) -> bool:
         """Whether round k re-baselines both LSMs (seen_full and a full
@@ -313,7 +311,7 @@ class RoundStore:
         (that round's RoundMeta), never the current config: declaring B'≠B
         over B-bucket files would mis-partition the join and silently drop
         anti-join matches on a resume with a changed --seen-buckets."""
-        kb = self.newest("seen_full", upto_k)
+        kb, _ = self._chain("seen_full", "seen_delta", upto_k)
         if kb is None:
             return None
         meta = self.meta(kb)
@@ -321,9 +319,9 @@ class RoundStore:
         tbl = f"graven_seen_{self._digest}_{kb:06d}"
         path = self._p(kb, "seen_full")
         if not meta.seen_bucketed:
-            # a seen_full not stamped by write_seen_full (legacy layout,
-            # foreign writer, or a crash between rename and meta stamp):
-            # still a correct seen base, just joins with an Exchange
+            # a seen_full not stamped by the bucketed writer (written by
+            # older code or a foreign writer): still a correct seen base,
+            # just joins with an Exchange
             return spark.read.schema(SEEN_SCHEMA).parquet(path)
         if not spark.catalog.tableExists(tbl):
             spark.sql(
@@ -337,43 +335,24 @@ class RoundStore:
     def read_seen_deltas(self, spark: SparkSession, upto_k: int) -> DataFrame | None:
         """Per-round seen deltas newer than the base (small: bounded by the
         politeness budget × rounds-since-compaction)."""
-        kb = self.newest("seen_full", upto_k)
-        start = 0 if kb is None else kb + 1
-        paths = [
-            self._p(k, "seen_delta")
-            for k in range(start, upto_k + 1)
-            if os.path.exists(self._p(k, "seen_delta"))
-        ]
+        _, paths = self._chain("seen_full", "seen_delta", upto_k)
         if not paths:
             return None
         return spark.read.schema(SEEN_SCHEMA).parquet(*paths)
 
-    def _seen_paths(self, upto_k: int) -> list[str]:
-        """seen_full at the newest compaction ≤ upto_k, plus deltas after."""
-        paths: list[str] = []
-        kb = self.newest("seen_full", upto_k)
-        base = 0
-        if kb is not None:
-            paths.append(self._p(kb, "seen_full"))
-            base = kb + 1
-        for k in range(base, upto_k + 1):
-            p = self._p(k, "seen_delta")
-            if os.path.exists(p):
-                paths.append(p)
-        return paths
-
     def read_seen(self, spark: SparkSession, upto_k: int) -> DataFrame:
-        return spark.read.schema(SEEN_SCHEMA).parquet(*self._seen_paths(upto_k))
+        """The whole seen set at upto_k: the base plus the deltas after it."""
+        kb, paths = self._chain("seen_full", "seen_delta", upto_k)
+        if kb is not None:
+            paths = [self._p(kb, "seen_full"), *paths]
+        return spark.read.schema(SEEN_SCHEMA).parquet(*paths)
 
     def maybe_compact_seen(self, spark: SparkSession, k: int) -> bool:
-        """Consolidate the seen LSM into round k's bucketed seen_full when
-        ``compaction_due(k)``. Crash-safe (temp dir + atomic rename) and
-        idempotent."""
-        if not self.compaction_due(k) or os.path.exists(self._p(k, "seen_full")):
-            return False
-        self.write_seen_full(spark, k, self.read_seen(spark, k))
-        self._stamp_seen_bucketed(k)
-        return True
+        """No-op that returns False: compaction is a commit artifact now
+        (``run_round`` writes ``seen_full`` in the round that re-baselines).
+        Kept only for callers written against the post-commit compaction;
+        drop it with them."""
+        return False
 
     def read_union(self, spark: SparkSession, name: str, schema: str, upto_k: int) -> DataFrame:
         paths = [self._p(k, name) for k in range(upto_k + 1) if os.path.exists(self._p(k, name))]

@@ -284,6 +284,29 @@ def main() -> int:
         ["HashAggregate", "partial_min"],
     ))
 
+    # 5b. near-duplicate self-joins: both sides of the inverted-index
+    # (n-gram Jaccard) and LSH-band self-joins must be one shuffle exchange,
+    # computed once and reused. Reuse is settled at run time, so the check
+    # reads the AQE final plan after an action.
+    from graven_spark.operators.textops import minhash_lsh_candidates, ngram_jaccard_pairs
+
+    near_docs = spark.createDataFrame([
+        (0, "the quick brown fox jumps over the lazy dog"),
+        (1, "the quick brown fox jumps over the lazy cat"),
+        (2, "the quick brown fox jumps over the lazy dog"),
+        (3, "completely different text about spark shuffles and joins"),
+        (4, "tiny"),
+    ], "doc_id long, text string")
+    for title, near in (
+        ("n-gram Jaccard self-join (AQE final plan)",
+         ngram_jaccard_pairs(near_docs, n=3, threshold=0.3)),
+        ("MinHash LSH band self-join (AQE final plan)",
+         minhash_lsh_candidates(near_docs, n=3, k=16, bands=8)),
+    ):
+        near.collect()
+        final = near._jdf.queryExecution().executedPlan().toString()
+        sections.append((title, final, ["isFinalPlan=true", "SortMergeJoin", "ReusedExchange"]))
+
     # 6. indexed ANN: the persisted SRP index must answer a query by
     # PARTITION PRUNING (PartitionFilters on srp_bucket) — no re-hash of the
     # table, no full scan; and the plan must stay O(1) in embedding dim

@@ -1,6 +1,6 @@
 """Shared fixtures: one local SparkSession per test session, synthetic
-graphs, oracle-input converters and the small Bloom spec the crawl tests
-share."""
+graphs, oracle-input converters, and the small Bloom spec, crawl config and
+pages writer the crawl tests share."""
 
 from __future__ import annotations
 
@@ -13,6 +13,7 @@ import pytest
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 from graven_spark.operators.bloom import BloomSpec  # noqa: E402
+from graven_spark.plans.frontier import CrawlConfig  # noqa: E402
 from graven_spark.session import build_session  # noqa: E402
 from graven_spark.sources import synth  # noqa: E402
 
@@ -54,6 +55,16 @@ def robots_dict(robots: pd.DataFrame) -> dict[str, dict]:
 
 def _bloom(bits: int = 1 << 16, buckets: int = 8) -> BloomSpec:
     return BloomSpec(n_buckets=buckets, bits_per_shard=bits)
+
+
+def _cfg(**kw) -> CrawlConfig:
+    return CrawlConfig(use_bloom=True, bloom=_bloom(buckets=4), **kw)
+
+
+def _write_pages(graph: synth.SiteGraph, tmp_path) -> str:
+    pages_path = str(tmp_path / "pages.parquet")
+    graph.pages.to_parquet(pages_path, index=False)
+    return pages_path
 
 
 @pytest.fixture(scope="session")

@@ -11,6 +11,8 @@ import pytest
 
 from graven_spark.__main__ import main, read_seeds
 
+from .conftest import _write_pages
+
 
 def test_read_seeds_csv_order(spark, tmp_path):
     p = tmp_path / "seeds.csv"
@@ -22,14 +24,18 @@ def test_read_seeds_csv_order(spark, tmp_path):
     ]  # file order = priority (cli_parser.py:246-259 semantics)
 
 
-def test_cli_rejects_bad_bloom_bits(tmp_path, capsys):
-    """A Bloom size the probe cannot serve is a usage error, raised before
-    any Spark session starts."""
+@pytest.mark.parametrize("flag, value, message", [
+    ("--bloom-bits", "3000", "power of two"),
+    ("--jar-limit", "0", "jar_limit must be >= 1"),
+], ids=["bloom_bits", "jar_limit"])
+def test_cli_rejects_bad_bloom_bits(tmp_path, capsys, flag, value, message):
+    """A Bloom size the probe cannot serve, or a config no crawl can finish,
+    is a usage error, raised before any Spark session starts."""
     with pytest.raises(SystemExit) as exc:
         main(["crawl", "--pages", "p", "--seeds", "s", "--state", str(tmp_path),
-              "--bloom-bits", "3000"])
+              flag, value])
     assert exc.value.code == 2
-    assert "power of two" in capsys.readouterr().err
+    assert message in capsys.readouterr().err
 
 
 def test_cli_crawl_and_export(spark, smoke_graph, tmp_path):
@@ -110,3 +116,37 @@ def test_iceberg_shim_gated(spark):
     assert iceberg_available(spark) is False
     with pytest.raises(RuntimeError, match="iceberg-spark-runtime"):
         IcebergSeenTable(spark, "cat.db.seen")
+
+
+def test_cli_run_writes_enrichment_tables(spark, smoke_graph, tmp_path):
+    from graven_spark.__main__ import main
+
+    pages = _write_pages(smoke_graph, tmp_path)
+    seeds_csv = tmp_path / "seeds.csv"
+    seeds_csv.write_text(
+        "\n".join(smoke_graph.seeds.sort_values("seed_rank")["url"]) + "\n"
+    )
+    out_dir = str(tmp_path / "enrich")
+    rc = main([
+        "run", "--pages", pages, "--seeds", str(seeds_csv),
+        "--state", str(tmp_path / "state"), "--out", out_dir,
+        "--bloom-buckets", "4", "--bloom-bits", str(1 << 16),
+    ])
+    assert rc == 0
+    for name in ("jars", "jar_cve", "cve", "cve_cwe", "cwe", "stage_lineage"):
+        assert os.path.exists(os.path.join(out_dir, name)), name
+    jars = spark.read.parquet(os.path.join(out_dir, "jars"))
+    assoc = spark.read.parquet(os.path.join(out_dir, "jar_cve"))
+    assert jars.count() > 0 and assoc.count() > 0
+    # assoc FK side: every assoc jar_id exists in the jar table
+    assert assoc.join(jars, "jar_id", "left_anti").count() == 0
+
+    # `process` re-runs the enrichment stages over the EXISTING crawl state
+    # (reference `graven process`, SURVEY.md §3.3) — same tables out
+    out2 = str(tmp_path / "enrich2")
+    rc = main(["process", "--state", str(tmp_path / "state"), "--out", out2])
+    assert rc == 0
+    assoc2 = spark.read.parquet(os.path.join(out2, "jar_cve"))
+    assert sorted((r.jar_id, r.cve_id) for r in assoc2.collect()) == sorted(
+        (r.jar_id, r.cve_id) for r in assoc.collect()
+    )

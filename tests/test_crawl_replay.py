@@ -8,6 +8,8 @@ domain-lifecycle fold and termination on cyclic link graphs.
 
 from __future__ import annotations
 
+import json
+
 import pandas as pd
 import pytest
 
@@ -16,7 +18,7 @@ from graven_spark.plans.driver import crawl
 from graven_spark.plans.frontier import CrawlConfig
 from graven_spark.operators.bloom import BloomSpec
 
-from .conftest import _bloom, pages_dict, robots_dict
+from .conftest import _bloom, _cfg, _write_pages, pages_dict, robots_dict
 
 FRONTIER_KEY = ["priority", "url", "host", "depth", "parent_url", "discovery_idx"]
 
@@ -252,3 +254,24 @@ def test_cycles_no_url_fetched_twice(smoke_graph):
     err_urls = [e["url"] for e in ora.errors]
     for u in cycle_urls:
         assert err_urls.count(u) == 1
+
+
+def test_error_details_json_context(spark, smoke_graph, tmp_path):
+    """Every error row carries a JSON details object with per-stage context
+    (reference error_log.details): attempt number for crawler fetch
+    failures, parent_url + depth everywhere."""
+    pages_path = _write_pages(smoke_graph, tmp_path)
+    seeds = spark.createDataFrame(smoke_graph.seeds)
+    out = crawl(spark, pages_path, seeds, None, str(tmp_path / "state"),
+                _cfg(max_retries=1))
+    errs = out.errors(spark).collect()
+    assert errs
+    by_stage: dict[str, list[dict]] = {}
+    for r in errs:
+        det = json.loads(r.details)
+        by_stage.setdefault((r.stage, r.reason), []).append(det)
+    dead = by_stage[("crawler", "fetch_failed")]
+    assert {d["attempt"] for d in dead} == {1, 2}  # each retry logs its attempt
+    assert all("depth" in d and "parent_url" in d for d in dead)
+    leaf = by_stage[("download", "fetch_failed")]
+    assert all(d["parent_url"] and d["depth"] >= 1 for d in leaf)

@@ -1,34 +1,50 @@
 """Checkpoint/resume semantics (SURVEY.md §5.3; north_rule: "a killed job
 resumes mid-crawl with identical downstream ordering"). Mirrors the
 reference's status-reset re-claim resume
-(/root/reference/graven/db/graven_database.py:159-165)."""
+(/root/reference/graven/db/graven_database.py:159-165). Also the run_log
+lifecycle, the update (re-process) modes and frontier-size-adaptive round
+batching, which all commit through the same store."""
 
 from __future__ import annotations
 
 import glob
+import json
 import os
 import shutil
 
 import numpy as np
+import pandas as pd
 import pyarrow as pa
 import pyarrow.parquet as pq
+from pyspark.sql import functions as F
 
 from graven_spark.oracle import crawl_oracle
 from graven_spark.plans.driver import crawl
 from graven_spark.plans.frontier import CrawlConfig
-from graven_spark.operators.bloom import BloomSpec
 from graven_spark.sources.checkpoint import RoundStore
 
-from .conftest import _bloom, pages_dict, robots_dict  # noqa: F401
+from .conftest import _bloom, _write_pages, pages_dict, robots_dict  # noqa: F401
 
 
-def _cfg(max_rounds: int = 1000) -> CrawlConfig:
-    return CrawlConfig(
-        use_bloom=True,
-        bloom=BloomSpec(n_buckets=4, bits_per_shard=1 << 16),
-        max_rounds=max_rounds,
-        compact_every=3,  # force a compaction mid-run
-    )
+def _cfg(**kw) -> CrawlConfig:
+    # compact_every=3 forces a compaction mid-run
+    return CrawlConfig(**{"use_bloom": True, "bloom": _bloom(buckets=4),
+                          "compact_every": 3, **kw})
+
+
+def _assert_committed_rounds_immutable(store: RoundStore) -> None:
+    """Nothing writes to a committed round: no file under ``round_k/`` is
+    newer than its ``_COMMIT``, and a round holding a seen base holds no seen
+    delta and a meta that says the base is bucketed."""
+    for k in store.committed_rounds():
+        d = store.round_dir(k)
+        marker = os.stat(os.path.join(d, "_COMMIT")).st_mtime_ns
+        for root, _, files in os.walk(d):
+            for f in files:
+                assert os.stat(os.path.join(root, f)).st_mtime_ns <= marker, (k, root, f)
+        if os.path.exists(os.path.join(d, "seen_full")):
+            assert not os.path.exists(os.path.join(d, "seen_delta")), k
+            assert store.meta(k).seen_bucketed, k
 
 
 def _collect(spark, out):
@@ -222,6 +238,45 @@ def test_uncommitted_seen_full_swept_on_resume(spark, smoke_graph, tmp_path):
     assert "https://bogus.example.com/" not in got
 
 
+# -- run_log (reference /root/reference/ddl/0_run_log.sql) --------------------
+
+def test_run_log_brackets_each_invocation(spark, smoke_graph, tmp_path):
+    pages_path = _write_pages(smoke_graph, tmp_path)
+    seeds = spark.createDataFrame(smoke_graph.seeds)
+    d = str(tmp_path / "state")
+
+    first = crawl(spark, pages_path, seeds, None, d, _cfg(max_rounds=2))
+    second = crawl(spark, pages_path, seeds, None, d, _cfg())
+    rows = {r.seq: r for r in second.run_log(spark).collect()}
+    assert rows[0].exit_status == "OK" and rows[0].start_round == 0
+    assert rows[0].end_round == first.final_round
+    assert rows[1].exit_status == "OK"
+    assert rows[1].start_round == first.final_round
+    assert rows[1].end_round == second.final_round
+    assert rows[0].started_at is not None and rows[0].ended_at is not None
+
+
+def test_run_log_closes_killed_run_on_resume(spark, smoke_graph, tmp_path):
+    """A run that died before its end event (kill -9 analog) is closed as
+    KILLED at the latest committed round by the next invocation."""
+    pages_path = _write_pages(smoke_graph, tmp_path)
+    seeds = spark.createDataFrame(smoke_graph.seeds)
+    d = str(tmp_path / "state")
+
+    truncated = crawl(spark, pages_path, seeds, None, d, _cfg(max_rounds=2))
+    store = RoundStore(d)
+    store.log_run_start("killed_run", truncated.final_round)  # dangling start
+
+    resumed = crawl(spark, pages_path, seeds, None, d, _cfg())
+    rows = {r.seq: r for r in resumed.run_log(spark).collect()}
+    killed = rows[1]
+    assert killed.run_id == "killed_run"
+    assert killed.exit_status == "KILLED"
+    assert killed.end_round == truncated.final_round  # closed at last commit
+    assert rows[2].exit_status == "OK"
+    assert rows[2].end_round == resumed.final_round
+
+
 # -- update (re-process) modes: resume a finished state -------------------------
 
 def test_update_domain_reopens_and_recrawls(spark, smoke_graph, tmp_path):
@@ -245,6 +300,7 @@ def test_update_domain_reopens_and_recrawls(spark, smoke_graph, tmp_path):
     assert sorted((r.url, r.text) for r in second.results(spark).collect()) == want_res
     doms = {r.host: r.status for r in second.domains(spark).collect()}
     assert doms["host0.example.com"] == "COMPLETED"
+    _assert_committed_rounds_immutable(second.store)
 
 
 def test_update_domain_reseeds_normalized_roots(spark, smoke_graph, tmp_path):
@@ -295,3 +351,211 @@ def test_update_jar_restamps_results(spark, smoke_graph, tmp_path):
             assert rnd == first.final_round + 1
         else:
             assert rnd == before[u][1]
+
+
+def test_update_jar_refetch_failure_is_logged(spark, smoke_graph, tmp_path):
+    """--update-jar targets missing from pages must produce fetch_failed
+    error rows (not silently keep the stale result row without trace)."""
+    pages_path = _write_pages(smoke_graph, tmp_path)
+    seeds = spark.createDataFrame(smoke_graph.seeds)
+    d = str(tmp_path / "state")
+    first = crawl(spark, pages_path, seeds, None, d, _cfg())
+    res = first.results(spark).select("url").collect()
+    prefix = "https://host0.example.com/maven2/d0s0/"
+    victims = sorted(r.url for r in res if r.url.startswith(prefix))
+    assert victims
+
+    # drop one recorded result url from pages, then update-jar the prefix
+    pages2 = smoke_graph.pages[smoke_graph.pages.url != victims[0]]
+    pages2_path = str(tmp_path / "pages2.parquet")
+    pages2.to_parquet(pages2_path, index=False)
+    second = crawl(spark, pages2_path, seeds, None, d,
+                   _cfg(update_url_prefix=prefix))
+    errs = [
+        r for r in second.errors(spark).collect()
+        if r.round == first.final_round + 1
+    ]
+    assert [r.url for r in errs] == [victims[0]]
+    det = json.loads(errs[0].details)
+    assert det == {"stage_ctx": "update_jar", "prefix": prefix}
+    # the stale row is retained (newest-wins keeps the old round's row)
+    before = {r.url: r.round for r in first.results(spark).collect()}
+    after = {r.url: r.round for r in second.results(spark).collect()}
+    assert after[victims[0]] == before[victims[0]]
+
+
+def test_update_domain_new_host_stamped_immediately(spark, smoke_graph, tmp_path):
+    """An --update-domain host whose seed is new (no prior domain row) gets
+    its IN_PROGRESS/start_round row in the SAME transition round, not one
+    round late."""
+    pages_path = _write_pages(smoke_graph, tmp_path)
+    seeds = spark.createDataFrame(smoke_graph.seeds)
+    d = str(tmp_path / "state")
+    first = crawl(spark, pages_path, seeds, None, d, _cfg())
+    k1 = first.final_round
+
+    # second host appears only in the update invocation's seed list
+    host2 = "host9.example.com"
+    seeds2 = spark.createDataFrame(
+        pd.concat([
+            smoke_graph.seeds,
+            pd.DataFrame([{"seed_rank": len(smoke_graph.seeds), "url": f"https://{host2}/maven2/"}]),
+        ], ignore_index=True)
+    )
+    store = RoundStore(d)
+    from graven_spark.plans.driver import _reopen_domains
+
+    meta = _reopen_domains(
+        spark, store, k1, seeds2, None,
+        _cfg(update_domains=["host0.example.com", host2]),
+    )
+    doms = {r.host: (r.status, r.start_round)
+            for r in store.read_domains(spark, meta.round).collect()}
+    assert doms["host0.example.com"] == ("IN_PROGRESS", k1 + 1)
+    assert doms[host2] == ("IN_PROGRESS", k1 + 1)  # new host: not a round late
+
+
+# -- frontier-size-adaptive round batching (SURVEY.md §7.4.5) -----------------
+
+def _chain_graph(depth: int):
+    """A depth-N chain (fanout 1): every dir has exactly one child dir and
+    one leaf — the worst case for per-depth commit overhead."""
+    import datetime as dt
+
+    from graven_spark.core import extract_text_py
+    from graven_spark.sources.synth import SiteGraph, _dir_html
+
+    rows = []
+    url = "https://chain.example.com/maven2/"
+    for d in range(depth):
+        child = f"d{d}/"
+        leaf = f"art{d}-1.0.jar"
+        html = _dir_html([child] if d < depth - 1 else [], [leaf], url)
+        rows.append({
+            "url": url, "warc_ts": dt.datetime(2025, 1, 1),
+            "html": html.encode(), "text": extract_text_py(html), "lang": "en",
+        })
+        leaf_html = f"<html><body><p>doc {d}</p></body></html>"
+        rows.append({
+            "url": url + leaf, "warc_ts": dt.datetime(2025, 1, 1),
+            "html": leaf_html.encode(),
+            "text": extract_text_py(leaf_html), "lang": "en",
+        })
+        url = url + child
+    pages = pd.DataFrame(rows)
+    pages["warc_ts"] = pages["warc_ts"].astype("datetime64[us]")
+    return SiteGraph(
+        pages=pages,
+        seeds=pd.DataFrame([{"seed_rank": 0, "url": "https://chain.example.com/maven2"}]),
+        robots=pd.DataFrame(
+            [{"host": "chain.example.com", "disallow_prefixes": [],
+              "crawl_delay_tokens": 100}]
+        ),
+    )
+
+
+def test_adaptive_batching_deep_chain(spark, tmp_path):
+    """Depth-40 chain: batching must commit ≪ 40 round dirs while producing
+    the identical seen set / results (incl. logical round stamps) / errors /
+    lineage as the oracle."""
+    from graven_spark.oracle import crawl_oracle
+
+    from .conftest import pages_dict
+
+    depth = 40
+    graph = _chain_graph(depth)
+    pages_path = _write_pages(graph, tmp_path)
+    seeds = spark.createDataFrame(graph.seeds)
+    cfg = _cfg(batch_threshold=64, max_batch_rounds=16, compact_every=8)
+    out = crawl(spark, pages_path, seeds, None, str(tmp_path / "state"), cfg)
+    ora = crawl_oracle(pages_dict(graph.pages), [graph.seeds.url[0]])
+
+    store = out.store
+    committed = store.committed_rounds()
+    assert out.final_round == depth  # logical rounds preserved
+    assert len(committed) <= depth // cfg.max_batch_rounds + 2  # dirs ≪ depth
+    # strided commits keep one cadence for both LSMs: a full shard set after
+    # round 0 comes with its seen base, and no delta chain reaches the interval
+    full_shards = [k for k in committed if store.newest("shards", k) == k]
+    assert all(store.newest("seen_full", k) == k for k in full_shards if k > 0)
+    assert all(k - store.newest("shards", k) < cfg.compact_every for k in committed)
+    _assert_committed_rounds_immutable(store)
+
+    assert {r.url for r in out.seen(spark).collect()} == ora.seen
+    got_res = sorted(
+        (r.url, r.text, r.depth, r.round) for r in out.results(spark).collect()
+    )
+    want_res = sorted(
+        (r["url"], r["text"], r["depth"], r["round"]) for r in ora.results
+    )
+    assert got_res == want_res
+    lin = {
+        r["round"]: (r["urls_in"], r["urls_out"], r["bytes_fetched"])
+        for r in ora.lineage
+    }
+    got_lin = {
+        r.round: (r.n_in, r.n_out, r.n_bytes)
+        for r in out.lineage(spark).groupBy("round").agg(
+            F.sum("urls_in").alias("n_in"),
+            F.sum("urls_out").alias("n_out"),
+            F.sum("bytes_fetched").alias("n_bytes"),
+        ).collect()
+    }
+    assert got_lin == lin
+
+
+def test_adaptive_batching_equals_plain_on_mini_graph(spark, tmp_path):
+    """Batched and unbatched runs over the same multi-host graph produce
+    identical seen/results/errors/domains/lineage (per-logical-round)."""
+    from graven_spark.sources import synth
+
+    graph = synth.generate_graph(synth.mini_specs())
+    pages_path = _write_pages(graph, tmp_path)
+    seeds = spark.createDataFrame(graph.seeds)
+    plain = crawl(spark, pages_path, seeds, None, str(tmp_path / "plain"), _cfg())
+    batched = crawl(
+        spark, pages_path, seeds, None, str(tmp_path / "batched"),
+        _cfg(batch_threshold=10_000, max_batch_rounds=8),
+    )
+    assert len(batched.store.committed_rounds()) < len(plain.store.committed_rounds())
+    assert sorted(r.url for r in plain.seen(spark).collect()) == sorted(
+        r.url for r in batched.seen(spark).collect()
+    )
+    for getter in ("results", "errors", "domains"):
+        p = sorted(tuple(r) for r in getattr(plain, getter)(spark).collect())
+        b = sorted(tuple(r) for r in getattr(batched, getter)(spark).collect())
+        assert p == b, getter
+
+
+def test_batching_resume_mid_batch_crash(spark, tmp_path):
+    """A batch killed before its commit leaves an uncommitted dir at a
+    strided index; resume must sweep it and reproduce the exact outputs."""
+    import shutil
+
+    graph = _chain_graph(24)
+    pages_path = _write_pages(graph, tmp_path)
+    seeds = spark.createDataFrame(graph.seeds)
+    cfg = _cfg(batch_threshold=64, max_batch_rounds=8)
+
+    full = crawl(spark, pages_path, seeds, None, str(tmp_path / "full"), cfg)
+
+    d = str(tmp_path / "crash")
+    crawl(spark, pages_path, seeds, None, d, _cfg(
+        batch_threshold=64, max_batch_rounds=8, max_rounds=8))
+    # simulate a crash mid-batch: a partial uncommitted dir at a strided index
+    store = RoundStore(d)
+    k = store.latest_round()
+    junk = os.path.join(d, f"round_{k + 5:06d}")
+    os.makedirs(os.path.join(junk, "results_delta"), exist_ok=True)
+    with open(os.path.join(junk, "results_delta", "part-0.parquet"), "wb") as f:
+        f.write(b"not parquet")
+
+    resumed = crawl(spark, pages_path, seeds, None, d, cfg)
+    assert not os.path.exists(junk) or os.path.exists(os.path.join(junk, "_COMMIT"))
+    assert sorted(r.url for r in resumed.seen(spark).collect()) == sorted(
+        r.url for r in full.seen(spark).collect()
+    )
+    assert sorted(tuple(r) for r in resumed.results(spark).collect()) == sorted(
+        tuple(r) for r in full.results(spark).collect()
+    )
+    shutil.rmtree(junk, ignore_errors=True)

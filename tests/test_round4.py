@@ -488,8 +488,11 @@ def test_jar_limit_zero_rejected(spark, tmp_path):
     pages = str(tmp_path / "pages.parquet")
     g.pages.to_parquet(pages, index=False)
     seeds = spark.createDataFrame(g.seeds)
+    state = tmp_path / "state"
     with pytest.raises(ValueError, match="jar_limit"):
-        crawl(spark, pages, seeds, None, str(tmp_path / "state"),
+        crawl(spark, pages, seeds, None, str(state),
               CrawlConfig(use_bloom=False, jar_limit=0))
+    # rejected before init_run: nothing was committed
+    assert not list(state.glob("round_*/_COMMIT"))
     with pytest.raises(ValueError, match="jar_limit"):
         crawl_oracle({}, ["https://h/maven2/"], jar_limit=0)
