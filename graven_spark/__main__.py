@@ -345,6 +345,14 @@ def main(argv: list[str] | None = None) -> int:
 
     args = p.parse_args(argv)
     if args.cmd in ("crawl", "run"):
+        # usage errors exit before the session starts
+        if not args.seeds and not args.sitemap_seeds and not args.cdx_seeds:
+            p.error("one of --seeds / --sitemap-seeds / --cdx-seeds is required")
+        if args.sitemap_seeds and not args.robots_rfc:
+            p.error("--sitemap-seeds requires --robots-rfc (sitemaps come "
+                    "from the parsed robots.txt advertisements)")
+        if args.robots and args.robots_rfc:
+            p.error("--robots and --robots-rfc are mutually exclusive")
         update_domains = args.update_domain
         update_prefix = args.update_jar
         if args.update:
@@ -357,7 +365,6 @@ def main(argv: list[str] | None = None) -> int:
             if RoundStore(args.state).latest_round() is not None:
                 update_domains = "*"
                 update_prefix = ""  # every recorded url matches
-        # reject a bad Bloom spec or config before the session starts
         try:
             cfg = CrawlConfig(
                 use_bloom=not args.no_bloom,
@@ -470,15 +477,8 @@ def main(argv: list[str] | None = None) -> int:
         return 0
 
     if args.cmd in ("crawl", "run"):
-        if not args.seeds and not args.sitemap_seeds and not args.cdx_seeds:
-            p.error("one of --seeds / --sitemap-seeds / --cdx-seeds is required")
-        if args.sitemap_seeds and not args.robots_rfc:
-            p.error("--sitemap-seeds requires --robots-rfc (sitemaps come "
-                    "from the parsed robots.txt advertisements)")
         seeds = read_seeds(spark, args.seeds) if args.seeds else None
         if args.robots_rfc:
-            if args.robots:
-                p.error("--robots and --robots-rfc are mutually exclusive")
             from .functions.robots import rules_from_robots_pages
 
             # pin the tiny O(#hosts) rules table once: every round's gate

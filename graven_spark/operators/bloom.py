@@ -2,20 +2,22 @@
 partitioned Bloom/cuckoo filter"; SURVEY.md §4.2.2).
 
 The seen set is split into ``n_buckets`` shards by ``pmod(xxhash64(url), B)``
-— the same bucketing the exact ``seen`` table uses — and each shard is one
-``(bucket int, longs array<bigint>)`` row: the shard's bitarray packed
-little-endian into 64-bit words, so bit ``pos`` is bit ``pos & 63`` of word
-``pos >> 6``. Shards are built/merged distributed (``applyInPandas`` per
-bucket, numpy bitwise ops) and probed by ONE join on ``bucket`` plus a JVM
-bit-test expression — no Python worker on the candidate path.
+— the same bucketing the exact ``seen`` table uses. Each shard is a blocked
+Bloom filter (Putze, Sanders and Singler, 2007): every hash of a url lands
+in one 512-bit block (the whole shard when ``bits_per_shard`` < 512), and a
+shard set is one ``(blk bigint, words array<bigint>)`` row per block that
+holds a url — so a shard delta is sized by the urls it adds. Build, merge
+and probe are Spark built-ins (``bit_or`` aggregates on ``blk``; one join
+on ``blk`` plus one bit-test expression) — no Python worker anywhere.
 
-Probe semantics: bloom-negative ⇒ definitely new (skips the exact anti-join
-entirely); bloom-positive ⇒ maybe seen ⇒ exact anti-join against the ``seen``
-table decides. Correctness therefore never depends on the filter (tested with
-the filter on/off); it only shrinks the expensive join's input.
+Probe semantics: ``maybe_seen`` false ⇒ definitely new. Admission uses it
+as a residual condition of the exact anti-join, so correctness never
+depends on the filter (tested with the filter on/off).
 
-Hashing: double hashing h_i = h1 + i*h2 (mod m_bits) over two JVM-computed
-xxhash64 values — k memberships per URL, no Python hashing.
+Hashing (:func:`_layout`, the one bit-layout formula): ``_h1`` picks the
+bucket; ``_h2``'s high 32 bits pick the block within the shard, its bits
+0-8 the first in-block position and its bits 16-24 the odd double-hashing
+step.
 
 Reference parity: replaces the row-at-a-time UNIQUE-key probe at
 /root/reference/graven/db/graven_database.py:103-115.
@@ -24,17 +26,16 @@ Reference parity: replaces the row-at-a-time UNIQUE-key probe at
 from __future__ import annotations
 
 from dataclasses import dataclass
+from functools import reduce
 
-import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-SHARD_SCHEMA = "bucket int, longs array<bigint>"
 _H2_SALT = "graven_spark.bloom.h2"
+BLOCK_WORDS = 8  # a 512-bit block: one 64-byte cache line
 # Total filter size up to which the probe broadcasts the shards; above it
 # (the 10^10-URL filter is tens of GB) the shards stay distributed and the
-# candidates shuffle to them on ``bucket``.
+# candidates shuffle to them on ``blk``.
 BROADCAST_LIMIT = 256 << 20
 
 
@@ -45,8 +46,7 @@ class BloomSpec:
     n_hashes: int = 7
 
     def __post_init__(self) -> None:
-        # whole 64-bit words, and numpy's ``% bits`` must equal the JVM's
-        # ``& (bits - 1)`` mask — both need a power of two >= 64
+        # whole 64-bit words and whole blocks (or one): a power of two >= 64
         bits = self.bits_per_shard
         if bits < 64 or bits & (bits - 1):
             raise ValueError(f"bloom bits_per_shard must be a power of two >= 64, got {bits}")
@@ -70,38 +70,44 @@ def with_bloom_hashes(df: DataFrame, url_col: str = "url", spec: BloomSpec | Non
     )
 
 
-def _bit_positions(h1: np.ndarray, h2: np.ndarray, spec: BloomSpec) -> np.ndarray:
-    """(n, k) array of bit indexes via double hashing, uint64 wraparound ok."""
-    h1 = h1.astype(np.uint64)
-    h2 = h2.astype(np.uint64) | np.uint64(1)  # force odd step
-    ks = np.arange(spec.n_hashes, dtype=np.uint64)
-    return ((h1[:, None] + ks[None, :] * h2[:, None]) % np.uint64(spec.bits_per_shard)).astype(np.int64)
+def _layout(spec: BloomSpec) -> tuple[str, list[str]]:
+    """SQL over :func:`with_bloom_hashes`' columns: a url's block id and its
+    in-block bit positions. Operands are masked before the multiply-add, so
+    ANSI mode never sees an overflow."""
+    bits = min(spec.bits_per_shard, 64 * BLOCK_WORDS)
+    blocks = spec.bits_per_shard // bits
+    mask = f"{bits - 1}L"
+    blk = f"(CAST(bucket AS BIGINT) * {blocks}L + (shiftrightunsigned(_h2, 32) & {blocks - 1}L))"
+    first = f"(_h2 & {mask})"
+    step = f"((shiftrightunsigned(_h2, 16) | 1L) & {mask})"
+    return blk, [f"(({first} + {i}L * {step}) & {mask})" for i in range(spec.n_hashes)]
 
 
 def build_shards(urls: DataFrame, spec: BloomSpec, url_col: str = "url") -> DataFrame:
-    """Distributed shard build: one (bucket, longs) row per non-empty bucket."""
-
-    def build(pdf: pd.DataFrame) -> pd.DataFrame:
-        words = np.zeros(spec.bits_per_shard // 64, dtype=np.uint64)
-        pos = _bit_positions(pdf["_h1"].to_numpy(), pdf["_h2"].to_numpy(), spec).ravel()
-        np.bitwise_or.at(words, pos >> 6, np.left_shift(np.uint64(1), (pos & 63).astype(np.uint64)))
-        return pd.DataFrame({"bucket": [int(pdf["bucket"].iloc[0])], "longs": [words.view(np.int64)]})
-
+    """Distributed shard build: one (blk, words) row per non-empty block."""
+    blk, pos = _layout(spec)
+    n_words = min(spec.bits_per_shard // 64, BLOCK_WORDS)
     hashed = with_bloom_hashes(urls.select(url_col), url_col, spec)
-    return hashed.groupBy("bucket").applyInPandas(build, SHARD_SCHEMA)
+    positions = hashed.selectExpr(f"{blk} AS blk", *(f"{p} AS _p{i}" for i, p in enumerate(pos)))
+    words = ", ".join(
+        "bit_or(" + " | ".join(
+            f"IF(shiftright(_p{i}, 6) = {j}, shiftleft(1L, CAST(_p{i} & 63L AS INT)), 0L)"
+            for i in range(spec.n_hashes)
+        ) + ")"
+        for j in range(n_words)
+    )
+    return positions.groupBy("blk").agg(F.expr(f"array({words})").alias("words"))
 
 
 def merge_shards(*shard_dfs: DataFrame) -> DataFrame:
-    """OR together shard generations (old ∪ per-round deltas)."""
-
-    def merge(pdf: pd.DataFrame) -> pd.DataFrame:
-        words = np.bitwise_or.reduce(np.stack(pdf["longs"].to_list()), axis=0)
-        return pd.DataFrame({"bucket": [int(pdf["bucket"].iloc[0])], "longs": [words]})
-
-    unioned = shard_dfs[0]
-    for df in shard_dfs[1:]:
-        unioned = unioned.unionByName(df)
-    return unioned.groupBy("bucket").applyInPandas(merge, SHARD_SCHEMA)
+    """OR together shard generations (old ∪ per-round deltas). Words past a
+    small shard's length are NULL in every row and are dropped."""
+    words = ", ".join(f"bit_or(try_element_at(words, {j + 1}))" for j in range(BLOCK_WORDS))
+    return (
+        reduce(DataFrame.unionByName, shard_dfs)
+        .groupBy("blk")
+        .agg(F.expr(f"filter(array({words}), w -> w IS NOT NULL)").alias("words"))
+    )
 
 
 def probe(
@@ -112,32 +118,25 @@ def probe(
     track: list | None = None,
 ) -> DataFrame:
     """Adds ``maybe_seen`` to ``candidates``: a left join to ``shards`` on
-    ``bucket`` puts each candidate next to its shard's words, then one SQL
-    expression — ``n_hashes`` element_at + shift + mask tests, parsed by a
-    single ``F.expr`` so building it costs one py4j call, not one per Column
-    operation — decides membership (whole-stage codegen, no Python worker;
-    a candidate whose bucket has no shard is not seen). The shards are
-    broadcast when the whole filter (``n_buckets × shard_nbytes``) fits
-    ``BROADCAST_LIMIT``; above it the join shuffles on ``bucket``, so each
-    shard moves once per bucket, not once per candidate.
-
-    Bit positions equal the numpy build side's: ``bits_per_shard`` is a
-    power of two (BloomSpec enforces it), so uint64 wraparound mod 2^m is
-    the JVM mask. ``track`` is accepted and ignored — the benchmark still
-    passes it and destroys whatever it collected."""
-    hashed = with_bloom_hashes(candidates, url_col, spec)
+    ``blk`` puts each candidate next to its block's words, then one SQL
+    expression of ``n_hashes`` bit tests, parsed by a single ``F.expr`` (one
+    py4j call), decides membership; a candidate whose block holds no url is
+    not seen. The shards are broadcast when the whole filter
+    (``n_buckets × shard_nbytes``) fits ``BROADCAST_LIMIT``; above it the
+    join shuffles on ``blk``. ``track`` is accepted and ignored — the
+    benchmark still passes it and destroys whatever it collected."""
+    blk, pos = _layout(spec)
+    hashed = with_bloom_hashes(candidates, url_col, spec).withColumn("blk", F.expr(blk))
     if spec.n_buckets * spec.shard_nbytes <= BROADCAST_LIMIT:
         shards = F.broadcast(shards)
-    joined = hashed.join(shards, "bucket", "left")
-    # Reduce mod 2^m BEFORE the multiply-add: (h1 + k*h2) mod 2^m ==
-    # ((h1 & mask) + k*(h2 & mask)) & mask, and the reduced operands can't
-    # overflow a long — ANSI mode would abort on the raw uint64-wraparound
-    # form. The odd bit of h2 survives the mask.
-    mask = f"{spec.bits_per_shard - 1}L"
-    tests = []
-    for k in range(spec.n_hashes):
-        pos = f"(((_h1 & {mask}) + {k}L * ((_h2 | 1L) & {mask})) & {mask})"
-        word = f"element_at(longs, CAST(shiftright({pos}, 6) + 1 AS INT))"
-        tests.append(f"((shiftright({word}, CAST({pos} & 63L AS INT)) & 1L) = 1L)")
-    maybe = F.expr(f"CASE WHEN longs IS NULL THEN false ELSE {' AND '.join(tests)} END")
-    return joined.withColumn("maybe_seen", maybe).drop("_h1", "_h2", "bucket", "longs")
+    tests = " AND ".join(
+        f"((shiftright(element_at(words, CAST(shiftright({p}, 6) + 1L AS INT)), "
+        f"CAST({p} & 63L AS INT)) & 1L) = 1L)"
+        for p in pos
+    )
+    maybe = F.expr(f"CASE WHEN words IS NULL THEN false ELSE {tests} END")
+    return (
+        hashed.join(shards, "blk", "left")
+        .withColumn("maybe_seen", maybe)
+        .drop("_h1", "_h2", "bucket", "blk", "words")
+    )

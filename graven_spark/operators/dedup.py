@@ -1,4 +1,4 @@
-"""URL-seen dedup: first-occurrence batch dedup + Bloom-prefiltered exact
+"""URL-seen dedup: first-occurrence batch dedup + Bloom-conditioned exact
 anti-join admission (SURVEY.md §2.3 J1, §2.7 U2/U3; reference semantics:
 check-then-insert on a UNIQUE ``uri`` key,
 /root/reference/graven/worker/crawler.py:82-84 +
@@ -60,14 +60,15 @@ def admit_new(
     ``seen`` is the LSM view of the seen set: the big bucketed base plus the
     small recent deltas (pass a list ordered big→small; a single DataFrame
     or None also works). Each part is one conditional anti-join —
-    ``LEFT ANTI ON (url = url AND maybe_seen)`` — so bloom-negative rows
-    (no false negatives possible) are admitted without probing any exact
-    hash table, while bloom-positive suspects get the exact string check
-    against every part. Chaining is cheap: after the first join the
+    ``LEFT ANTI ON (url = url AND maybe_seen)``. ``maybe_seen`` is a
+    residual condition, checked only on url matches: every candidate is
+    still shuffled, sorted and merged against the whole part (the plan is
+    ``SortMergeJoin [url], [_seen_url], LeftAnti, maybe_seen``), so the
+    filter saves no join work. Chaining is cheap: after the first join the
     candidate side is already hash-partitioned on url, so later parts only
     shuffle their own (small) side.
 
-    The Bloom probe (:func:`bloom.probe`) is one join on ``bucket``; it
+    The Bloom probe (:func:`bloom.probe`) is one join on ``blk``; it
     picks broadcast or shuffled shards from the spec's size itself.
     ``track`` is accepted and ignored — the benchmark still passes it.
 

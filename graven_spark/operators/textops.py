@@ -88,12 +88,8 @@ def ngram_jaccard_pairs(
     a = sh.alias("a")
     b = sh.alias("b")
     common = (
-        # merge hint: both sides of the inverted-index self-join become the
-        # IDENTICAL shuffle exchange over `sh`, so ReusedExchange computes
-        # the explode+stop-shingle pass ONCE (a broadcast build side would
-        # recompute it); sort-merge also spills gracefully on a hot shingle
         a.join(
-            b.hint("merge"),
+            b,
             (F.col("a.shingle") == F.col("b.shingle"))
             & (F.col("a.doc_id") < F.col("b.doc_id")),
         )
@@ -145,12 +141,8 @@ def minhash_lsh_candidates(
     a = banded.alias("a")
     b = banded.alias("b")
     return (
-        # merge hint: identical shuffle exchanges on both sides let
-        # ReusedExchange run the shingle-explode + 16-min signature
-        # aggregate ONCE instead of once per join side (the dominant pass
-        # at corpus scale; a broadcast build side defeats the reuse)
         a.join(
-            b.hint("merge"),
+            b,
             (F.col("a.band") == F.col("b.band"))
             & (F.col("a.bucket") == F.col("b.bucket"))
             & (F.col("a.doc_id") < F.col("b.doc_id")),

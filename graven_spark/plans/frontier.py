@@ -3,7 +3,7 @@
     frontier_k → politeness select (token buckets) → global FIFO rank
       → fetch join against pages (broadcast the budget-bounded round set)
       → extract links (JVM regex) → absolutize → batch dedup (first
-        occurrence) → robots gate → Bloom-prefiltered anti-join vs seen
+        occurrence) → robots gate → Bloom-conditioned anti-join vs seen
       → split: dirs → frontier_{k+1} ∪ deferred ∪ retries ; leaves →
         fetch join → extract text (JVM regex) → results
       → seen MERGE (append delta), lineage rows, shard update, domain
@@ -23,8 +23,9 @@ Scale notes (explicitly engineered, SURVEY.md §4.2):
   url-sorted ``seen_full`` base with NO Exchange and NO Sort on the seen
   side (checkpoint.py), then the small post-compaction deltas (candidates
   are already url-partitioned by then — only the delta side moves);
-- ``seen`` is only ever read with column pruning (url) and only probed by
-  the bloom-positive slice;
+- ``seen`` is only ever read with column pruning (url); the Bloom verdict
+  is a residual condition of the anti-join, so every candidate still meets
+  the seen side;
 - per-round parquet round-trip keeps the iterative plan O(1) per round;
   every persisted handle, the Bloom shards included, is released before
   the round returns (nothing accumulates over a long crawl).
@@ -276,8 +277,7 @@ class _RoundFlow:
 
 
 def _round_dataflow(
-    spark: SparkSession,
-    pages_path: str,
+    pages: DataFrame,
     robots: DataFrame | None,
     cfg: CrawlConfig,
     k: int,
@@ -291,6 +291,7 @@ def _round_dataflow(
 ) -> _RoundFlow:
     """The per-depth dataflow for logical round k: politeness select →
     global FIFO rank → fetch join → link explode → admission → split.
+    ``pages``: the pages table, read once per committed transition.
     ``batch_deltas``: urls admitted by earlier depths of the SAME committed
     batch — exact anti-join parts (tiny, AQE-broadcast; they are not Bloom
     -covered, so they must not carry the maybe_seen condition).
@@ -332,9 +333,8 @@ def _round_dataflow(
         n_selected = cfg.jar_limit
 
     # -- fetch join (J2): huge pages scan ⋈ broadcast round set -------------
-    pages = spark.read.parquet(pages_path).select("url", "html")
     fetched = (
-        pages.join(F.broadcast(ranked), "url", "inner")
+        pages.select("url", "html").join(F.broadcast(ranked), "url", "inner")
         .withColumn("page_bytes", F.length("html").cast("long"))
         .withColumn("ext", extract_links(F.col("html")))
         .drop("html")
@@ -439,9 +439,10 @@ def _round_dataflow(
     # so they share no pinned frame (both jobs would compute it): the dead
     # leaves come from a url-only semi-join of pages against the broadcast
     # leaf set, which never reads html
-    pages_full = spark.read.parquet(pages_path).select("url", "warc_ts", "html", "lang")
-    leaf_pages = pages_full.join(F.broadcast(new_leaves), "url", "inner")
-    leaf_urls = pages_full.select("url").join(
+    leaf_pages = pages.select("url", "warc_ts", "html", "lang").join(
+        F.broadcast(new_leaves), "url", "inner"
+    )
+    leaf_urls = pages.select("url").join(
         F.broadcast(new_leaves.select("url")), "url", "left_semi"
     )
     result_cols = [
@@ -552,12 +553,13 @@ def run_round(
 
     flows: list[_RoundFlow] = []
     domains = store.read_domains(spark, k)
+    pages = spark.read.parquet(pages_path)
     priority_base = meta.priority_base
     logical_k = k
     frontier_rows = meta.frontier_count
     while True:
         flow = _round_dataflow(
-            spark, pages_path, robots, cfg, logical_k, priority_base,
+            pages, robots, cfg, logical_k, priority_base,
             frontier, seen_parts, shards,
             batch_deltas=[f.new for f in flows],
             truncate=batching,

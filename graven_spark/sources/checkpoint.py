@@ -42,15 +42,18 @@ a rename: a round directory without ``_COMMIT`` is invisible to resume and
 partial base can never shadow the deltas.
 
 Bloom shards are an LSM too: the newest full ``shards/`` set OR'd with the
-``shards_delta/`` sets after it, each row ``(bucket, longs array<bigint>)``.
-Both LSMs re-baseline by one rule, ``RoundStore.compaction_due``. The Bloom
-spec that built the shard chain is recorded in ``meta.json`` (a transition
+``shards_delta/`` sets after it, each row one 512-bit block of a blocked
+Bloom filter, ``(blk bigint, words array<bigint>)``, written only for blocks
+that hold a url — so a delta is sized by the round's new urls. Both LSMs
+re-baseline by one rule, ``RoundStore.compaction_due``. The Bloom spec
+that built the shard chain is recorded in ``meta.json`` (a transition
 that writes no shards carries the previous stamp forward); a resume with a
 different spec (or with the filter toggled on) must rebuild shards from the
 full seen set, never trust mismatched ones (false negatives in the
 conditional anti-join would silently admit duplicates). A state whose full
-shards predate the packed-longs layout (``bucket, filter binary``) reads as
-having no shards, so it is rebuilt the same way.
+shards predate the blocked layout — the dense ``(bucket, longs)`` or the
+older ``(bucket, filter)`` one — reads as having no shards, so it is rebuilt
+the same way.
 
 Reading a round always goes through parquet, which also truncates the
 iterative plan lineage: every round's Spark plan has constant size.
@@ -256,13 +259,13 @@ class RoundStore:
         the per-round shard deltas after it (the same LSM shape as the seen
         set — a full rewrite of a tens-of-GB filter every round would be
         pure write amplification at a 10^10-URL frontier). The merge is one
-        tiny groupBy over (generations × buckets) rows. ``None`` when there
-        is no full set, or it is in the old ``(bucket, filter)`` layout."""
+        groupBy over the blocks the generations hold. ``None`` when there
+        is no full set, or it predates the ``(blk, words)`` layout."""
         full_k, deltas = self._chain("shards", "shards_delta", k)
         if full_k is None:
             return None
         full = spark.read.parquet(self._p(full_k, "shards"))
-        if "longs" not in full.columns:
+        if not {"blk", "words"} <= set(full.columns):
             return None
         if not deltas:
             return full

@@ -21,7 +21,7 @@ from pyspark.sql import functions as F
 from graven_spark.functions.canon import host_of, url_hash
 from graven_spark.functions.extract import extract_links
 from graven_spark.operators import bloom
-from graven_spark.operators.bloom import BloomSpec, build_shards
+from graven_spark.operators.bloom import BloomSpec, build_shards, merge_shards
 from graven_spark.operators.dedup import admit_new, first_occurrence
 from graven_spark.operators.politeness import select_round, select_round_bytes
 from graven_spark.operators.textops import exact_dedup
@@ -54,9 +54,9 @@ def _tree(plan: str) -> str:
 
 def without_shard_side(plan: str) -> list[str]:
     """The plan's tree lines minus the Bloom probe join's shard side (the
-    right child of the ``LeftOuter`` join on bucket). Building or merging
-    shards runs pandas UDFs and a bucket shuffle by design; the checks
-    below are about the candidate/seen path."""
+    right child of the ``LeftOuter`` join on blk). Merging a shard chain is
+    a ``bit_or`` aggregate with its own shuffle on blk by design; the
+    Exchange count below is about the candidate/seen path."""
     tree = _tree(plan).splitlines()
     j = next(i for i, ln in enumerate(tree) if "LeftOuter" in ln)
     child = _marker(tree[j]) + 3
@@ -154,7 +154,7 @@ def main() -> int:
     # "disabled by query planner"). The audit pins the SCALE plan — the one
     # a 10^10-row base gets — by ruling out auto-broadcast for this section.
     # The probe's strategy is the spec's choice, not the session's: the
-    # shards broadcast at this spec size, and shuffle on bucket when the
+    # shards broadcast at this spec size, and shuffle on blk when the
     # filter is over bloom.BROADCAST_LIMIT (forced to 0 for the second plan).
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", -1)
     shards2 = store.read_shards(spark, kf)
@@ -195,11 +195,11 @@ def main() -> int:
     ]
     for label, plan, join in (("broadcast", eng_plan, "BroadcastHashJoin LeftOuter"),
                               ("shuffled", eng_shuffled_plan, "SortMergeJoin LeftOuter")):
-        found = [n for n in PYTHON_NODES if any(n in ln for ln in without_shard_side(plan))]
+        found = [n for n in PYTHON_NODES if n in plan]
         extra += [
-            (f"engine admission, {label} Bloom probe: a {join} on bucket", join in plan),
+            (f"engine admission, {label} Bloom probe: a {join} on blk", join in plan),
             (f"engine admission, {label} Bloom probe: zero {'/'.join(PYTHON_NODES)} "
-             f"nodes outside the shard side; found {found or 'none'}", not found),
+             f"nodes, shard side included; found {found or 'none'}", not found),
         ]
     sections.append((
         "ENGINE admission (RoundStore bucketed seen_full base + deltas)",
@@ -212,6 +212,21 @@ def main() -> int:
         ["LeftAnti", "SortMergeJoin LeftOuter"],
     ))
     EXTRA_CHECKS.extend(extra)
+
+    # 3c. what a commit does with the shards: a delta built from the new
+    # urls, merged into the stored chain — Spark built-ins only
+    shard_plan = formatted(merge_shards(shards2, build_shards(cand2, spec)))
+    found = [n for n in PYTHON_NODES if n in shard_plan]
+    EXTRA_CHECKS.append((
+        f"Bloom shard build + merge: zero {'/'.join(PYTHON_NODES)} nodes; "
+        f"found {found or 'none'}",
+        not found,
+    ))
+    sections.append((
+        "Bloom shard build + merge (bit_or aggregates on blk)",
+        shard_plan,
+        ["HashAggregate", "bit_or"],
+    ))
 
     # 4. politeness threshold selection. The robots frame comes from a
     # Python list, so it plans as a `Scan ExistingRDD` (every read forks

@@ -38,6 +38,24 @@ def test_cli_rejects_bad_bloom_bits(tmp_path, capsys, flag, value, message):
     assert message in capsys.readouterr().err
 
 
+@pytest.mark.parametrize("flags, message", [
+    ([], "one of --seeds / --sitemap-seeds / --cdx-seeds is required"),
+    (["--sitemap-seeds"], "--sitemap-seeds requires --robots-rfc"),
+    (["--seeds", "s", "--robots", "r", "--robots-rfc"],
+     "--robots and --robots-rfc are mutually exclusive"),
+], ids=["no_seeds", "sitemap_without_rfc", "robots_and_rfc"])
+def test_cli_usage_errors_before_session(tmp_path, capsys, monkeypatch, flags, message):
+    """Flag combinations no crawl can run exit 2 before a session starts."""
+    def no_session(**_kw):
+        raise AssertionError("build_session called")
+
+    monkeypatch.setattr("graven_spark.__main__.build_session", no_session)
+    with pytest.raises(SystemExit) as exc:
+        main(["crawl", "--pages", "p", "--state", str(tmp_path), *flags])
+    assert exc.value.code == 2
+    assert message in capsys.readouterr().err
+
+
 def test_cli_crawl_and_export(spark, smoke_graph, tmp_path):
     pages = str(tmp_path / "pages.parquet")
     smoke_graph.pages.to_parquet(pages, index=False)

@@ -3,7 +3,6 @@ first-occurrence dedup, politeness selection, global ranking."""
 
 from __future__ import annotations
 
-import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
@@ -166,48 +165,56 @@ def test_global_rank_sparse_buckets(spark):
 
 
 def _probe_reference(spark, members: list[str], cand: list[str], spec: BloomSpec) -> dict:
-    """Driver-side oracle: a candidate is maybe-seen iff every one of its
-    numpy ``_bit_positions`` was set by some member of its bucket — plain
+    """Driver-side oracle: a plain-Python blocked Bloom filter over the
+    JVM-computed ``_h1``/``_h2``. A candidate is maybe-seen iff every one of
+    its in-block positions was set by some member in the same block — plain
     position sets, independent of how the shards pack their bits."""
+    bits = min(spec.bits_per_shard, 512)
+    blocks = spec.bits_per_shard // bits
 
     def hashed(urls):
         df = spark.createDataFrame([(u,) for u in urls], "url string")
-        rows = bloom.with_bloom_hashes(df, "url", spec).collect()
-        pos = bloom._bit_positions(np.array([r._h1 for r in rows]), np.array([r._h2 for r in rows]), spec)
-        return [(r.url, r.bucket, set(p.tolist())) for r, p in zip(rows, pos)]
+        for r in bloom.with_bloom_hashes(df, "url", spec).collect():
+            h2 = r._h2 % (1 << 64)
+            first, step = h2 % bits, ((h2 >> 16) | 1) % bits
+            blk = r.bucket * blocks + (h2 >> 32) % blocks
+            yield r.url, blk, {(first + i * step) % bits for i in range(spec.n_hashes)}
 
     set_bits: dict[int, set] = {}
-    for _, bucket, pos in hashed(members):
-        set_bits.setdefault(bucket, set()).update(pos)
-    return {url: pos <= set_bits.get(bucket, set()) for url, bucket, pos in hashed(cand)}
+    for _, blk, pos in hashed(members):
+        set_bits.setdefault(blk, set()).update(pos)
+    return {url: pos <= set_bits.get(blk, set()) for url, blk, pos in hashed(cand)}
 
 
 def test_probe_strategies_match_numpy_reference(spark, monkeypatch):
     """The broadcast and the shuffled probe must agree bit for bit with the
-    numpy reference on every url — members AND non-members, so false
-    positives must match too (the dense spec makes ~8% of them). The edge
-    specs — one word and one hash per shard, and 2^24-bit shards — run
-    under ANSI mode, which aborts on any long overflow in the bit test."""
+    plain-Python blocked reference on every url — members AND non-members,
+    so false positives must match too (the dense spec makes ~9% of them) —
+    for one build and for a merge of two builds. The edge specs — one word
+    and one hash per shard, and 2^24-bit shards of 2^15 blocks — run under
+    ANSI mode, which aborts on any long overflow in the bit layout."""
     assert spark.conf.get("spark.sql.ansi.enabled") == "true"
     dense = BloomSpec(n_buckets=4, bits_per_shard=1 << 9, n_hashes=3)
     member_urls = [f"m{i}" for i in range(400)]
     cand_urls = member_urls + [f"x{i}" for i in range(2000)]
     members = spark.createDataFrame([(u,) for u in member_urls], "url string")
     cand = spark.createDataFrame([(u,) for u in cand_urls], "url string")
+    halves = members.filter(F.col("url") < "m2"), members.filter(F.col("url") >= "m2")
     limit = bloom.BROADCAST_LIMIT
     for spec in (dense, BloomSpec(bits_per_shard=64, n_hashes=1),
                  BloomSpec(n_buckets=2, bits_per_shard=1 << 24)):
-        shards = build_shards(members, spec)
         want = _probe_reference(spark, member_urls, cand_urls, spec)
-        monkeypatch.setattr(bloom, "BROADCAST_LIMIT", limit)
-        broadcast = probe(cand, shards, spec)
-        monkeypatch.setattr(bloom, "BROADCAST_LIMIT", 0)
-        shuffled = probe(cand, shards, spec)
-        assert "BroadcastHashJoin" in broadcast._jdf.queryExecution().sparkPlan().toString()
-        assert "SortMergeJoin" in shuffled._jdf.queryExecution().sparkPlan().toString()
-        for probed in (broadcast, shuffled):
-            got = {r.url: r.maybe_seen for r in probed.collect()}
-            assert got == want
+        merged = merge_shards(*(build_shards(h, spec) for h in halves))
+        for shards in (build_shards(members, spec), merged):
+            monkeypatch.setattr(bloom, "BROADCAST_LIMIT", limit)
+            broadcast = probe(cand, shards, spec)
+            monkeypatch.setattr(bloom, "BROADCAST_LIMIT", 0)
+            shuffled = probe(cand, shards, spec)
+            assert "BroadcastHashJoin" in broadcast._jdf.queryExecution().sparkPlan().toString()
+            assert "SortMergeJoin" in shuffled._jdf.queryExecution().sparkPlan().toString()
+            for probed in (broadcast, shuffled):
+                got = {r.url: r.maybe_seen for r in probed.collect()}
+                assert got == want
         assert all(want[u] for u in member_urls)  # no false negatives
         if spec == dense:
             false_pos = sum(want[u] for u in cand_urls[len(member_urls):])
@@ -215,9 +222,9 @@ def test_probe_strategies_match_numpy_reference(spark, monkeypatch):
 
 
 def test_bloom_spec_rejects_invalid_sizes():
-    """Sizes the packed-longs probe cannot serve fail at construction: a
-    shard must hold whole 64-bit words, and numpy's ``%`` only equals the
-    JVM's mask for a power of two."""
+    """Sizes the blocked layout cannot serve fail at construction: a shard
+    must hold whole 64-bit words, and either whole 512-bit blocks or one
+    block, so every in-block position and block index is a mask."""
     for bad in (
         dict(bits_per_shard=3000),
         dict(bits_per_shard=32),

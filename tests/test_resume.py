@@ -83,22 +83,34 @@ def test_kill_and_resume_identical(spark, smoke_graph, tmp_path):
     shutil.rmtree(junk, ignore_errors=True)
 
 
-def _to_old_shard_layout(path: str) -> None:
-    """Rewrite a shard artifact as the pre-packed-longs layout: one
-    ``(bucket int, filter binary)`` row per bucket, the same bits as
-    little-endian bytes."""
+def _to_dense_shard_layout(path: str, bits: int) -> None:
+    """Rewrite a shard artifact in the dense layout that preceded blocked
+    shards: one ``(bucket int, longs array<bigint>)`` row per bucket, each
+    block's words at its offset in the bucket's bitarray."""
     t = pq.read_table(path)
-    filters = [np.asarray(w, dtype="<i8").tobytes() for w in t.column("longs").to_pylist()]
-    old = pa.table({"bucket": t.column("bucket"), "filter": pa.array(filters, pa.binary())})
+    blocks, dense = bits // 512, {}
+    for blk, words in zip(t.column("blk").to_pylist(), t.column("words").to_pylist()):
+        longs = dense.setdefault(blk // blocks, np.zeros(bits // 64, dtype="<i8"))
+        longs[(blk % blocks) * 8:][:len(words)] = words
+    old = pa.table({"bucket": pa.array(list(dense), pa.int32()),
+                    "longs": pa.array([w.tolist() for w in dense.values()], pa.list_(pa.int64()))})
     shutil.rmtree(path)
     os.makedirs(path)
     pq.write_table(old, os.path.join(path, "part-00000.parquet"))
 
 
 def test_resume_over_old_format_shards(spark, smoke_graph, tmp_path):
-    """A state whose shards are in the old ``(bucket, filter)`` layout
+    """A state whose shards are in the dense ``(bucket, longs)`` layout
     resumes by rebuilding them from the seen set (and re-baselining in the
-    new layout) — same seen set as an uninterrupted (oracle) crawl."""
+    blocked ``(blk, words)`` layout) — same seen set as an uninterrupted
+    (oracle) crawl. The older ``(bucket, filter)`` layout reads as no shards
+    too."""
+    legacy = RoundStore(str(tmp_path / "legacy"))
+    os.makedirs(legacy._p(0, "shards"))
+    pq.write_table(pa.table({"bucket": pa.array([0], pa.int32()), "filter": [b"\xff" * 8]}),
+                   os.path.join(legacy._p(0, "shards"), "part-00000.parquet"))
+    assert legacy.read_shards(spark, 0) is None
+
     pages_path = str(tmp_path / "pages.parquet")
     smoke_graph.pages.to_parquet(pages_path, index=False)
     seeds = spark.createDataFrame(smoke_graph.seeds)
@@ -108,18 +120,20 @@ def test_resume_over_old_format_shards(spark, smoke_graph, tmp_path):
     )
 
     part_dir = str(tmp_path / "part")
+    cfg = _cfg()
     crawl(spark, pages_path, seeds, None, part_dir, _cfg(max_rounds=2))
     old = sorted(glob.glob(os.path.join(part_dir, "round_*", "shards*")))
     assert old
     for path in old:
-        _to_old_shard_layout(path)
+        _to_dense_shard_layout(path, cfg.bloom.bits_per_shard)
     assert RoundStore(part_dir).read_shards(spark, 2) is None
 
-    resumed = crawl(spark, pages_path, seeds, None, part_dir, _cfg())
+    resumed = crawl(spark, pages_path, seeds, None, part_dir, cfg)
     assert set(_collect(spark, resumed)[0]) == uninterrupted.seen
     last_full = RoundStore(part_dir).newest("shards", resumed.final_round)
     assert last_full > 2
-    assert "longs" in spark.read.parquet(os.path.join(part_dir, f"round_{last_full:06d}", "shards")).columns
+    cols = spark.read.parquet(os.path.join(part_dir, f"round_{last_full:06d}", "shards")).columns
+    assert sorted(cols) == ["blk", "words"]
 
 
 # -- Bloom spec mismatch / toggle on resume ------------------------------------
