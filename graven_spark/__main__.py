@@ -222,8 +222,6 @@ def main(argv: list[str] | None = None) -> int:
                        help="adaptive round batching: when the frontier has "
                             "fewer rows than this, process multiple depths "
                             "per commit (0 = one commit per depth)")
-        c.add_argument("--batch-max", type=int, default=16,
-                       help="max depths per committed batch")
 
     add_crawl_args(sub.add_parser("crawl", help="run/resume a crawl"))
 
@@ -378,7 +376,6 @@ def main(argv: list[str] | None = None) -> int:
                 update_domains=update_domains,
                 update_url_prefix=update_prefix,
                 batch_threshold=args.batch_threshold,
-                max_batch_rounds=args.batch_max,
                 **({"default_budget": args.budget} if args.budget is not None else {}),
             )
         except ValueError as e:

@@ -18,11 +18,6 @@ def canonicalize(url: Column) -> Column:
     return F.when(url.endswith("/"), url).otherwise(F.concat(url, F.lit("/")))
 
 
-def absolutize(parent_url: Column, href: Column) -> Column:
-    """Listing hrefs are relative → child = parent + href (crawler.py:74,80)."""
-    return F.concat(parent_url, href)
-
-
 def host_of(url: Column) -> Column:
     """Authority (netloc) component for politeness grouping.
 

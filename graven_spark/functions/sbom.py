@@ -113,25 +113,14 @@ def fixture_sbom_json_py(jar_id: str) -> str:
 
 
 def compress_column(
-    df: DataFrame, text_col: str, out_col: str, codec_col: str | None = None
+    df: DataFrame, text_col: str, out_col: str, codec_col: str
 ) -> DataFrame:
-    """Arrow-batched compression of a string column into BinaryType.
-    With ``codec_col``, also records the codec THE EXECUTOR actually used
-    next to each blob — the driver's ambient codec can differ from the
-    executors' (env divergence), and the recorded value must describe the
-    bytes, not the driver's imports."""
+    """Arrow-batched compression of a string column into BinaryType, with
+    the codec THE EXECUTOR actually used recorded in ``codec_col`` next to
+    each blob — the driver's ambient codec can differ from the executors'
+    (env divergence), and the recorded value must describe the bytes, not
+    the driver's imports."""
     from pyspark.sql.functions import pandas_udf
-
-    if codec_col is None:
-        from pyspark.sql.types import BinaryType
-
-        @pandas_udf(BinaryType())
-        def _compress(s: pd.Series) -> pd.Series:
-            return s.map(
-                lambda v: None if v is None else compress_bytes(v.encode("utf-8"))
-            )
-
-        return df.withColumn(out_col, _compress(F.col(text_col)))
 
     @pandas_udf("blob binary, codec string")
     def _compress_tagged(s: pd.Series) -> pd.DataFrame:

@@ -33,6 +33,8 @@ from typing import Callable, Iterator
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..sources.checkpoint import error_rows
+
 # Matches the reference's scanner-stage output plus the failure columns the
 # worker would log (exit_code + stderr context).
 SCAN_SCHEMA = "jar_id string, report_json string, exit_code int, error string"
@@ -165,15 +167,10 @@ def split_scan_failures(scanned: DataFrame, run_id: str) -> tuple[DataFrame, Dat
     ok = scanned.filter(F.col("exit_code") == 0).filter(
         F.col("report_json").isNotNull()
     ).select("jar_id", "report_json")
-    failures = scanned.filter(
-        (F.col("exit_code") != 0) | F.col("report_json").isNull()
-    ).select(
-        F.lit(None).cast("int").alias("round"),
-        F.col("jar_id").alias("url"),
-        F.lit("scanner").alias("stage"),
-        F.lit("scan_failed").alias("reason"),
-        F.to_json(F.struct(
-            "exit_code", "error", F.lit(run_id).alias("run_id"),
-        )).alias("details"),
+    failures = error_rows(
+        scanned.filter((F.col("exit_code") != 0) | F.col("report_json").isNull())
+        .select(F.col("jar_id").alias("url"), "exit_code", "error"),
+        None, "scanner", "scan_failed",
+        "exit_code", "error", F.lit(run_id).alias("run_id"),
     )
     return ok, failures

@@ -32,15 +32,8 @@ from pyspark.sql import functions as F
 from ..functions.canon import host_of
 from ..functions.extract import extract_text
 from ..operators.bloom import build_shards
-from ..sources.checkpoint import RoundMeta, RoundStore
-from .frontier import (
-    CrawlConfig,
-    _seen_delta,
-    init_run,
-    round_meta,
-    run_round,
-    seed_frontier,
-)
+from ..sources.checkpoint import RoundMeta, RoundStore, error_rows
+from .frontier import CrawlConfig, init_run, round_meta, run_round, seed_frontier
 
 
 @dataclass
@@ -109,7 +102,7 @@ def _reopen_domains(
         .join(hosts_df, "host", "left_anti")
         .drop("host")
     )
-    seen_next = purged.unionByName(_seen_delta(reseed))
+    seen_next = purged.unionByName(reseed.select("url"))
     next_frontier = store.read_frontier(spark, k).unionByName(reseed)
     store.mark_updated()  # the re-crawl re-emits result rows for purged urls
     # Stamp IN_PROGRESS for every host that actually got frontier rows at
@@ -173,13 +166,10 @@ def _update_urls(
     # a recorded result url gone from pages re-fetches as a failure: log it
     # (the reference logs re-fetch failures too, crawler.py:119-125) instead
     # of silently keeping the stale result row without trace
-    refetch_failed = joined.filter(F.col("_hit").isNull()).select(
-        F.lit(k + 1).alias("round"), "url",
-        F.lit("crawler").alias("stage"), F.lit("fetch_failed").alias("reason"),
-        F.to_json(F.struct(
-            F.lit("update_jar").alias("stage_ctx"),
-            F.lit(cfg.update_url_prefix).alias("prefix"),
-        )).alias("details"),
+    refetch_failed = error_rows(
+        joined.filter(F.col("_hit").isNull()), k + 1, "crawler", "fetch_failed",
+        F.lit("update_jar").alias("stage_ctx"),
+        F.lit(cfg.update_url_prefix).alias("prefix"),
     )
     store.mark_updated()
     next_meta = replace(meta, round=k + 1)

@@ -69,14 +69,6 @@ def flatten_grype(reports: DataFrame, json_col: str = "report_json") -> DataFram
     )
 
 
-MAVEN_ROOT = "https://repo1.maven.org/maven2/"
-
-
-def strip_prefix(url: Column, prefix: str = MAVEN_ROOT) -> Column:
-    """uri = url minus the repo root (graven_database.py:114)."""
-    return F.regexp_replace(url, "^" + prefix.replace(".", "\\."), "")
-
-
 def parse_gav(uri: Column) -> list[Column]:
     """uri 'g/r/o/u/p/artifact/version/artifact-version.jar' →
     (group_id dotted, artifact_id, version, jar_name)

@@ -41,23 +41,28 @@ queue).
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import asdict, dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..core import LISTING_TS_SPARK_FORMAT, PRIORITY_STRIDE, SEED_PRIORITY_BASE
-from ..functions.canon import canonicalize, host_of, url_hash
+from ..functions.canon import canonicalize, host_of
 from ..functions.extract import extract_links, extract_text
 from ..operators.bloom import BloomSpec, build_shards, merge_shards
 from ..operators.dedup import admit_new, first_occurrence
 from ..operators.politeness import DEFAULT_BUDGET, gate_robots, select_round
 from ..operators.ranking import with_global_rank
-from ..sources.checkpoint import SEEN_BUCKETS_DEFAULT, RoundMeta, RoundStore
+from ..sources.checkpoint import SEEN_BUCKETS_DEFAULT, RoundMeta, RoundStore, error_rows
 
 FRONTIER_COLS = [
     "url", "host", "depth", "priority", "parent_url", "discovery_idx", "retry_count",
 ]
+
+# Frontier-size-adaptive round batching (SURVEY.md §7.4.5): a batched
+# transition runs at most this many logical depths in memory before its one
+# commit (``CrawlConfig.batch_threshold`` turns batching on).
+MAX_BATCH_ROUNDS = 16
 
 
 @dataclass
@@ -87,14 +92,13 @@ class CrawlConfig:
     normalize_urls: bool = False
     seen_buckets: int = SEEN_BUCKETS_DEFAULT
     # Frontier-size-adaptive round batching (SURVEY.md §7.4.5): when the
-    # frontier holds fewer than batch_threshold rows, up to max_batch_rounds
+    # frontier holds fewer than batch_threshold rows, up to MAX_BATCH_ROUNDS
     # logical depths are processed IN MEMORY before one parquet round-trip +
     # commit — deep, narrow crawl tails (chain graphs, retry dribbles) stop
     # paying per-depth driver/commit overhead. 0 = off (one commit per
     # depth). Logical round stamps, priorities and lineage are preserved
     # exactly; only the per-depth frontier *snapshots* are skipped.
     batch_threshold: int = 0
-    max_batch_rounds: int = 16
     # --update-domain analog: hosts to purge from seen + re-seed on resume.
     # The sentinel "*" (the -u/--update CLI flag) re-opens EVERY recorded
     # host by joining against the domains table — never a collected list,
@@ -119,12 +123,6 @@ class CrawlConfig:
             )
 
 
-def _seen_delta(new_urls: DataFrame) -> DataFrame:
-    return new_urls.select(
-        url_hash(F.col("url")).alias("url_hash"), "url"
-    )
-
-
 def round_meta(
     cfg: CrawlConfig, k: int, priority_base: int, frontier_count: int
 ) -> RoundMeta:
@@ -132,16 +130,12 @@ def round_meta(
     ``cfg.bloom`` — every transition that writes shards builds them from the
     config. A transition that writes none carries its predecessor's meta
     forward instead, so the stamp always describes the chain on disk."""
-    on = cfg.use_bloom
     return RoundMeta(
         round=k,
         priority_base=priority_base,
         frontier_count=frontier_count,
         seen_buckets=cfg.seen_buckets,
-        bloom_on=on,
-        bloom_buckets=cfg.bloom.n_buckets if on else 0,
-        bloom_bits=cfg.bloom.bits_per_shard if on else 0,
-        bloom_hashes=cfg.bloom.n_hashes if on else 0,
+        bloom=asdict(cfg.bloom) if cfg.use_bloom else None,
     )
 
 
@@ -194,12 +188,7 @@ def validated_shards(
     baseline, since the stored delta chain carries the old spec."""
     if not cfg.use_bloom:
         return None, False
-    spec_ok = (
-        meta.bloom_on
-        and meta.bloom_buckets == cfg.bloom.n_buckets
-        and meta.bloom_bits == cfg.bloom.bits_per_shard
-        and meta.bloom_hashes == cfg.bloom.n_hashes
-    )
+    spec_ok = meta.bloom == asdict(cfg.bloom)
     shards = store.read_shards(spark, k) if spec_ok else None
     if shards is None:
         return build_shards(store.read_seen(spark, k), cfg.bloom), True
@@ -240,19 +229,15 @@ def init_run(
     cfg: CrawlConfig,
 ) -> RoundMeta:
     """Seed admission → round 0 state (reference: crawler.py:189-203; seed
-    file order is the inter-root priority, cli_parser.py:246-259)."""
-    frontier0 = seed_frontier(seeds, robots, cfg)
-
-    store.write(0, "frontier", frontier0)
-    frontier0 = store.read_frontier(spark, 0)
+    file order is the inter-root priority, cli_parser.py:246-259). The
+    seeded frontier is checkpointed once, so every artifact of the commit
+    derives from the same rows."""
+    store.clean_uncommitted(0)
+    frontier0 = seed_frontier(seeds, robots, cfg).localCheckpoint(eager=True)
     artifacts = {
-        "seen_delta": _seen_delta(frontier0),
-        "domains": frontier0.select("host").distinct().select(
-            "host",
-            F.lit("IN_PROGRESS").alias("status"),
-            F.lit(0).alias("start_round"),
-            F.lit(None).cast("int").alias("end_round"),
-        ),
+        "frontier": frontier0,
+        "seen_delta": frontier0.select("url"),
+        "domains": _domains_step(store.read_domains(spark, 0), frontier0, 0),
     }
     if cfg.use_bloom:
         artifacts["shards"] = build_shards(frontier0, cfg.bloom)
@@ -349,23 +334,18 @@ def _round_dataflow(
     )
     # error ``details``: per-stage JSON context (reference error_log.details,
     # /root/reference/ddl/error_log.sql; to_json omits null fields)
-    errors_dead = failed.select(
-        F.lit(k).alias("round"), "url",
-        F.lit("crawler").alias("stage"), F.lit("fetch_failed").alias("reason"),
-        F.to_json(F.struct(
-            (F.col("retry_count") + 1).alias("attempt"),
-            "parent_url", "depth",
-        )).alias("details"),
+    errors_dead = error_rows(
+        failed, k, "crawler", "fetch_failed",
+        (F.col("retry_count") + 1).alias("attempt"), "parent_url", "depth",
     )
     retries = (
         failed.filter(F.col("retry_count") < F.lit(cfg.max_retries))
         .withColumn("retry_count", F.col("retry_count") + 1)
         .select(*FRONTIER_COLS)
     )
-    errors_parse = fetched.filter(F.col("ext.parse_failed")).select(
-        F.lit(k).alias("round"), "url",
-        F.lit("crawler").alias("stage"), F.lit("parse_failed").alias("reason"),
-        F.to_json(F.struct("parent_url", "depth")).alias("details"),
+    errors_parse = error_rows(
+        fetched.filter(F.col("ext.parse_failed")), k, "crawler", "parse_failed",
+        "parent_url", "depth",
     )
 
     # -- link explode + absolutize + priority arithmetic (P1/P3, core.py) ---
@@ -457,13 +437,9 @@ def _round_dataflow(
     results = leaf_pages.withColumn(
         "text", extract_text(F.col("html"))
     ).select(*result_cols)
-    errors_dead_leaf = (
-        new_leaves.join(F.broadcast(leaf_urls), "url", "left_anti")
-        .select(
-            F.lit(k).alias("round"), "url",
-            F.lit("download").alias("stage"), F.lit("fetch_failed").alias("reason"),
-            F.to_json(F.struct("parent_url", "depth")).alias("details"),
-        )
+    errors_dead_leaf = error_rows(
+        new_leaves.join(F.broadcast(leaf_urls), "url", "left_anti"),
+        k, "download", "fetch_failed", "parent_url", "depth",
     )
 
     # -- lineage (A1-A3): per-partition rows --------------------------------
@@ -526,7 +502,7 @@ def run_round(
 
     Normally that is exactly one logical depth (commit round_{k+1}). With
     ``cfg.batch_threshold > 0`` and a frontier smaller than it, up to
-    ``cfg.max_batch_rounds`` logical depths run back-to-back in memory and
+    ``MAX_BATCH_ROUNDS`` logical depths run back-to-back in memory and
     commit ONCE at round_{k+n} — same results/errors/lineage/priority
     arithmetic per logical round, one parquet round-trip and one commit for
     the whole batch. The batch stops early when the frontier empties, grows
@@ -549,7 +525,7 @@ def run_round(
         shards = shards.persist()
 
     batching = 0 < meta.frontier_count < cfg.batch_threshold
-    max_inner = cfg.max_batch_rounds if batching else 1
+    max_inner = MAX_BATCH_ROUNDS if batching else 1
 
     flows: list[_RoundFlow] = []
     domains = store.read_domains(spark, k)
@@ -570,9 +546,9 @@ def run_round(
         logical_k += 1
         domains = _domains_step(domains, flow.next_frontier, logical_k)
         # batched mode chains one lazy union + groupBy per inner depth onto
-        # the domains frame; --batch-max is user-settable, and chained
-        # iterative plans are this repo's documented driver-OOM pitfall —
-        # truncate the lineage every few depths (tiny data: one row per host)
+        # the domains frame, and chained iterative plans are this repo's
+        # documented driver-OOM pitfall — truncate the lineage every few
+        # depths (tiny data: one row per host)
         if batching and len(flows) % 4 == 0:
             domains = domains.localCheckpoint(eager=True)
         frontier = flow.next_frontier
@@ -613,10 +589,10 @@ def run_round(
     due = store.compaction_due(commit_k)
     if due:
         artifacts["seen_full"] = store.read_seen(spark, k).unionByName(
-            _seen_delta(all_new)
+            all_new.select("url")
         )
     else:
-        artifacts["seen_delta"] = _seen_delta(all_new)
+        artifacts["seen_delta"] = all_new.select("url")
     if cfg.use_bloom:
         # a full merged shard baseline is also re-materialized after a
         # spec-change rebuild (the stored chain carries the old spec)

@@ -43,6 +43,7 @@ from dataclasses import dataclass
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..sources.checkpoint import ERRORS_SCHEMA
 from .driver import CrawlOutputs, crawl
 from .enrich import (
     cve_cwe_assoc,
@@ -425,9 +426,7 @@ def enrich_from_results(
         reports, scan_errors = split_scan_failures(scanned, run_id)
     else:
         reports = scanned
-        scan_errors = spark.createDataFrame(
-            [], "round int, url string, stage string, reason string, details string"
-        )
+        scan_errors = spark.createDataFrame([], ERRORS_SCHEMA)
     matches = flatten_grype(reports)
     jar_cve = jar_cve_assoc(matches, run_id)
     ids = matches.select(F.col("vuln_id").alias("cve_id")).distinct()

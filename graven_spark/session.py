@@ -2,8 +2,10 @@
 
 Local-mode knobs follow the public Spark tuning guidance: shuffle partitions
 ≈ cores (not 200), AQE on (skew-join splitting + partition coalescing),
-Arrow on for the pandas-UDF hot path, UTC everywhere (driver JVM, session,
-and Python workers) so parquet/DuckDB/oracle timestamp comparisons agree.
+Arrow on for the pandas UDFs off the crawl path (scanner, SBOM codec,
+robots/sitemap/WARC/media readers) and pandas conversions, UTC everywhere
+(driver JVM, session, and Python workers) so parquet/DuckDB/oracle
+timestamp comparisons agree. Link and text extraction are JVM expressions.
 """
 
 from __future__ import annotations
@@ -39,10 +41,10 @@ def build_session(
         .config("spark.sql.adaptive.enabled", "true")
         # InferFiltersFromGenerate turns posexplode(extract_links(html))
         # into an inferred `size(extract_links(html).links) > 0` filter that
-        # predicate-pushdown then moves BELOW the fetch join — running the
-        # Arrow UDF over the whole pages table a second time and breaking
-        # the bucketed scan's output partitioning. Generator input here is
-        # always a UDF result, so the inference is a pure pessimization.
+        # predicate-pushdown then moves BELOW the fetch join — a second
+        # extract_links pass (the JVM regex walk) over the whole pages
+        # table. Generator input here is always an extraction result, so
+        # the inference is a pure pessimization.
         .config(
             "spark.sql.optimizer.excludedRules",
             "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate",

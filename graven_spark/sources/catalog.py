@@ -54,7 +54,7 @@ class IcebergSeenTable:
         self.ident = ident
         spark.sql(
             f"CREATE TABLE IF NOT EXISTS {ident} "
-            f"(url_hash BIGINT, url STRING) USING iceberg "
+            f"(url STRING) USING iceberg "
             f"PARTITIONED BY (bucket({buckets}, url))"
         )
 
@@ -67,7 +67,7 @@ class IcebergSeenTable:
         delta.createOrReplaceTempView("_graven_seen_delta")
         self.spark.sql(
             f"MERGE INTO {self.ident} t USING "
-            "(SELECT DISTINCT url_hash, url FROM _graven_seen_delta) s "
+            "(SELECT DISTINCT url FROM _graven_seen_delta) s "
             "ON t.url = s.url WHEN NOT MATCHED THEN INSERT *"
         )
 

@@ -18,11 +18,16 @@ Layout (round k's directory holds the state *entering* round k):
         seen_full/ shards/     # of seen_delta/, full shards/ in place of
                                # shards_delta/
 
-Every transition commits through ``RoundStore.commit(k, meta, artifacts)``:
-the ``name → DataFrame`` artifacts are written concurrently, then
-``meta.json``, then ``_COMMIT``. Nothing writes into a round after its
-marker; the one artifact written before the commit on its own is the seeded
-frontier, which ``init_run`` reads back to seed the other artifacts.
+Every round, the seeded one included, commits through
+``RoundStore.commit(k, meta, artifacts)``: the ``name → DataFrame``
+artifacts are written concurrently, then ``meta.json``, then ``_COMMIT``.
+Nothing else writes into a round directory, and nothing writes into a round
+after its marker.
+
+This module defines every crawl-state format: the artifact schemas below,
+``RoundMeta`` and the error-row builder ``error_rows``. A seen row is one
+``url`` (older states also carry the url's 64-bit hash; readers project
+``url`` by name).
 
 ``seen`` is an LSM: a bucketed, sorted ``seen_full`` base plus the
 per-round ``seen_delta`` parquet files after it. The base is written with
@@ -46,14 +51,15 @@ Bloom shards are an LSM too: the newest full ``shards/`` set OR'd with the
 Bloom filter, ``(blk bigint, words array<bigint>)``, written only for blocks
 that hold a url — so a delta is sized by the round's new urls. Both LSMs
 re-baseline by one rule, ``RoundStore.compaction_due``. The Bloom spec
-that built the shard chain is recorded in ``meta.json`` (a transition
-that writes no shards carries the previous stamp forward); a resume with a
-different spec (or with the filter toggled on) must rebuild shards from the
-full seen set, never trust mismatched ones (false negatives in the
-conditional anti-join would silently admit duplicates). A state whose full
-shards predate the blocked layout — the dense ``(bucket, longs)`` or the
-older ``(bucket, filter)`` one — reads as having no shards, so it is rebuilt
-the same way.
+that built the shard chain is recorded in ``meta.json`` as one ``bloom``
+stamp, the spec's fields as a dict (a transition that writes no shards
+carries the previous stamp forward). A resume whose spec differs from the
+stamp (the filter toggled on, or a meta written before the stamp existed)
+must rebuild shards from the full seen set, never trust mismatched ones
+(false negatives in the conditional anti-join would silently admit
+duplicates). A state whose full shards predate the blocked layout — the
+dense ``(bucket, longs)`` or the older ``(bucket, filter)`` one — reads as
+having no shards, so it is rebuilt the same way.
 
 Reading a round always goes through parquet, which also truncates the
 iterative plan lineage: every round's Spark plan has constant size.
@@ -70,7 +76,7 @@ import shutil
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 _ROUND_RE = re.compile(r"^round_(\d{6})$")
@@ -79,7 +85,8 @@ FRONTIER_SCHEMA = (
     "url string, host string, depth int, priority bigint, "
     "parent_url string, discovery_idx int, retry_count int"
 )
-SEEN_SCHEMA = "url_hash bigint, url string"
+# older seen files also hold a hash column; readers project url by name
+SEEN_SCHEMA = "url string"
 RESULTS_SCHEMA = (
     "url string, warc_ts timestamp, text string, lang string, "
     "depth int, round int, publish_ts timestamp"
@@ -89,6 +96,19 @@ RESULTS_SCHEMA = (
 # debug context per error) — built with to_json(struct(...)), null fields
 # omitted, so each stage ships its own context keys.
 ERRORS_SCHEMA = "round int, url string, stage string, reason string, details string"
+
+
+def error_rows(df: DataFrame, k: int | None, stage: str, reason: str,
+               *details: Column | str) -> DataFrame:
+    """``df``'s ``url`` rows as ERRORS_SCHEMA rows of round ``k`` (None for
+    rows outside the crawl), ``details`` = to_json(struct(*details))."""
+    return df.select(
+        F.lit(k).cast("int").alias("round"), "url",
+        F.lit(stage).alias("stage"), F.lit(reason).alias("reason"),
+        F.to_json(F.struct(*details)).alias("details"),
+    )
+
+
 # Folded run-lifecycle rows (reference run_log,
 # /root/reference/ddl/0_run_log.sql + graven_database.py:353-377: one row
 # per invocation, start/end stamps + exit_code INTEGER + tool metadata
@@ -127,10 +147,9 @@ class RoundMeta:
     # naming change or a foreign writer would fool into declaring wrong
     # bucket metadata.
     seen_bucketed: bool = False
-    bloom_on: bool = False
-    bloom_buckets: int = 0
-    bloom_bits: int = 0
-    bloom_hashes: int = 0
+    # ``dataclasses.asdict`` of the BloomSpec that built the round's shard
+    # chain; None when the chain has no shards
+    bloom: dict | None = None
 
     def to_json(self) -> str:
         return json.dumps(self.__dict__)
@@ -144,15 +163,16 @@ class RoundMeta:
 class RoundStore:
     def __init__(self, root: str, compact_every: int = 8,
                  seen_buckets: int = SEEN_BUCKETS_DEFAULT):
-        self.root = root
+        # absolute: Spark resolves a relative table path against
+        # spark.sql.warehouse.dir (and a file path against the JVM's working
+        # dir), where the existence checks here would never find it
+        self.root = os.path.abspath(root)
         self.compact_every = compact_every
         self.seen_buckets = seen_buckets
-        os.makedirs(root, exist_ok=True)
+        os.makedirs(self.root, exist_ok=True)
         # Catalog identifiers for this store's bucketed base tables must be
         # unique per state dir (tests run many crawls in one session).
-        self._digest = hashlib.md5(
-            os.path.abspath(root).encode("utf-8")
-        ).hexdigest()[:10]
+        self._digest = hashlib.md5(self.root.encode("utf-8")).hexdigest()[:10]
 
     # -- paths ------------------------------------------------------------
     def round_dir(self, k: int) -> str:
@@ -211,7 +231,7 @@ class RoundStore:
             # wall time; one thread each measured 24.6 → 21.5-22.4 s
             # full_crawl against a 4-wide pool)
             with ThreadPoolExecutor(max_workers=len(artifacts)) as pool:
-                list(pool.map(lambda nd: self.write(k, *nd), artifacts.items()))
+                list(pool.map(lambda nd: self._write(k, *nd), artifacts.items()))
         with open(self._p(k, "meta.json"), "w") as f:
             f.write(meta.to_json())
         with open(self._p(k, "_COMMIT"), "w") as f:
@@ -222,7 +242,7 @@ class RoundStore:
             return RoundMeta.from_json(f.read())
 
     # -- writers ------------------------------------------------------------
-    def write(self, k: int, name: str, df: DataFrame) -> None:
+    def _write(self, k: int, name: str, df: DataFrame) -> None:
         if name == "seen_full":
             self._write_seen_full(k, df)
         else:
@@ -328,7 +348,7 @@ class RoundStore:
             return spark.read.schema(SEEN_SCHEMA).parquet(path)
         if not spark.catalog.tableExists(tbl):
             spark.sql(
-                f"CREATE TABLE {tbl} (url_hash BIGINT, url STRING) "
+                f"CREATE TABLE {tbl} (url STRING) "
                 f"USING PARQUET CLUSTERED BY (url) SORTED BY (url) "
                 f"INTO {buckets} BUCKETS LOCATION '{path}'"
             )

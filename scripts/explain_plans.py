@@ -113,9 +113,7 @@ def main() -> int:
         .withColumn("priority", url_hash(F.col("url")))
         .withColumn("host", host_of(F.col("url")))
     )
-    seen = spark.createDataFrame(
-        [(0, u) for u in graph.pages.url.tail(30)], "url_hash long, url string"
-    )
+    seen = spark.createDataFrame([(u,) for u in graph.pages.url.tail(30)], "url string")
     spec = BloomSpec(n_buckets=4, bits_per_shard=1 << 12)
     shards = build_shards(seen, spec)
     adm = admit_new(first_occurrence(cand), seen, shards, spec)

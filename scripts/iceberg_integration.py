@@ -58,9 +58,6 @@ def main() -> int:
     spark = build_session(master="local[4]", shuffle_partitions=4,
                           extra_conf=conf)
 
-    from pyspark.sql import functions as F
-
-    from graven_spark.functions.canon import url_hash
     from graven_spark.sources.catalog import IcebergSeenTable, iceberg_available
 
     if not iceberg_available(spark):
@@ -71,9 +68,7 @@ def main() -> int:
     tbl = IcebergSeenTable(spark, "ice.graven.seen", buckets=buckets)
 
     def delta(urls):
-        return spark.createDataFrame(
-            [(u,) for u in urls], "url string"
-        ).select(url_hash(F.col("url")).alias("url_hash"), "url")
+        return spark.createDataFrame([(u,) for u in urls], "url string")
 
     b1 = [f"https://h{i % 4}.example.com/maven2/d{i}/" for i in range(64)]
     b2 = b1[32:] + [f"https://h{i % 4}.example.com/maven2/x{i}/" for i in range(32)]

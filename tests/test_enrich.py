@@ -45,13 +45,6 @@ def test_parse_gav_reference_split(spark):
     assert row.jar_name == "mylib-2.1.0.jar"
 
 
-def test_strip_prefix(spark):
-    df = spark.createDataFrame(
-        [("https://repo1.maven.org/maven2/a/b/c.jar",)], "url string"
-    )
-    assert df.select(enrich.strip_prefix(F.col("url")).alias("u")).head().u == "a/b/c.jar"
-
-
 NVD = {
     "vulnerabilities": [
         {

@@ -7,6 +7,7 @@ batching, which all commit through the same store."""
 
 from __future__ import annotations
 
+import dataclasses
 import glob
 import json
 import os
@@ -20,8 +21,8 @@ from pyspark.sql import functions as F
 
 from graven_spark.oracle import crawl_oracle
 from graven_spark.plans.driver import crawl
-from graven_spark.plans.frontier import CrawlConfig
-from graven_spark.sources.checkpoint import RoundStore
+from graven_spark.plans.frontier import MAX_BATCH_ROUNDS, CrawlConfig
+from graven_spark.sources.checkpoint import DOMAINS_SCHEMA, RoundMeta, RoundStore
 
 from .conftest import _bloom, _write_pages, pages_dict, robots_dict  # noqa: F401
 
@@ -99,12 +100,34 @@ def _to_dense_shard_layout(path: str, bits: int) -> None:
     pq.write_table(old, os.path.join(path, "part-00000.parquet"))
 
 
+def _to_old_meta_and_seen(root: str) -> None:
+    """Rewrite every committed round the way older code wrote it: the Bloom
+    stamp as four ``bloom_*`` meta fields, seen rows as ``(url_hash, url)``."""
+    for meta_path in glob.glob(os.path.join(root, "round_*", "meta.json")):
+        with open(meta_path) as f:
+            meta = json.load(f)
+        spec = meta.pop("bloom") or {}
+        meta.update(bloom_on=bool(spec), bloom_buckets=spec.get("n_buckets", 0),
+                    bloom_bits=spec.get("bits_per_shard", 0),
+                    bloom_hashes=spec.get("n_hashes", 0))
+        with open(meta_path, "w") as f:
+            json.dump(meta, f)
+    for path in glob.glob(os.path.join(root, "round_*", "seen_delta")):
+        urls = pq.read_table(path).column("url")
+        shutil.rmtree(path)
+        os.makedirs(path)
+        hashes = pa.array([0] * len(urls), pa.int64())
+        pq.write_table(pa.table({"url_hash": hashes, "url": urls}),
+                       os.path.join(path, "part-00000.parquet"))
+
+
 def test_resume_over_old_format_shards(spark, smoke_graph, tmp_path):
-    """A state whose shards are in the dense ``(bucket, longs)`` layout
-    resumes by rebuilding them from the seen set (and re-baselining in the
-    blocked ``(blk, words)`` layout) — same seen set as an uninterrupted
-    (oracle) crawl. The older ``(bucket, filter)`` layout reads as no shards
-    too."""
+    """A state written by older code — shards in the dense ``(bucket,
+    longs)`` layout, four-field Bloom stamps in ``meta.json``, ``(url_hash,
+    url)`` seen deltas — resumes by rebuilding the shards from the seen set
+    once (re-baselining in the blocked ``(blk, words)`` layout) — same seen
+    set as an uninterrupted (oracle) crawl. The older ``(bucket, filter)``
+    layout reads as no shards too."""
     legacy = RoundStore(str(tmp_path / "legacy"))
     os.makedirs(legacy._p(0, "shards"))
     pq.write_table(pa.table({"bucket": pa.array([0], pa.int32()), "filter": [b"\xff" * 8]}),
@@ -126,13 +149,24 @@ def test_resume_over_old_format_shards(spark, smoke_graph, tmp_path):
     assert old
     for path in old:
         _to_dense_shard_layout(path, cfg.bloom.bits_per_shard)
-    assert RoundStore(part_dir).read_shards(spark, 2) is None
+    _to_old_meta_and_seen(part_dir)
+    store = RoundStore(part_dir)
+    assert store.read_shards(spark, 2) is None
+    assert store.meta(2).bloom is None  # an old stamp reads as unstamped
+    assert store.read_seen(spark, 2).columns == ["url"]
 
+    # compact_every=4: round 3 is not due, so a full shard set there is the
+    # rebuild, and the rounds after it trust the new stamp
+    cfg = _cfg(compact_every=4)
     resumed = crawl(spark, pages_path, seeds, None, part_dir, cfg)
     assert set(_collect(spark, resumed)[0]) == uninterrupted.seen
-    last_full = RoundStore(part_dir).newest("shards", resumed.final_round)
-    assert last_full > 2
-    cols = spark.read.parquet(os.path.join(part_dir, f"round_{last_full:06d}", "shards")).columns
+    store = resumed.store
+    later = [k for k in store.committed_rounds() if k > 2]
+    assert all(store.meta(k).bloom == dataclasses.asdict(cfg.bloom) for k in later)
+    full_sets = [k for k in later if store.newest("shards", k) == k]
+    assert full_sets[0] == 3
+    assert all(store.compaction_due(k) for k in full_sets[1:]), full_sets
+    cols = spark.read.parquet(os.path.join(part_dir, f"round_{full_sets[-1]:06d}", "shards")).columns
     assert sorted(cols) == ["blk", "words"]
 
 
@@ -250,6 +284,21 @@ def test_uncommitted_seen_full_swept_on_resume(spark, smoke_graph, tmp_path):
     got = sorted(r.url for r in resumed.seen(spark).collect())
     assert got == sorted(r.url for r in full.seen(spark).collect())
     assert "https://bogus.example.com/" not in got
+
+
+def test_relative_root_keeps_seen_base(spark, tmp_path, monkeypatch):
+    """A store opened on a relative path finds the seen base it committed:
+    its paths must not resolve against the session's warehouse dir (the
+    bucketed writer's table path) or the JVM's working directory instead of
+    this process's."""
+    monkeypatch.chdir(tmp_path)
+    store = RoundStore("rel")
+    seen = spark.createDataFrame([(f"https://h/{i}/",) for i in range(5)], "url string")
+    domains = spark.createDataFrame([], DOMAINS_SCHEMA)
+    store.commit(1, RoundMeta(round=1, priority_base=0, frontier_count=0),
+                 {"seen_full": seen, "domains": domains})
+    assert store.newest("seen_full", 1) == 1
+    assert store.read_seen(spark, 1).count() == 5
 
 
 # -- run_log (reference /root/reference/ddl/0_run_log.sql) --------------------
@@ -480,14 +529,14 @@ def test_adaptive_batching_deep_chain(spark, tmp_path):
     graph = _chain_graph(depth)
     pages_path = _write_pages(graph, tmp_path)
     seeds = spark.createDataFrame(graph.seeds)
-    cfg = _cfg(batch_threshold=64, max_batch_rounds=16, compact_every=8)
+    cfg = _cfg(batch_threshold=64, compact_every=8)
     out = crawl(spark, pages_path, seeds, None, str(tmp_path / "state"), cfg)
     ora = crawl_oracle(pages_dict(graph.pages), [graph.seeds.url[0]])
 
     store = out.store
     committed = store.committed_rounds()
     assert out.final_round == depth  # logical rounds preserved
-    assert len(committed) <= depth // cfg.max_batch_rounds + 2  # dirs ≪ depth
+    assert len(committed) <= depth // MAX_BATCH_ROUNDS + 2  # dirs ≪ depth
     # strided commits keep one cadence for both LSMs: a full shard set after
     # round 0 comes with its seen base, and no delta chain reaches the interval
     full_shards = [k for k in committed if store.newest("shards", k) == k]
@@ -529,7 +578,7 @@ def test_adaptive_batching_equals_plain_on_mini_graph(spark, tmp_path):
     plain = crawl(spark, pages_path, seeds, None, str(tmp_path / "plain"), _cfg())
     batched = crawl(
         spark, pages_path, seeds, None, str(tmp_path / "batched"),
-        _cfg(batch_threshold=10_000, max_batch_rounds=8),
+        _cfg(batch_threshold=10_000),
     )
     assert len(batched.store.committed_rounds()) < len(plain.store.committed_rounds())
     assert sorted(r.url for r in plain.seen(spark).collect()) == sorted(
@@ -549,13 +598,13 @@ def test_batching_resume_mid_batch_crash(spark, tmp_path):
     graph = _chain_graph(24)
     pages_path = _write_pages(graph, tmp_path)
     seeds = spark.createDataFrame(graph.seeds)
-    cfg = _cfg(batch_threshold=64, max_batch_rounds=8)
+    cfg = _cfg(batch_threshold=64)
 
     full = crawl(spark, pages_path, seeds, None, str(tmp_path / "full"), cfg)
 
     d = str(tmp_path / "crash")
     crawl(spark, pages_path, seeds, None, d, _cfg(
-        batch_threshold=64, max_batch_rounds=8, max_rounds=8))
+        batch_threshold=64, max_rounds=8))
     # simulate a crash mid-batch: a partial uncommitted dir at a strided index
     store = RoundStore(d)
     k = store.latest_round()

@@ -462,7 +462,7 @@ def test_jar_limit_batched_equals_plain(spark, tmp_path):
 
     plain = crawl(spark, pages, seeds, None, str(tmp_path / "plain"), cfg())
     batched = crawl(spark, pages, seeds, None, str(tmp_path / "batched"),
-                    cfg(batch_threshold=10_000, max_batch_rounds=8))
+                    cfg(batch_threshold=10_000))
     assert len(batched.store.committed_rounds()) < len(plain.store.committed_rounds())
     assert sorted(r.url for r in plain.seen(spark).collect()) == sorted(
         r.url for r in batched.seen(spark).collect()
