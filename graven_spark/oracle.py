@@ -227,7 +227,8 @@ def domains_oracle(run: OracleRun) -> dict[str, tuple[str, int, int | None]]:
     """Fold the frontier snapshots into the expected domain-lifecycle table:
     host → (status, start_round, end_round). A host is IN_PROGRESS while
     present in the frontier; its first absence stamps COMPLETED/end_round;
-    re-discovery re-opens it (frontier.py:_domains_step).
+    re-discovery re-opens it. The engine computes the same table with
+    frontier.py:fold_domains, once per commit over the commit's depths.
 
     Assumes the crawl ran to frontier exhaustion (the trailing empty state);
     for a max_rounds-truncated run compare against the engine's domains at

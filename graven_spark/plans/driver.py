@@ -33,7 +33,9 @@ from ..functions.canon import host_of
 from ..functions.extract import extract_text
 from ..operators.bloom import build_shards
 from ..sources.checkpoint import RoundMeta, RoundStore, error_rows
-from .frontier import CrawlConfig, init_run, round_meta, run_round, seed_frontier
+from .frontier import (
+    CrawlConfig, fold_domains, init_run, round_meta, run_round, seed_frontier,
+)
 
 
 @dataclass
@@ -105,20 +107,10 @@ def _reopen_domains(
     seen_next = purged.unionByName(reseed.select("url"))
     next_frontier = store.read_frontier(spark, k).unionByName(reseed)
     store.mark_updated()  # the re-crawl re-emits result rows for purged urls
-    # Stamp IN_PROGRESS for every host that actually got frontier rows at
-    # k+1 — full-outer against the prior table so an update host with a seed
-    # but NO prior domain row gets its IN_PROGRESS/start_round=k+1 row
-    # immediately (not one round late via _domains_step at k+2).
-    reopened = reseed.select("host").distinct().withColumn("_re", F.lit(True))
-    j = store.read_domains(spark, k).join(reopened, "host", "full")
-    is_re = F.coalesce(F.col("_re"), F.lit(False))
-    domains = j.select(
-        "host",
-        F.when(is_re, F.lit("IN_PROGRESS")).otherwise(F.col("status")).alias("status"),
-        F.when(is_re, F.lit(k + 1)).otherwise(F.col("start_round")).alias("start_round"),
-        F.when(is_re, F.lit(None).cast("int"))
-        .otherwise(F.col("end_round")).alias("end_round"),
-    )
+    # a re-seeded host folds as a new one — start k+1, IN_PROGRESS — also
+    # when it has no prior domain row
+    kept = store.read_domains(spark, k).join(reseed.select("host"), "host", "left_anti")
+    domains = fold_domains(kept, [(k + 1, next_frontier)])
     artifacts = {"frontier": next_frontier, "seen_full": seen_next, "domains": domains}
     if cfg.use_bloom:
         artifacts["shards"] = build_shards(seen_next, cfg.bloom)

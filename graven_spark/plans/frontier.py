@@ -139,41 +139,41 @@ def round_meta(
     )
 
 
-def _domains_step(
-    prev: DataFrame, next_frontier: DataFrame, next_round: int
+def fold_domains(
+    prev: DataFrame, frontiers: list[tuple[int, DataFrame]]
 ) -> DataFrame:
     """Domain lifecycle fold (reference crawl_start/crawl_end stamps +
     COMPLETED gate, /root/reference/graven/db/graven_database.py:188-210):
-    a host is IN_PROGRESS while it has frontier rows; its first absence
-    stamps COMPLETED/end_round; re-discovery re-opens it. Tiny data — one
-    row per host ever seen.
+    the domains table ``prev`` after the consecutive ``(round, frontier)``
+    pairs, oldest first. A host is IN_PROGRESS while it has frontier rows;
+    its first absence stamps COMPLETED/end_round; re-discovery re-opens it.
 
-    One tagged union + one groupBy(host): the round-5 shape
-    (distinct + full-outer join) shuffled three times per depth for the
-    same fold; ``prev`` holds at most one row per host, so max() over the
-    union recovers its fields and max(_f) is the presence test — identical
-    output rows."""
-    u = prev.select(
-        "host", "start_round", "end_round", F.lit(False).alias("_f")
-    ).unionByName(next_frontier.select(
-        "host",
-        F.lit(None).cast("int").alias("start_round"),
-        F.lit(None).cast("int").alias("end_round"), F.lit(True).alias("_f"),
-    ))
+    One tagged union + one groupBy(host) for all the pairs: ``prev`` holds
+    at most one row per host, so max() recovers its fields; a new host
+    starts at its first presence, a host that left ends at its last
+    presence + 1, and one in no listed frontier keeps ``prev``'s end (the
+    first listed round if it was open)."""
+    no_int = F.lit(None).cast("int")
+    u = prev.select("host", "start_round", "end_round", no_int.alias("_r"))
+    for r, frontier in frontiers:
+        u = u.unionByName(frontier.select(
+            "host", no_int.alias("start_round"), no_int.alias("end_round"),
+            F.lit(r).alias("_r"),
+        ))
     agg = u.groupBy("host").agg(
-        F.max("_f").alias("_present"),
+        F.min("_r").alias("_first"),
+        F.max("_r").alias("_last"),
         F.max("start_round").alias("_start"),
         F.max("end_round").alias("_end"),
     )
+    present = F.col("_last") == frontiers[-1][0]
     return agg.select(
         "host",
-        F.when(F.col("_present"), F.lit("IN_PROGRESS"))
-        .otherwise(F.lit("COMPLETED"))
-        .alias("status"),
-        F.coalesce(F.col("_start"), F.lit(next_round)).alias("start_round"),
-        F.when(F.col("_present"), F.lit(None).cast("int"))
-        .otherwise(F.coalesce(F.col("_end"), F.lit(next_round)))
-        .alias("end_round"),
+        F.when(present, "IN_PROGRESS").otherwise("COMPLETED").alias("status"),
+        F.coalesce("_start", "_first").alias("start_round"),
+        F.when(present, no_int).otherwise(
+            F.coalesce(F.col("_last") + 1, "_end", F.lit(frontiers[0][0]))
+        ).alias("end_round"),
     )
 
 
@@ -237,7 +237,7 @@ def init_run(
     artifacts = {
         "frontier": frontier0,
         "seen_delta": frontier0.select("url"),
-        "domains": _domains_step(store.read_domains(spark, 0), frontier0, 0),
+        "domains": fold_domains(store.read_domains(spark, 0), [(0, frontier0)]),
     }
     if cfg.use_bloom:
         artifacts["shards"] = build_shards(frontier0, cfg.bloom)
@@ -528,7 +528,6 @@ def run_round(
     max_inner = MAX_BATCH_ROUNDS if batching else 1
 
     flows: list[_RoundFlow] = []
-    domains = store.read_domains(spark, k)
     pages = spark.read.parquet(pages_path)
     priority_base = meta.priority_base
     logical_k = k
@@ -544,13 +543,6 @@ def run_round(
         flows.append(flow)
         priority_base += flow.n_selected * PRIORITY_STRIDE
         logical_k += 1
-        domains = _domains_step(domains, flow.next_frontier, logical_k)
-        # batched mode chains one lazy union + groupBy per inner depth onto
-        # the domains frame, and chained iterative plans are this repo's
-        # documented driver-OOM pitfall — truncate the lineage every few
-        # depths (tiny data: one row per host)
-        if batching and len(flows) % 4 == 0:
-            domains = domains.localCheckpoint(eager=True)
         frontier = flow.next_frontier
         frontier_rows = flow.next_count
         if (
@@ -580,7 +572,10 @@ def run_round(
         "results_delta": results,
         "errors_delta": errors,
         "lineage": lineage,
-        "domains": domains,
+        # every depth's frontier folds in once, at the commit
+        "domains": fold_domains(store.read_domains(spark, k), [
+            (k + 1 + i, f.next_frontier) for i, f in enumerate(flows)
+        ]),
     }
     # both LSMs write per-round DELTAS (O(new urls) bytes, not O(total) — a
     # 10^10-URL seen set or filter is tens of GB) and re-baseline at one

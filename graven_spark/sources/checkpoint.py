@@ -317,13 +317,14 @@ class RoundStore:
 
     def compaction_due(self, k: int) -> bool:
         """Whether round k re-baselines both LSMs (seen_full and a full
-        shard set): every compact_every rounds — by modulus for the
-        stride-1 commit sequence, or by distance from the previous seen
-        base when batched commits stride past the exact multiples."""
+        shard set): when it is compact_every rounds or more past the
+        previous seen base (round 0 if none). For stride-1 commits that is
+        every compact_every-th round; a batched commit may stride past the
+        multiple, and an --update-domain base restarts the count."""
         if k == 0:
             return False
         kb = self.newest("seen_full", k - 1)
-        return k % self.compact_every == 0 or k - (kb or 0) >= self.compact_every
+        return k - (kb or 0) >= self.compact_every
 
     def read_seen_base(self, spark: SparkSession, upto_k: int) -> DataFrame | None:
         """The bucketed seen base as a catalog table — joins against it read
@@ -347,10 +348,13 @@ class RoundStore:
             # just joins with an Exchange
             return spark.read.schema(SEEN_SCHEMA).parquet(path)
         if not spark.catalog.tableExists(tbl):
+            # a backslash-escaped literal: SQL's doubled '' would parse as
+            # two adjacent string literals
+            loc = path.replace("\\", "\\\\").replace("'", "\\'")
             spark.sql(
                 f"CREATE TABLE {tbl} (url STRING) "
                 f"USING PARQUET CLUSTERED BY (url) SORTED BY (url) "
-                f"INTO {buckets} BUCKETS LOCATION '{path}'"
+                f"INTO {buckets} BUCKETS LOCATION '{loc}'"
             )
         spark.catalog.refreshTable(tbl)
         return spark.table(tbl)

@@ -8,15 +8,19 @@ domain-lifecycle fold and termination on cyclic link graphs.
 
 from __future__ import annotations
 
+import importlib.util
+import itertools
 import json
+from pathlib import Path
 
 import pandas as pd
 import pytest
 
 from graven_spark.oracle import crawl_oracle, domains_oracle
 from graven_spark.plans.driver import crawl
-from graven_spark.plans.frontier import CrawlConfig
+from graven_spark.plans.frontier import CrawlConfig, fold_domains
 from graven_spark.operators.bloom import BloomSpec
+from graven_spark.sources.checkpoint import DOMAINS_SCHEMA
 
 from .conftest import _bloom, _cfg, _write_pages, pages_dict, robots_dict
 
@@ -158,16 +162,50 @@ def test_bloom_off_equals_bloom_on(spark, smoke_graph, tmp_path):
     _assert_match(spark, out_off, ora)
 
 
+def _bare_session(spark):
+    bare = spark.newSession()
+    bare.conf.set("spark.sql.execution.arrow.pyspark.enabled", "false")
+    bare.conf.set("spark.sql.ansi.enabled", "true")
+    return bare
+
+
 def test_replay_session_independent(spark, smoke_graph, tmp_path):
     """The engine's answers must not depend on the session config: a
     Bloom-on crawl in a fresh session with Arrow conversion off and ANSI on
     still replays the oracle."""
-    bare = spark.newSession()
-    bare.conf.set("spark.sql.execution.arrow.pyspark.enabled", "false")
-    bare.conf.set("spark.sql.ansi.enabled", "true")
+    bare = _bare_session(spark)
     cfg = CrawlConfig(use_bloom=True, bloom=BloomSpec(n_buckets=8, bits_per_shard=1 << 16))
     out, ora = _run_both(bare, tmp_path, smoke_graph, with_robots=False, cfg=cfg)
     _assert_match(bare, out, ora)
+
+
+def test_oracle_queries_session_independent(spark):
+    """The crawl and pipeline oracle queries of ``__spark_entry__`` answer
+    the same in a session with Arrow conversion off and ANSI on: each equals
+    its DuckDB oracle, compared as ``scripts/check_oracle.py`` compares."""
+    import duckdb
+
+    import __spark_entry__ as entrymod
+
+    script = Path(__file__).resolve().parent.parent / "scripts" / "check_oracle.py"
+    spec = importlib.util.spec_from_file_location("check_oracle", script)
+    check_oracle = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(check_oracle)
+    bare = _bare_session(spark)
+    oracles, con = entrymod.oracle_sql(), duckdb.connect()
+    entrymod._CRAWL_CACHE.clear()  # the smoke crawl runs in the bare session
+    try:
+        for name in ("crawl_smoke", "domain_lifecycle", "run_pipeline_jars"):
+            got = getattr(entrymod, f"q_{name}")(bare, None).toPandas()
+            got = check_oracle.normalize(got)
+            want = check_oracle.normalize(con.sql(oracles[name]).df())
+            assert list(got.columns) == list(want.columns), name
+            assert len(got) == len(want), name
+            pd.testing.assert_frame_equal(got, want, check_dtype=False,
+                                          check_exact=False, atol=1e-9)
+    finally:
+        con.close()
+        entrymod._CRAWL_CACHE.clear()
 
 
 @pytest.mark.slow
@@ -229,6 +267,45 @@ def test_domains_match_oracle_fold(spark, smoke_graph, tmp_path):
     }
     assert got == domains_oracle(ora)
     assert all(s == "COMPLETED" for s, _, _ in got.values())
+
+
+def test_fold_domains_equals_per_round_fold(spark):
+    """One fold over a batched commit's depths equals one step per depth
+    (the loop of ``oracle.domains_oracle``), for every prior state — no
+    row, open, completed — and every presence pattern over three rounds,
+    re-discovery inside the batch included. No crawl runs."""
+    rounds = [5, 6, 7]
+    priors = {
+        "none": None,
+        "open": ("IN_PROGRESS", 2, None),
+        "done": ("COMPLETED", 1, 3),
+    }
+    prev_rows, present, want = [], {r: [] for r in rounds}, {}
+    for (pname, prior), pattern in itertools.product(
+        priors.items(), itertools.product([False, True], repeat=len(rounds))
+    ):
+        host = f"{pname}-{''.join('x' if p else '.' for p in pattern)}"
+        if prior is not None:
+            prev_rows.append((host, *prior))
+        state = prior
+        for r, p in zip(rounds, pattern):
+            # one step of oracle.domains_oracle's per-round loop
+            if p:
+                present[r] += [(host,), (host,)]  # a host has many frontier rows
+                state = ("IN_PROGRESS", state[1] if state else r, None)
+            elif state is not None:
+                _status, start, end = state
+                state = ("COMPLETED", start, end if end is not None else r)
+        if state is not None:
+            want[host] = state
+    assert len(want) == 23  # every combination but "no row, never present"
+    prev = spark.createDataFrame(prev_rows, DOMAINS_SCHEMA)
+    frontiers = [(r, spark.createDataFrame(present[r], "host string")) for r in rounds]
+    got = {
+        r.host: (r.status, r.start_round, r.end_round)
+        for r in fold_domains(prev, frontiers).collect()
+    }
+    assert got == want
 
 
 def test_cycles_no_url_fetched_twice(smoke_graph):

@@ -301,6 +301,16 @@ def test_relative_root_keeps_seen_base(spark, tmp_path, monkeypatch):
     assert store.read_seen(spark, 1).count() == 5
 
 
+def test_quoted_root_reads_seen_base(spark, tmp_path):
+    """A state dir whose path holds a quote reads its bucketed seen base
+    back: the path is a string literal in the base table's DDL."""
+    store = RoundStore(str(tmp_path / "o'brien"))
+    seen = spark.createDataFrame([(f"https://h/{i}/",) for i in range(5)], "url string")
+    store.commit(1, RoundMeta(round=1, priority_base=0, frontier_count=0),
+                 {"seen_full": seen})
+    assert store.read_seen_base(spark, 1).count() == 5
+
+
 # -- run_log (reference /root/reference/ddl/0_run_log.sql) --------------------
 
 def test_run_log_brackets_each_invocation(spark, smoke_graph, tmp_path):

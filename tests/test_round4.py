@@ -415,31 +415,6 @@ def test_cli_update_flag_recrawls_everything(spark, tmp_path):
     assert res2 == res1
 
 
-def test_cli_stream_drain_and_incremental(spark, smoke_graph, tmp_path):
-    """`stream` drains what exists into committed batch dirs; a second
-    invocation with the same checkpoint picks up only new files (no dupes)."""
-    from graven_spark.__main__ import main
-    from graven_spark.streaming.pipeline import read_stream_sink
-
-    pages_dir = str(tmp_path / "pages")
-    sink = str(tmp_path / "sink")
-    ckpt = str(tmp_path / "ckpt")
-    half = len(smoke_graph.pages) // 2
-    spark.createDataFrame(smoke_graph.pages.iloc[:half]).coalesce(2).write.mode(
-        "append").parquet(pages_dir)
-    assert main(["stream", "--pages", pages_dir, "--sink", sink,
-                 "--checkpoint", ckpt]) == 0
-    assert read_stream_sink(spark, sink).count() == half
-
-    spark.createDataFrame(smoke_graph.pages.iloc[half:]).coalesce(2).write.mode(
-        "append").parquet(pages_dir)
-    assert main(["stream", "--pages", pages_dir, "--sink", sink,
-                 "--checkpoint", ckpt]) == 0
-    out = read_stream_sink(spark, sink)
-    assert out.count() == len(smoke_graph.pages)
-    assert out.select("url").distinct().count() == len(smoke_graph.pages)
-
-
 def test_jar_limit_batched_equals_plain(spark, tmp_path):
     """--jar-limit composes with adaptive round batching: the cap applies
     per LOGICAL depth inside a batch, so batched and unbatched runs with the

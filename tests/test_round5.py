@@ -1,6 +1,6 @@
 """Round-5 additions: artifact bytes into the real scanner (attach_payload),
 per-row sbom codec dispatch, NULL-blob-safe archive export, robust version
-probe, query-id-keyed streaming sink markers, --cve-ref on run/process."""
+probe, --cve-ref on run/process."""
 
 from __future__ import annotations
 
@@ -106,30 +106,6 @@ def test_export_archive_skips_null_blobs_and_uses_codec(tmp_path):
     with zipfile.ZipFile(path) as z:
         got = {n: json.loads(z.read(n)) for n in z.namelist()}
     assert got == {"a.jar.json": {"n": 1}, "z.jar.json": {"n": 2}}
-
-
-# -- streaming sink markers keyed on the query id (ADVICE r4) -----------------
-
-def test_stream_sink_foreign_query_fails_loudly(spark, smoke_graph, tmp_path):
-    from graven_spark.streaming.pipeline import (
-        read_stream_sink,
-        stream_extract_to_sink,
-    )
-
-    pages_dir = str(tmp_path / "pages")
-    sink = str(tmp_path / "sink")
-    spark.createDataFrame(smoke_graph.pages).coalesce(2).write.parquet(pages_dir)
-    q = stream_extract_to_sink(spark, pages_dir, sink, str(tmp_path / "ckptA"))
-    q.awaitTermination()
-    n = read_stream_sink(spark, sink).count()
-    assert n == len(smoke_graph.pages)
-
-    # a FRESH checkpoint restarts batch ids at 0: reusing the sink dir must
-    # fail loudly, not silently skip the new batches into the stale marker
-    q2 = stream_extract_to_sink(spark, pages_dir, sink, str(tmp_path / "ckptB"))
-    with pytest.raises(Exception, match="different streaming query"):
-        q2.awaitTermination()
-    assert read_stream_sink(spark, sink).count() == n  # stale data untouched
 
 
 # -- artifact bytes into the real scanner (VERDICT r4 #1) ---------------------
@@ -306,58 +282,6 @@ def test_cli_process_real_scanner_requires_pages(spark, tmp_path, sha_scanner_bi
     }
 
 
-# -- stream CLI politeness (VERDICT r4 #4) ------------------------------------
-
-def test_cli_stream_budget_windowed(spark, smoke_graph, tmp_path):
-    """`stream --budget N --budget-window W`: per-host admission ≤ N per
-    event-time window, enforced ACROSS micro-batches (files arrive 1 per
-    trigger) and across CLI invocations sharing the checkpoint."""
-    import pandas as pd
-
-    from graven_spark.__main__ import main
-    from graven_spark.streaming.pipeline import read_stream_sink
-
-    win_a = dt.datetime(2025, 1, 1, 10, 0)
-    win_b = dt.datetime(2025, 1, 1, 11, 0)
-    base = smoke_graph.pages.iloc[:16].reset_index(drop=True)
-
-    def group(idx, win, file_no):
-        # one file of 4 same-window rows (event-time order across files:
-        # file order = write order via mtime, so windows advance cleanly)
-        return pd.DataFrame({
-            "url": [f"https://bud.example.com/maven2/f{file_no}p{i}" for i in idx],
-            "warc_ts": [win + dt.timedelta(minutes=file_no * 10 + i) for i in idx],
-            "html": base["html"].iloc[list(idx)].values,
-            "text": base["text"].iloc[list(idx)].values,
-            "lang": base["lang"].iloc[list(idx)].values,
-        })
-
-    pages_dir = str(tmp_path / "pages")
-    sink = str(tmp_path / "sink")
-    ckpt = str(tmp_path / "ckpt")
-    argv = ["stream", "--pages", pages_dir, "--sink", sink,
-            "--checkpoint", ckpt, "--max-files-per-trigger", "1",
-            "--budget", "3", "--budget-window", "1 hour"]
-
-    # invocation 1: one window-A file, then one window-B file (2 triggers)
-    for fno, win in ((0, win_a), (1, win_b)):
-        spark.createDataFrame(group(range(4), win, fno)).coalesce(1).write.mode(
-            "append").parquet(pages_dir)
-    assert main(argv) == 0
-    # 4 rows per window, budget 3 per window ⇒ 3 + 3 admitted
-    assert read_stream_sink(spark, sink).count() == 6
-
-    # invocation 2: 4 MORE rows in each already-exhausted window — the
-    # checkpointed state rejects every one (cross-invocation enforcement)
-    for fno, win in ((2, win_a), (3, win_b)):
-        spark.createDataFrame(group(range(4), win, fno)).coalesce(1).write.mode(
-            "append").parquet(pages_dir)
-    assert main(argv) == 0
-    out = read_stream_sink(spark, sink).collect()
-    assert len(out) == 6
-    assert all(r.text is not None for r in out)
-
-
 # -- de-drivered -u host set (VERDICT r4 #3) ----------------------------------
 
 def test_update_all_sentinel_equals_explicit_host_list(spark, tmp_path):
@@ -506,34 +430,6 @@ def test_null_payload_becomes_error_row_not_scanned(spark, tmp_path):
     # unpinned test plan — the composed run pins `scanned` to one action);
     # the NULL row never reached a subprocess
     assert set(touched.read_text().splitlines()) == {b"BYTES".hex()}
-
-
-def test_stream_sink_legacy_ok_marker_skips_with_no_regression(
-    spark, smoke_graph, tmp_path
-):
-    """Pre-query-id _COMMIT markers ('ok') must not wedge a restart: the
-    batch is skipped exactly as the legacy code would have, and the stale
-    rows stay readable."""
-    from graven_spark.streaming.pipeline import (
-        read_stream_sink,
-        stream_extract_to_sink,
-    )
-
-    pages_dir = str(tmp_path / "pages")
-    sink = str(tmp_path / "sink")
-    spark.createDataFrame(smoke_graph.pages).coalesce(2).write.parquet(pages_dir)
-    q = stream_extract_to_sink(spark, pages_dir, sink, str(tmp_path / "ckptA"))
-    q.awaitTermination()
-    n = read_stream_sink(spark, sink).count()
-    # rewrite every marker to the legacy content
-    for d in os.listdir(sink):
-        with open(os.path.join(sink, d, "_COMMIT"), "w") as f:
-            f.write("ok")
-    # a replay against the legacy markers (fresh checkpoint = same batch
-    # ids) skips instead of raising, leaving the committed rows intact
-    q2 = stream_extract_to_sink(spark, pages_dir, sink, str(tmp_path / "ckptB"))
-    q2.awaitTermination()
-    assert read_stream_sink(spark, sink).count() == n
 
 
 def test_update_domains_bare_string_rejected(spark, tmp_path):

@@ -1,8 +1,14 @@
 """Structured-Streaming surface: file-stream extraction produces the same
-rows as the batch path; watermarked windowed rates aggregate correctly."""
+rows as the batch path; watermarked windowed rates aggregate correctly;
+the host budget holds across micro-batches and CLI invocations; the sink
+commits each batch exactly once, keyed on the query id."""
 
 from __future__ import annotations
 
+import datetime as dt
+import os
+
+import pytest
 from pyspark.sql import functions as F
 
 from graven_spark.sources import synth
@@ -182,3 +188,128 @@ def test_stream_sink_exactly_once_across_kill_and_resume(spark, smoke_graph, tmp
     got = {r.url: r.text for r in sink.collect()}
     want = dict(zip(pages.url, pages.text))
     assert got == want
+
+
+def test_cli_stream_drain_and_incremental(spark, smoke_graph, tmp_path):
+    """`stream` drains what exists into committed batch dirs; a second
+    invocation with the same checkpoint picks up only new files (no dupes)."""
+    from graven_spark.__main__ import main
+    from graven_spark.streaming.pipeline import read_stream_sink
+
+    pages_dir = str(tmp_path / "pages")
+    sink = str(tmp_path / "sink")
+    ckpt = str(tmp_path / "ckpt")
+    half = len(smoke_graph.pages) // 2
+    spark.createDataFrame(smoke_graph.pages.iloc[:half]).coalesce(2).write.mode(
+        "append").parquet(pages_dir)
+    assert main(["stream", "--pages", pages_dir, "--sink", sink,
+                 "--checkpoint", ckpt]) == 0
+    assert read_stream_sink(spark, sink).count() == half
+
+    spark.createDataFrame(smoke_graph.pages.iloc[half:]).coalesce(2).write.mode(
+        "append").parquet(pages_dir)
+    assert main(["stream", "--pages", pages_dir, "--sink", sink,
+                 "--checkpoint", ckpt]) == 0
+    out = read_stream_sink(spark, sink)
+    assert out.count() == len(smoke_graph.pages)
+    assert out.select("url").distinct().count() == len(smoke_graph.pages)
+
+
+def test_cli_stream_budget_windowed(spark, smoke_graph, tmp_path):
+    """`stream --budget N --budget-window W`: per-host admission ≤ N per
+    event-time window, enforced ACROSS micro-batches (files arrive 1 per
+    trigger) and across CLI invocations sharing the checkpoint."""
+    import pandas as pd
+
+    from graven_spark.__main__ import main
+    from graven_spark.streaming.pipeline import read_stream_sink
+
+    win_a = dt.datetime(2025, 1, 1, 10, 0)
+    win_b = dt.datetime(2025, 1, 1, 11, 0)
+    base = smoke_graph.pages.iloc[:16].reset_index(drop=True)
+
+    def group(idx, win, file_no):
+        # one file of 4 same-window rows (event-time order across files:
+        # file order = write order via mtime, so windows advance cleanly)
+        return pd.DataFrame({
+            "url": [f"https://bud.example.com/maven2/f{file_no}p{i}" for i in idx],
+            "warc_ts": [win + dt.timedelta(minutes=file_no * 10 + i) for i in idx],
+            "html": base["html"].iloc[list(idx)].values,
+            "text": base["text"].iloc[list(idx)].values,
+            "lang": base["lang"].iloc[list(idx)].values,
+        })
+
+    pages_dir = str(tmp_path / "pages")
+    sink = str(tmp_path / "sink")
+    ckpt = str(tmp_path / "ckpt")
+    argv = ["stream", "--pages", pages_dir, "--sink", sink,
+            "--checkpoint", ckpt, "--max-files-per-trigger", "1",
+            "--budget", "3", "--budget-window", "1 hour"]
+
+    # invocation 1: one window-A file, then one window-B file (2 triggers)
+    for fno, win in ((0, win_a), (1, win_b)):
+        spark.createDataFrame(group(range(4), win, fno)).coalesce(1).write.mode(
+            "append").parquet(pages_dir)
+    assert main(argv) == 0
+    # 4 rows per window, budget 3 per window ⇒ 3 + 3 admitted
+    assert read_stream_sink(spark, sink).count() == 6
+
+    # invocation 2: 4 MORE rows in each already-exhausted window — the
+    # checkpointed state rejects every one (cross-invocation enforcement)
+    for fno, win in ((2, win_a), (3, win_b)):
+        spark.createDataFrame(group(range(4), win, fno)).coalesce(1).write.mode(
+            "append").parquet(pages_dir)
+    assert main(argv) == 0
+    out = read_stream_sink(spark, sink).collect()
+    assert len(out) == 6
+    assert all(r.text is not None for r in out)
+
+
+def test_stream_sink_foreign_query_fails_loudly(spark, smoke_graph, tmp_path):
+    from graven_spark.streaming.pipeline import (
+        read_stream_sink,
+        stream_extract_to_sink,
+    )
+
+    pages_dir = str(tmp_path / "pages")
+    sink = str(tmp_path / "sink")
+    spark.createDataFrame(smoke_graph.pages).coalesce(2).write.parquet(pages_dir)
+    q = stream_extract_to_sink(spark, pages_dir, sink, str(tmp_path / "ckptA"))
+    q.awaitTermination()
+    n = read_stream_sink(spark, sink).count()
+    assert n == len(smoke_graph.pages)
+
+    # a FRESH checkpoint restarts batch ids at 0: reusing the sink dir must
+    # fail loudly, not silently skip the new batches into the stale marker
+    q2 = stream_extract_to_sink(spark, pages_dir, sink, str(tmp_path / "ckptB"))
+    with pytest.raises(Exception, match="different streaming query"):
+        q2.awaitTermination()
+    assert read_stream_sink(spark, sink).count() == n  # stale data untouched
+
+
+def test_stream_sink_legacy_ok_marker_skips_with_no_regression(
+    spark, smoke_graph, tmp_path
+):
+    """Pre-query-id _COMMIT markers ('ok') must not wedge a restart: the
+    batch is skipped exactly as the legacy code would have, and the stale
+    rows stay readable."""
+    from graven_spark.streaming.pipeline import (
+        read_stream_sink,
+        stream_extract_to_sink,
+    )
+
+    pages_dir = str(tmp_path / "pages")
+    sink = str(tmp_path / "sink")
+    spark.createDataFrame(smoke_graph.pages).coalesce(2).write.parquet(pages_dir)
+    q = stream_extract_to_sink(spark, pages_dir, sink, str(tmp_path / "ckptA"))
+    q.awaitTermination()
+    n = read_stream_sink(spark, sink).count()
+    # rewrite every marker to the legacy content
+    for d in os.listdir(sink):
+        with open(os.path.join(sink, d, "_COMMIT"), "w") as f:
+            f.write("ok")
+    # a replay against the legacy markers (fresh checkpoint = same batch
+    # ids) skips instead of raising, leaving the committed rows intact
+    q2 = stream_extract_to_sink(spark, pages_dir, sink, str(tmp_path / "ckptB"))
+    q2.awaitTermination()
+    assert read_stream_sink(spark, sink).count() == n
