@@ -16,7 +16,9 @@ DECIMAL then cast to DOUBLE.
 
 from __future__ import annotations
 
+import atexit
 import os
+import shutil
 import sys
 import tempfile
 from collections.abc import Callable
@@ -36,6 +38,15 @@ from graven_spark.sources.multimodal import extract_features, synth_media  # noq
 
 PAGES_DDL = "url string, warc_ts timestamp, html binary, text string, lang string"
 _EN = textops._EN_STOPWORDS
+
+
+def _temp_dir(prefix: str) -> str:
+    """A fresh temp dir, removed when the interpreter exits: the cached
+    crawls and ``entry()`` return lazy frames over it, so it must outlive
+    the call that made it."""
+    d = tempfile.mkdtemp(prefix=prefix)
+    atexit.register(shutil.rmtree, d, ignore_errors=True)
+    return d
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -66,7 +77,7 @@ def entry(spark: SparkSession) -> DataFrame:
     graph = synth.generate_graph(
         synth.smoke_specs(), leaf_texts=[r.text for r in docs]
     )
-    workdir = tempfile.mkdtemp(prefix="graven_entry_")
+    workdir = _temp_dir("graven_entry_")
     out = _run_crawl(spark, graph, workdir)
     return out.results(spark).orderBy("url")
 
@@ -470,7 +481,7 @@ def _srp_index_path(spark, sf) -> str:
     """Materialize the partitioned SRP index once per sf dir (the 100-TB
     shape: queries prune to their probed buckets' partitions)."""
     if sf not in _SRP_IDX:
-        path = tempfile.mkdtemp(prefix="graven_srp_idx_")
+        path = _temp_dir("graven_srp_idx_")
         e = _t(spark, sf, "embeddings")
         dim = len(_query_vec(spark, sf))
         simsearch.write_srp_index(e, path, dim=dim, n_planes=6)
@@ -496,7 +507,7 @@ _CRAWL_CACHE: dict[str, object] = {}
 def _cached_smoke_crawl(spark):
     if "smoke" not in _CRAWL_CACHE:
         graph = synth.generate_graph(synth.mini_specs())
-        workdir = tempfile.mkdtemp(prefix="graven_q_")
+        workdir = _temp_dir("graven_q_")
         _CRAWL_CACHE["smoke"] = _run_crawl(spark, graph, workdir)
     return _CRAWL_CACHE["smoke"]
 
@@ -556,7 +567,7 @@ def q_crawl_smoke(spark, sf):
 def _cached_limit_crawl(spark):
     if "limit" not in _CRAWL_CACHE:
         graph = synth.generate_graph(synth.mini_specs())
-        workdir = tempfile.mkdtemp(prefix="graven_q_")
+        workdir = _temp_dir("graven_q_")
         pages_path = os.path.join(workdir, "pages.parquet")
         graph.pages.to_parquet(pages_path, index=False)
         seeds = spark.createDataFrame(graph.seeds)
@@ -595,7 +606,7 @@ def q_crawl_jar_limit(spark, sf):
 
 def q_crawl_retry(spark, sf):  # U4: requeue-on-failure error multiset
     graph = synth.generate_graph(synth.mini_specs())
-    workdir = tempfile.mkdtemp(prefix="graven_retry_")
+    workdir = _temp_dir("graven_retry_")
     pages_path = os.path.join(workdir, "pages.parquet")
     graph.pages.to_parquet(pages_path, index=False)
     seeds = spark.createDataFrame(graph.seeds)
@@ -1231,7 +1242,7 @@ def _warc_fixture_dir() -> str:
     from graven_spark.sources import warc as W
 
     if not _WARC_FIX:
-        d = tempfile.mkdtemp(prefix="graven_warc_fix_")
+        d = _temp_dir("graven_warc_fix_")
         segs = _warc_fixture_records()
         with open(os.path.join(d, "seg-00000.warc.gz"), "wb") as f:
             f.write(W.build_warc(segs[0], gzip_members=True))
@@ -1306,7 +1317,7 @@ _CDX_FIX: list[str] = []
 
 def _cdx_fixture_path() -> str:
     if not _CDX_FIX:
-        d = tempfile.mkdtemp(prefix="graven_cdx_fix_")
+        d = _temp_dir("graven_cdx_fix_")
         p = os.path.join(d, "cdx-00000")
         with open(p, "w") as f:
             f.write("\n".join(_cdx_fixture_lines()))

@@ -380,6 +380,15 @@ def main(argv: list[str] | None = None) -> int:
             )
         except ValueError as e:
             p.error(str(e))
+    if args.cmd == "stream" and args.budget_window is not None:
+        from .streaming.pipeline import _window_seconds
+
+        if args.budget is None:
+            p.error("--budget-window requires --budget")
+        try:
+            _window_seconds(args.budget_window)
+        except (ValueError, KeyError) as e:
+            p.error(f"--budget-window: {e.args[0]}")
     spark = build_session(app_name=f"graven_spark_{args.cmd}")
     if args.silent:
         spark.sparkContext.setLogLevel("OFF")

@@ -6,9 +6,10 @@ The seen set is split into ``n_buckets`` shards by ``pmod(xxhash64(url), B)``
 Bloom filter (Putze, Sanders and Singler, 2007): every hash of a url lands
 in one 512-bit block (the whole shard when ``bits_per_shard`` < 512), and a
 shard set is one ``(blk bigint, words array<bigint>)`` row per block that
-holds a url — so a shard delta is sized by the urls it adds. Build, merge
-and probe are Spark built-ins (``bit_or`` aggregates on ``blk``; one join
-on ``blk`` plus one bit-test expression) — no Python worker anywhere.
+holds a url — so the blocks of a seen delta are sized by the urls it
+adds. Build, merge and probe are Spark built-ins (``bit_or`` aggregates on
+``blk``; one join on ``blk`` plus one bit-test expression) — no Python
+worker anywhere.
 
 Probe semantics: ``maybe_seen`` false ⇒ definitely new. Admission uses it
 as a residual condition of the exact anti-join, so correctness never

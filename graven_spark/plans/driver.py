@@ -130,9 +130,8 @@ def _update_urls(
     result url under ``cfg.update_url_prefix`` (re-fetch + re-extract; the
     url's depth/publish_ts are carried from the prior row, round is
     re-stamped — read_results keeps the newest row per url). Seen and the
-    Bloom shards are untouched: round k+1 carries round k's meta forward,
-    so the next round validates the shards against the spec that built
-    them."""
+    Bloom filter are untouched: round k+1 carries round k's meta forward,
+    so the next round uses the filter only under the spec that built it."""
     meta = store.meta(k)
     store.clean_uncommitted_above(k)
     targets = (

@@ -6,8 +6,8 @@
         occurrence) → robots gate → Bloom-conditioned anti-join vs seen
       → split: dirs → frontier_{k+1} ∪ deferred ∪ retries ; leaves →
         fetch join → extract text (JVM regex) → results
-      → seen MERGE (append delta), lineage rows, shard update, domain
-        lifecycle rows, atomic commit.
+      → seen MERGE (append delta; at compaction the base and its Bloom
+        filter), lineage rows, domain lifecycle rows, atomic commit.
 
 This replaces the reference's six-thread claim-check pipeline
 (/root/reference/graven/worker/pipeline_builder.py:124-224) with
@@ -49,7 +49,7 @@ from pyspark.sql import functions as F
 from ..core import LISTING_TS_SPARK_FORMAT, PRIORITY_STRIDE, SEED_PRIORITY_BASE
 from ..functions.canon import canonicalize, host_of
 from ..functions.extract import extract_links, extract_text
-from ..operators.bloom import BloomSpec, build_shards, merge_shards
+from ..operators.bloom import BloomSpec, build_shards
 from ..operators.dedup import admit_new, first_occurrence
 from ..operators.politeness import DEFAULT_BUDGET, gate_robots, select_round
 from ..operators.ranking import with_global_rank
@@ -126,10 +126,11 @@ class CrawlConfig:
 def round_meta(
     cfg: CrawlConfig, k: int, priority_base: int, frontier_count: int
 ) -> RoundMeta:
-    """Meta for a committed round whose shard chain (if any) was built with
-    ``cfg.bloom`` — every transition that writes shards builds them from the
-    config. A transition that writes none carries its predecessor's meta
-    forward instead, so the stamp always describes the chain on disk."""
+    """Meta for a committed round whose Bloom filter (if any) is built with
+    ``cfg.bloom`` — the set a seen base commit stores beside it, and the
+    delta blocks ``read_shards`` builds under this stamp. A transition that
+    writes no seen rows carries its predecessor's meta forward instead, so
+    the stamp always describes the seen state on disk."""
     return RoundMeta(
         round=k,
         priority_base=priority_base,
@@ -177,24 +178,6 @@ def fold_domains(
     )
 
 
-def validated_shards(
-    spark: SparkSession, store: RoundStore, meta: RoundMeta, cfg: CrawlConfig, k: int
-) -> tuple[DataFrame | None, bool]:
-    """Round k's Bloom shards, rebuilt from the full seen set when they are
-    missing or were built with a different spec (a mismatched shard's false
-    negative would skip the exact check and admit a duplicate — the spec is
-    part of the checkpoint contract, recorded in RoundMeta). Returns
-    ``(shards, rebuilt)`` — a rebuild must be persisted as a new FULL shard
-    baseline, since the stored delta chain carries the old spec."""
-    if not cfg.use_bloom:
-        return None, False
-    spec_ok = meta.bloom == asdict(cfg.bloom)
-    shards = store.read_shards(spark, k) if spec_ok else None
-    if shards is None:
-        return build_shards(store.read_seen(spark, k), cfg.bloom), True
-    return shards, False
-
-
 def seed_frontier(
     seeds: DataFrame, robots: DataFrame | None, cfg: CrawlConfig
 ) -> DataFrame:
@@ -239,8 +222,6 @@ def init_run(
         "seen_delta": frontier0.select("url"),
         "domains": fold_domains(store.read_domains(spark, 0), [(0, frontier0)]),
     }
-    if cfg.use_bloom:
-        artifacts["shards"] = build_shards(frontier0, cfg.bloom)
     meta = round_meta(cfg, 0, SEED_PRIORITY_BASE, frontier0.count())
     store.commit(0, meta, artifacts)
     return meta
@@ -516,11 +497,13 @@ def run_round(
     seen_base = store.read_seen_base(spark, k)
     seen_deltas = store.read_seen_deltas(spark, k)
     seen_parts = [p for p in (seen_base, seen_deltas) if p is not None]
-    shards, shards_rebuilt = validated_shards(spark, store, meta, cfg, k)
+    # the filter only under the spec that built it (a mismatched filter's
+    # false negative would admit a duplicate); otherwise admission is exact
+    spec_ok = cfg.use_bloom and meta.bloom == asdict(cfg.bloom)
+    shards = store.read_shards(spark, k) if spec_ok else None
     # ONE shard materialization per committed transition: every depth of a
-    # batched round probes the same shard generation (new-in-batch urls are
-    # handled by the exact batch_deltas anti-joins), and the commit's merge
-    # reads it once more.
+    # batched round probes the same filter (new-in-batch urls are handled
+    # by the exact batch_deltas anti-joins)
     if shards is not None:
         shards = shards.persist()
 
@@ -577,25 +560,16 @@ def run_round(
             (k + 1 + i, f.next_frontier) for i, f in enumerate(flows)
         ]),
     }
-    # both LSMs write per-round DELTAS (O(new urls) bytes, not O(total) — a
-    # 10^10-URL seen set or filter is tens of GB) and re-baseline at one
-    # cadence: a due round writes the consolidated seen base in place of
-    # its delta
-    due = store.compaction_due(commit_k)
-    if due:
-        artifacts["seen_full"] = store.read_seen(spark, k).unionByName(
-            all_new.select("url")
-        )
+    # the seen LSM writes a per-round DELTA (O(new urls) bytes, not O(total)
+    # — a 10^10-URL seen set is tens of GB); a due round writes the
+    # consolidated base in its place, and the Bloom filter beside it
+    if store.compaction_due(commit_k):
+        seen_full = store.read_seen(spark, k).unionByName(all_new.select("url"))
+        artifacts["seen_full"] = seen_full
+        if cfg.use_bloom:
+            artifacts["shards"] = build_shards(seen_full, cfg.bloom)
     else:
         artifacts["seen_delta"] = all_new.select("url")
-    if cfg.use_bloom:
-        # a full merged shard baseline is also re-materialized after a
-        # spec-change rebuild (the stored chain carries the old spec)
-        delta = build_shards(all_new, cfg.bloom)
-        if shards_rebuilt or due:
-            artifacts["shards"] = merge_shards(shards, delta)
-        else:
-            artifacts["shards_delta"] = delta
     next_meta = round_meta(cfg, commit_k, priority_base, flows[-1].next_count)
     store.commit(commit_k, next_meta, artifacts)
 

@@ -10,13 +10,12 @@ Layout (round k's directory holds the state *entering* round k):
 
     root/
       round_000000/            # seeded state
-        frontier/  seen_delta/ shards/ domains/ meta.json  _COMMIT
+        frontier/  seen_delta/ domains/       meta.json     _COMMIT
       round_000001/            # after round 0 ran
         frontier/  seen_delta/ results_delta/ errors_delta/ lineage/
-        shards_delta/          domains/       meta.json     _COMMIT
+        domains/   meta.json   _COMMIT
       round_000008/            # a compaction round has seen_full/ in place
-        seen_full/ shards/     # of seen_delta/, full shards/ in place of
-                               # shards_delta/
+        seen_full/ shards/     # of seen_delta/, and the Bloom filter over it
 
 Every round, the seeded one included, commits through
 ``RoundStore.commit(k, meta, artifacts)``: the ``name → DataFrame``
@@ -46,20 +45,18 @@ a rename: a round directory without ``_COMMIT`` is invisible to resume and
 ``clean_uncommitted_above`` removes it before the round is re-run, so a
 partial base can never shadow the deltas.
 
-Bloom shards are an LSM too: the newest full ``shards/`` set OR'd with the
-``shards_delta/`` sets after it, each row one 512-bit block of a blocked
-Bloom filter, ``(blk bigint, words array<bigint>)``, written only for blocks
-that hold a url — so a delta is sized by the round's new urls. Both LSMs
-re-baseline by one rule, ``RoundStore.compaction_due``. The Bloom spec
-that built the shard chain is recorded in ``meta.json`` as one ``bloom``
-stamp, the spec's fields as a dict (a transition that writes no shards
-carries the previous stamp forward). A resume whose spec differs from the
-stamp (the filter toggled on, or a meta written before the stamp existed)
-must rebuild shards from the full seen set, never trust mismatched ones
-(false negatives in the conditional anti-join would silently admit
-duplicates). A state whose full shards predate the blocked layout — the
-dense ``(bucket, longs)`` or the older ``(bucket, filter)`` one — reads as
-having no shards, so it is rebuilt the same way.
+The Bloom filter is stored only beside the seen base: a commit that
+writes ``seen_full`` also writes ``shards``, built from the same rows, one
+``(blk bigint, words array<bigint>)`` row per 512-bit block that holds a
+url. ``read_shards`` ORs that set with the blocks of the seen deltas after
+the base (the files the delta anti-join reads), so there is no second
+chain. The spec is recorded in ``meta.json`` as one ``bloom`` stamp, the
+spec's fields as a dict. The filter is used only when round k's stamp, the
+base's and the running spec agree; otherwise admission is exact (a
+mismatched filter's false negative would admit a duplicate). A meta
+written before the stamp existed reads as unstamped, a base set in an
+older ``(bucket, longs)`` or ``(bucket, filter)`` layout as no filter, and
+shard sets at rounds without ``seen_full`` are never read.
 
 Reading a round always goes through parquet, which also truncates the
 iterative plan lineage: every round's Spark plan has constant size.
@@ -78,6 +75,8 @@ from dataclasses import dataclass
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from ..operators.bloom import BloomSpec, build_shards, merge_shards
 
 _ROUND_RE = re.compile(r"^round_(\d{6})$")
 
@@ -147,8 +146,8 @@ class RoundMeta:
     # naming change or a foreign writer would fool into declaring wrong
     # bucket metadata.
     seen_bucketed: bool = False
-    # ``dataclasses.asdict`` of the BloomSpec that built the round's shard
-    # chain; None when the chain has no shards
+    # ``dataclasses.asdict`` of the BloomSpec the round's filter is built
+    # with; None when the filter is off
     bloom: dict | None = None
 
     def to_json(self) -> str:
@@ -275,23 +274,28 @@ class RoundStore:
         return self._read(spark, self._p(k, "frontier"), FRONTIER_SCHEMA)
 
     def read_shards(self, spark: SparkSession, k: int) -> DataFrame | None:
-        """Bloom shards at round k: the newest FULL shard set ≤ k OR'd with
-        the per-round shard deltas after it (the same LSM shape as the seen
-        set — a full rewrite of a tens-of-GB filter every round would be
-        pure write amplification at a 10^10-URL frontier). The merge is one
-        groupBy over the blocks the generations hold. ``None`` when there
-        is no full set, or it predates the ``(blk, words)`` layout."""
-        full_k, deltas = self._chain("shards", "shards_delta", k)
-        if full_k is None:
+        """The Bloom filter over round k's seen set under round k's stamp:
+        the set beside the newest ``seen_full`` ≤ k (if any) OR'd with the
+        blocks of the seen deltas after it. ``None`` when round k is
+        unstamped, or the base's set is missing, predates the ``(blk,
+        words)`` layout or carries another stamp."""
+        stamp = self.meta(k).bloom
+        if stamp is None:
             return None
-        full = spark.read.parquet(self._p(full_k, "shards"))
-        if not {"blk", "words"} <= set(full.columns):
-            return None
-        if not deltas:
-            return full
-        from ..operators.bloom import merge_shards
-
-        return merge_shards(full, *(spark.read.parquet(p) for p in deltas))
+        kb = self.newest("seen_full", k)
+        parts = []
+        if kb is not None:
+            path = self._p(kb, "shards")
+            if not os.path.exists(path) or self.meta(kb).bloom != stamp:
+                return None
+            base = spark.read.parquet(path)
+            if not {"blk", "words"} <= set(base.columns):
+                return None
+            parts.append(base)
+        deltas = self.read_seen_deltas(spark, k)
+        if deltas is not None:
+            parts.append(build_shards(deltas, BloomSpec(**stamp)))
+        return merge_shards(*parts) if len(parts) > 1 else parts[0]
 
     def read_domains(self, spark: SparkSession, k: int) -> DataFrame:
         path = self._p(k, "domains")
@@ -300,26 +304,26 @@ class RoundStore:
         return self._read(spark, path, DOMAINS_SCHEMA)
 
     def newest(self, name: str, upto_k: int) -> int | None:
-        """Newest round ≤ upto_k holding artifact ``name`` — the base of an
-        LSM: ``seen_full`` or a full ``shards`` set."""
+        """Newest round ≤ upto_k holding artifact ``name``."""
         for k in range(upto_k, -1, -1):
             if os.path.exists(self._p(k, name)):
                 return k
         return None
 
-    def _chain(self, base: str, delta: str, upto_k: int) -> tuple[int | None, list[str]]:
-        """An LSM at round upto_k: the newest round ≤ upto_k holding
-        ``base`` (None if none does) and the ``delta`` paths after it."""
-        kb = self.newest(base, upto_k)
+    def _chain(self, upto_k: int) -> tuple[int | None, list[str]]:
+        """The seen LSM at round upto_k: the newest round ≤ upto_k holding
+        ``seen_full`` (None if none does) and the ``seen_delta`` paths after
+        it."""
+        kb = self.newest("seen_full", upto_k)
         start = 0 if kb is None else kb + 1
-        paths = [self._p(j, delta) for j in range(start, upto_k + 1)]
+        paths = [self._p(j, "seen_delta") for j in range(start, upto_k + 1)]
         return kb, [p for p in paths if os.path.exists(p)]
 
     def compaction_due(self, k: int) -> bool:
-        """Whether round k re-baselines both LSMs (seen_full and a full
-        shard set): when it is compact_every rounds or more past the
-        previous seen base (round 0 if none). For stride-1 commits that is
-        every compact_every-th round; a batched commit may stride past the
+        """Whether round k writes ``seen_full`` (and the filter beside it):
+        when it is compact_every rounds or more past the previous seen base
+        (round 0 if none). For stride-1 commits that is every
+        compact_every-th round; a batched commit may stride past the
         multiple, and an --update-domain base restarts the count."""
         if k == 0:
             return False
@@ -335,7 +339,7 @@ class RoundStore:
         (that round's RoundMeta), never the current config: declaring B'≠B
         over B-bucket files would mis-partition the join and silently drop
         anti-join matches on a resume with a changed --seen-buckets."""
-        kb, _ = self._chain("seen_full", "seen_delta", upto_k)
+        kb, _ = self._chain(upto_k)
         if kb is None:
             return None
         meta = self.meta(kb)
@@ -362,14 +366,14 @@ class RoundStore:
     def read_seen_deltas(self, spark: SparkSession, upto_k: int) -> DataFrame | None:
         """Per-round seen deltas newer than the base (small: bounded by the
         politeness budget × rounds-since-compaction)."""
-        _, paths = self._chain("seen_full", "seen_delta", upto_k)
+        _, paths = self._chain(upto_k)
         if not paths:
             return None
         return spark.read.schema(SEEN_SCHEMA).parquet(*paths)
 
     def read_seen(self, spark: SparkSession, upto_k: int) -> DataFrame:
         """The whole seen set at upto_k: the base plus the deltas after it."""
-        kb, paths = self._chain("seen_full", "seen_delta", upto_k)
+        kb, paths = self._chain(upto_k)
         if kb is not None:
             paths = [self._p(kb, "seen_full"), *paths]
         return spark.read.schema(SEEN_SCHEMA).parquet(*paths)

@@ -69,10 +69,19 @@ _WINDOW_UNITS = {
 
 
 def _window_seconds(window: str | int) -> int:
-    if isinstance(window, int):
-        return window
-    n, unit = window.split()
-    return int(n) * _WINDOW_UNITS[unit]
+    """A budget window in seconds (``90`` or ``"15 minutes"``): ValueError
+    when malformed or not positive, KeyError on an unknown unit."""
+    if not isinstance(window, int):
+        n, _, unit = window.strip().partition(" ")
+        if not n.isdigit():
+            raise ValueError(f'budget window must read "<n> <unit>", got {window!r}')
+        unit = unit.strip()
+        if unit not in _WINDOW_UNITS:
+            raise KeyError(f"unknown budget window unit {unit!r}, use {', '.join(_WINDOW_UNITS)}")
+        window = int(n) * _WINDOW_UNITS[unit]
+    if window <= 0:
+        raise ValueError(f"budget window must be positive, got {window}")
+    return window
 
 
 def stream_host_budget(

@@ -4,6 +4,7 @@ pages writer the crawl tests share."""
 
 from __future__ import annotations
 
+import datetime as dt
 import sys
 from pathlib import Path
 
@@ -59,6 +60,16 @@ def _bloom(bits: int = 1 << 16, buckets: int = 8) -> BloomSpec:
 
 def _cfg(**kw) -> CrawlConfig:
     return CrawlConfig(use_bloom=True, bloom=_bloom(buckets=4), **kw)
+
+
+def _results_df(spark, n=6):
+    """Minimal crawl-results-shaped input for the enrichment stages."""
+    rows = [
+        (f"https://host0.example.com/maven2/g{i % 2}/art{i}/1.{i}/art{i}-1.{i}.jar",
+         dt.datetime(2024, 1, 1 + i))
+        for i in range(n)
+    ]
+    return spark.createDataFrame(rows, "url string, publish_ts timestamp")
 
 
 def _write_pages(graph: synth.SiteGraph, tmp_path) -> str:

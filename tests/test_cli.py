@@ -56,6 +56,27 @@ def test_cli_usage_errors_before_session(tmp_path, capsys, monkeypatch, flags, m
     assert message in capsys.readouterr().err
 
 
+@pytest.mark.parametrize("flags, message", [
+    (["--budget", "2", "--budget-window", "1h"], 'must read "<n> <unit>"'),
+    (["--budget", "2", "--budget-window", "2 weeks"], "unknown budget window unit 'weeks'"),
+    (["--budget", "2", "--budget-window", "0 seconds"], "must be positive"),
+    (["--budget-window", "1 hour"], "--budget-window requires --budget"),
+], ids=["no_unit", "unknown_unit", "zero", "window_without_budget"])
+def test_cli_stream_budget_window_errors_before_session(tmp_path, capsys, monkeypatch,
+                                                        flags, message):
+    """A stream budget window the stateful operator cannot use exits 2
+    before a session starts."""
+    def no_session(**_kw):
+        raise AssertionError("build_session called")
+
+    monkeypatch.setattr("graven_spark.__main__.build_session", no_session)
+    with pytest.raises(SystemExit) as exc:
+        main(["stream", "--pages", "p", "--sink", str(tmp_path / "sink"),
+              "--checkpoint", str(tmp_path / "ckpt"), *flags])
+    assert exc.value.code == 2
+    assert message in capsys.readouterr().err
+
+
 def test_cli_crawl_and_export(spark, smoke_graph, tmp_path):
     pages = str(tmp_path / "pages.parquet")
     smoke_graph.pages.to_parquet(pages, index=False)

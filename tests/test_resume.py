@@ -19,6 +19,7 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 from pyspark.sql import functions as F
 
+from graven_spark.operators.bloom import probe
 from graven_spark.oracle import crawl_oracle
 from graven_spark.plans.driver import crawl
 from graven_spark.plans.frontier import MAX_BATCH_ROUNDS, CrawlConfig
@@ -83,6 +84,16 @@ def test_kill_and_resume_identical(spark, smoke_graph, tmp_path):
     assert os.path.exists(os.path.join(junk, "_COMMIT"))
     shutil.rmtree(junk, ignore_errors=True)
 
+    # the filter has no false negative at any round: before the seen base,
+    # at it and over the deltas after it
+    store, spec = full.store, _cfg().bloom
+    committed = store.committed_rounds()
+    bases = [store.newest("seen_full", k) for k in committed]
+    assert None in bases and any(b is not None and b < k for b, k in zip(bases, committed))
+    for k in committed:
+        probed = probe(store.read_seen(spark, k), store.read_shards(spark, k), spec)
+        assert probed.filter(~F.col("maybe_seen")).count() == 0, k
+
 
 def _to_dense_shard_layout(path: str, bits: int) -> None:
     """Rewrite a shard artifact in the dense layout that preceded blocked
@@ -122,16 +133,18 @@ def _to_old_meta_and_seen(root: str) -> None:
 
 
 def test_resume_over_old_format_shards(spark, smoke_graph, tmp_path):
-    """A state written by older code — shards in the dense ``(bucket,
+    """A state written by older code — a base filter in the dense ``(bucket,
     longs)`` layout, four-field Bloom stamps in ``meta.json``, ``(url_hash,
-    url)`` seen deltas — resumes by rebuilding the shards from the seen set
-    once (re-baselining in the blocked ``(blk, words)`` layout) — same seen
+    url)`` seen deltas — resumes with exact admission until the next
+    compaction stores a ``(blk, words)`` filter beside its base — same seen
     set as an uninterrupted (oracle) crawl. The older ``(bucket, filter)``
-    layout reads as no shards too."""
+    layout reads as no filter too."""
     legacy = RoundStore(str(tmp_path / "legacy"))
-    os.makedirs(legacy._p(0, "shards"))
-    pq.write_table(pa.table({"bucket": pa.array([0], pa.int32()), "filter": [b"\xff" * 8]}),
-                   os.path.join(legacy._p(0, "shards"), "part-00000.parquet"))
+    old_set = spark.createDataFrame([(0, bytearray(b"\xff" * 8))], "bucket int, filter binary")
+    legacy.commit(0, RoundMeta(round=0, priority_base=0, frontier_count=0,
+                               bloom=dataclasses.asdict(_bloom())),
+                  {"seen_full": spark.createDataFrame([("https://h/",)], "url string"),
+                   "shards": old_set})
     assert legacy.read_shards(spark, 0) is None
 
     pages_path = str(tmp_path / "pages.parquet")
@@ -142,11 +155,12 @@ def test_resume_over_old_format_shards(spark, smoke_graph, tmp_path):
         list(smoke_graph.seeds.sort_values("seed_rank")["url"]),
     )
 
+    # compact_every=2: round 2 holds a seen base and the filter beside it
     part_dir = str(tmp_path / "part")
-    cfg = _cfg()
-    crawl(spark, pages_path, seeds, None, part_dir, _cfg(max_rounds=2))
+    cfg = _cfg(compact_every=2)
+    crawl(spark, pages_path, seeds, None, part_dir, _cfg(compact_every=2, max_rounds=2))
     old = sorted(glob.glob(os.path.join(part_dir, "round_*", "shards*")))
-    assert old
+    assert old == [os.path.join(part_dir, "round_000002", "shards")]
     for path in old:
         _to_dense_shard_layout(path, cfg.bloom.bits_per_shard)
     _to_old_meta_and_seen(part_dir)
@@ -155,17 +169,16 @@ def test_resume_over_old_format_shards(spark, smoke_graph, tmp_path):
     assert store.meta(2).bloom is None  # an old stamp reads as unstamped
     assert store.read_seen(spark, 2).columns == ["url"]
 
-    # compact_every=4: round 3 is not due, so a full shard set there is the
-    # rebuild, and the rounds after it trust the new stamp
-    cfg = _cfg(compact_every=4)
     resumed = crawl(spark, pages_path, seeds, None, part_dir, cfg)
     assert set(_collect(spark, resumed)[0]) == uninterrupted.seen
     store = resumed.store
     later = [k for k in store.committed_rounds() if k > 2]
     assert all(store.meta(k).bloom == dataclasses.asdict(cfg.bloom) for k in later)
-    full_sets = [k for k in later if store.newest("shards", k) == k]
-    assert full_sets[0] == 3
-    assert all(store.compaction_due(k) for k in full_sets[1:]), full_sets
+    # the dense base set is never trusted; the next base stores a blocked one
+    assert store.read_shards(spark, 3) is None
+    full_sets = [k for k in store.committed_rounds() if store.newest("shards", k) == k]
+    assert full_sets[0] == 2 and len(full_sets) > 1
+    assert all(store.newest("seen_full", k) == k for k in full_sets)
     cols = spark.read.parquet(os.path.join(part_dir, f"round_{full_sets[-1]:06d}", "shards")).columns
     assert sorted(cols) == ["blk", "words"]
 
@@ -174,8 +187,8 @@ def test_resume_over_old_format_shards(spark, smoke_graph, tmp_path):
 
 def test_resume_with_changed_bloom_spec(spark, smoke_graph, tmp_path):
     """Resuming with different Bloom parameters (or toggling the filter on)
-    must rebuild shards from the full seen set — never admit duplicates from
-    mismatched false negatives."""
+    must never probe a filter built under another spec — never admit
+    duplicates from mismatched false negatives."""
     pages_path = str(tmp_path / "pages.parquet")
     smoke_graph.pages.to_parquet(pages_path, index=False)
     seeds = spark.createDataFrame(smoke_graph.seeds)
@@ -201,7 +214,8 @@ def test_resume_with_changed_bloom_spec(spark, smoke_graph, tmp_path):
     assert sorted(r.url for r in out2.seen(spark).collect()) == want_seen
 
     # spec change on an --update-jar resume: the update transition writes no
-    # shards, so the next round must still see the old spec and rebuild
+    # seen rows, so the next round must still see the old stamp and admit
+    # exactly
     d3 = str(tmp_path / "update_spec_change")
     crawl(spark, pages_path, seeds, None, d3,
           CrawlConfig(use_bloom=True, bloom=_bloom(), max_rounds=2))
@@ -209,6 +223,23 @@ def test_resume_with_changed_bloom_spec(spark, smoke_graph, tmp_path):
                  CrawlConfig(use_bloom=True, bloom=_bloom(bits=1 << 20, buckets=4),
                              update_url_prefix=""))
     assert sorted(r.url for r in out3.seen(spark).collect()) == want_seen
+
+    # spec change after a compaction: the filter beside the base carries the
+    # old stamp, so the resume admits exactly until the next seen base
+    d4 = str(tmp_path / "compacted_spec_change")
+    crawl(spark, pages_path, seeds, None, d4,
+          CrawlConfig(use_bloom=True, bloom=_bloom(), compact_every=2, max_rounds=2))
+    out4 = crawl(spark, pages_path, seeds, None, d4,
+                 CrawlConfig(use_bloom=True, bloom=_bloom(bits=1 << 14, buckets=4),
+                             compact_every=2))
+    assert sorted(r.url for r in out4.seen(spark).collect()) == want_seen
+    store = out4.store
+    assert store.newest("seen_full", 2) == 2
+    later = [k for k in store.committed_rounds() if k > 2]
+    assert any(store.newest("seen_full", k) == 2 for k in later)
+    assert any(store.newest("seen_full", k) > 2 for k in later)
+    for k in later:
+        assert (store.read_shards(spark, k) is None) == (store.newest("seen_full", k) == 2), k
 
 
 def test_resume_with_changed_seen_buckets(spark, smoke_graph, tmp_path):
@@ -547,11 +578,8 @@ def test_adaptive_batching_deep_chain(spark, tmp_path):
     committed = store.committed_rounds()
     assert out.final_round == depth  # logical rounds preserved
     assert len(committed) <= depth // MAX_BATCH_ROUNDS + 2  # dirs ≪ depth
-    # strided commits keep one cadence for both LSMs: a full shard set after
-    # round 0 comes with its seen base, and no delta chain reaches the interval
-    full_shards = [k for k in committed if store.newest("shards", k) == k]
-    assert all(store.newest("seen_full", k) == k for k in full_shards if k > 0)
-    assert all(k - store.newest("shards", k) < cfg.compact_every for k in committed)
+    # the filter is stored only beside the seen base
+    assert all(store.newest("shards", k) == store.newest("seen_full", k) for k in committed)
     _assert_committed_rounds_immutable(store)
 
     assert {r.url for r in out.seen(spark).collect()} == ora.seen

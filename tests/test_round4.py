@@ -1,14 +1,12 @@
-"""Round-4 additions: SBOM blob table + archive export (S6 parity), real
-subprocess scanner wrapper, single-execution pipeline stages, run_log
-metadata columns, --jar-limit, stage toggles, combined --update."""
+"""Round-4 additions: real subprocess scanner wrapper, single-execution
+pipeline stages, run_log metadata columns, --jar-limit, stage toggles,
+combined --update (the SBOM table tests live in test_sbom.py)."""
 
 from __future__ import annotations
 
-import datetime as dt
 import json
 import os
 import stat
-import tarfile
 import zipfile
 
 import pytest
@@ -20,64 +18,7 @@ from graven_spark.plans.pipeline import (
     pipeline_oracle,
 )
 
-
-def _results_df(spark, n=6):
-    """Minimal crawl-results-shaped input for the enrichment stages."""
-    rows = [
-        (f"https://host0.example.com/maven2/g{i % 2}/art{i}/1.{i}/art{i}-1.{i}.jar",
-         dt.datetime(2024, 1, 1 + i))
-        for i in range(n)
-    ]
-    return spark.createDataFrame(rows, "url string, publish_ts timestamp")
-
-
-# -- sbom blob table (S6; /root/reference/ddl/sbom.sql) -----------------------
-
-def test_sbom_table_roundtrip(spark):
-    from graven_spark.functions.sbom import (
-        CODEC,
-        decompress_bytes,
-        fixture_sbom_json_py,
-    )
-
-    t = enrich_from_results(spark, _results_df(spark), "run0")
-    rows = {r.jar_id: r for r in t["sboms"].collect()}
-    jars = [r.jar_id for r in t["jars"].collect()]
-    assert set(rows) == set(jars) and len(rows) == 6
-    for jar_id, r in rows.items():
-        payload = decompress_bytes(bytes(r.sbom)).decode("utf-8")
-        assert payload == fixture_sbom_json_py(jar_id)
-        assert json.loads(payload)["source"]["target"] == jar_id
-        assert r.codec == CODEC and r.run_id == "run0"
-        assert r.uploaded is not None
-        # the blob really is compressed (codec header present)
-        assert bytes(r.sbom)[:1] != payload.encode()[:1]
-
-
-def test_sbom_archive_export_both_formats(tmp_path, spark):
-    from graven_spark.functions.sbom import export_sbom_archive, fixture_sbom_json_py
-
-    t = enrich_from_results(spark, _results_df(spark), "run0")
-    def pairs():  # the streaming-iterator contract (one blob at a time)
-        for r in t["sboms"].select("jar_id", "sbom").orderBy("jar_id").toLocalIterator():
-            yield r.jar_id, r.sbom
-    want = {
-        r.jar_id: json.loads(fixture_sbom_json_py(r.jar_id))
-        for r in t["jars"].collect()
-    }
-
-    zpath = export_sbom_archive(pairs(), str(tmp_path / "z"), "zip")
-    assert zpath.endswith("graven_sbom_dump.zip")
-    with zipfile.ZipFile(zpath) as z:
-        got = {n[:-5]: json.loads(z.read(n)) for n in z.namelist()}
-    assert got == want
-
-    tpath = export_sbom_archive(pairs(), str(tmp_path / "t"), "tar.gz")
-    with tarfile.open(tpath, "r:gz") as tf:
-        got = {
-            m.name[:-5]: json.loads(tf.extractfile(m).read()) for m in tf.getmembers()
-        }
-    assert got == want
+from .conftest import _results_df
 
 
 def test_pipeline_oracle_carries_sboms(spark):

@@ -1,6 +1,6 @@
 """Round-5 additions: artifact bytes into the real scanner (attach_payload),
-per-row sbom codec dispatch, NULL-blob-safe archive export, robust version
-probe, --cve-ref on run/process."""
+robust version probe, --cve-ref on run/process (the sbom codec tests live
+in test_sbom.py)."""
 
 from __future__ import annotations
 
@@ -10,8 +10,6 @@ import json
 import os
 import stat
 import subprocess
-import zipfile
-import zlib
 
 import pytest
 from pyspark.sql import functions as F
@@ -42,70 +40,6 @@ def test_probe_version_stderr_empty_and_error(tmp_path):
         probe_version(err_bin)
     with pytest.raises(FileNotFoundError):
         probe_version(str(tmp_path / "missing"))
-
-
-# -- sbom codec: recorded per row, dispatched per row (ADVICE r4) -------------
-
-def test_decompress_with_dispatch():
-    from graven_spark.functions.sbom import CODEC, compress_bytes, decompress_with
-
-    payload = b'{"k": "v"}'
-    assert decompress_with(None, compress_bytes(payload)) == payload
-    assert decompress_with(CODEC, compress_bytes(payload)) == payload
-    # a zlib-labelled blob decompresses via zlib regardless of the ambient
-    assert decompress_with("zlib", zlib.compress(payload)) == payload
-    with pytest.raises(ValueError, match="unknown sbom codec"):
-        decompress_with("lz4", b"xx")
-    try:
-        import zstandard  # noqa: F401
-    except ImportError:
-        with pytest.raises(RuntimeError, match="zstd"):
-            decompress_with("zstd", b"xx")
-
-
-def test_sbom_table_records_codec_and_null_blob(spark):
-    from graven_spark.functions.sbom import CODEC, sbom_table
-
-    texts = spark.createDataFrame(
-        [("a.jar", '{"x":1}'), ("b.jar", None)],
-        "jar_id string, sbom_json string",
-    )
-    rows = {r.jar_id: r for r in sbom_table(texts, "run0").collect()}
-    assert rows["a.jar"].codec == CODEC and rows["a.jar"].sbom is not None
-    # failed generator run: NULL blob, NULL codec — visible, never mislabeled
-    assert rows["b.jar"].sbom is None and rows["b.jar"].codec is None
-
-
-def test_decompress_column_codec_dispatch(spark):
-    from graven_spark.functions.sbom import compress_bytes, decompress_column
-
-    df = spark.createDataFrame(
-        [
-            ("a", compress_bytes(b'{"a":1}'), None),
-            ("b", zlib.compress(b'{"b":2}'), "zlib"),
-            ("c", None, None),
-        ],
-        "jar_id string, sbom binary, codec string",
-    )
-    out = {
-        r.jar_id: r.payload
-        for r in decompress_column(df, "sbom", "payload", codec_col="codec").collect()
-    }
-    assert out == {"a": '{"a":1}', "b": '{"b":2}', "c": None}
-
-
-def test_export_archive_skips_null_blobs_and_uses_codec(tmp_path):
-    from graven_spark.functions.sbom import compress_bytes, export_sbom_archive
-
-    rows = [
-        ("a.jar", compress_bytes(b'{"n": 1}')),                # ambient pair
-        ("dead.jar", None, None),                              # failed syft run
-        ("z.jar", zlib.compress(b'{"n": 2}'), "zlib"),         # recorded codec
-    ]
-    path = export_sbom_archive(iter(rows), str(tmp_path / "e"), "zip")
-    with zipfile.ZipFile(path) as z:
-        got = {n: json.loads(z.read(n)) for n in z.namelist()}
-    assert got == {"a.jar.json": {"n": 1}, "z.jar.json": {"n": 2}}
 
 
 # -- artifact bytes into the real scanner (VERDICT r4 #1) ---------------------
