@@ -41,7 +41,7 @@ def with_global_rank(
     rank_col: str = "fifo_rank",
     num_partitions: int | None = None,
     size_hint: int | None = None,
-) -> tuple[DataFrame, int, DataFrame]:
+) -> tuple[DataFrame, int | None, DataFrame]:
     """Attach a dense 0-based global rank by ``order_col`` (numeric, must be
     unique). Returns ``(ranked_df, total_rows, pinned)`` — the count falls
     out of the stats row for free; ``pinned`` is the persisted input handle
@@ -51,23 +51,21 @@ def with_global_rank(
     not leak round-over-round).
 
     ``size_hint``: the caller's known upper bound on ``df``'s row count (the
-    crawl loop tracks the frontier count across rounds). Below
-    ``SMALL_RANK_THRESHOLD`` the analytic bucket machinery is pure per-job
-    overhead — a deep crawl tail pays two driver actions per depth for a
-    few hundred rows — so the small path runs ONE count + a single-partition
-    window: same dense rank values, one fewer job, no offsets broadcast."""
+    crawl loop knows each frontier's count). Below ``SMALL_RANK_THRESHOLD``
+    the analytic bucket machinery is pure per-job overhead for a few hundred
+    rows, so the small path is a lazy single-partition window: same dense
+    rank values, no action at all, no offsets broadcast. It counts nothing,
+    so ``total_rows`` is None there — a caller that passes the hint gets its
+    counts elsewhere (the crawl observes them on its one materialization)."""
     spark = df.sparkSession
     nb = num_partitions or spark.sparkContext.defaultParallelism * 4
     df = df.persist()
     if size_hint is not None and size_hint < SMALL_RANK_THRESHOLD:
-        total = df.count()
-        if total == 0:
-            return df.withColumn(rank_col, F.lit(0).cast("long")), 0, df
         w = Window.orderBy(order_col)
         ranked = df.withColumn(
             rank_col, F.row_number().over(w).cast("long") - 1
         )
-        return ranked, total, df
+        return ranked, None, df
     stats = df.agg(
         F.min(order_col).alias("lo"), F.max(order_col).alias("hi"),
         F.count("*").alias("n"),

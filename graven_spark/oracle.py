@@ -124,7 +124,7 @@ def crawl_oracle(
                 deferred.append(row)
         if not selected:
             # every pending host has budget ≤ 0: no progress is possible —
-            # fail fast exactly like the engine (frontier.py run_round)
+            # fail fast exactly like the engine (frontier.py _advance)
             # instead of spinning max_rounds no-op rounds
             raise RuntimeError(
                 "frontier non-empty but nothing selected — politeness "

@@ -34,7 +34,7 @@ from ..functions.extract import extract_text
 from ..operators.bloom import build_shards
 from ..sources.checkpoint import RoundMeta, RoundStore, error_rows
 from .frontier import (
-    CrawlConfig, fold_domains, init_run, round_meta, run_round, seed_frontier,
+    CrawlConfig, _advance, _Pending, _seed, fold_domains, round_meta, seed_frontier,
 )
 
 
@@ -189,25 +189,35 @@ def crawl(
     store = RoundStore(state_dir, compact_every=cfg.compact_every,
                        seen_buckets=cfg.seen_buckets)
 
+    # run_log bracket (reference log_run_start/log_run_end,
+    # graven_database.py:353-377): opening also closes any dangling prior
+    # run as KILLED — the crash-safe analog of the reference's UPDATE. It
+    # opens before any commit is in flight, so it reads a settled store.
     k = store.latest_round()
+    src: int | _Pending
     if k is None:
-        meta = init_run(spark, store, seeds, robots, cfg)
-        k = 0
+        seq = store.log_run_start(cfg.run_id, 0, tool_meta=tool_meta)
+        src = _seed(spark, store, seeds, robots, cfg)
+        meta = src.meta
     else:
         meta = store.meta(k)
         if cfg.update_domains:
             meta = _reopen_domains(spark, store, k, seeds, robots, cfg)
-            k = meta.round
         if cfg.update_url_prefix is not None:  # "" = every url (--update)
-            meta = _update_urls(spark, store, k, pages_path, cfg)
-            k = meta.round
-
-    # run_log bracket (reference log_run_start/log_run_end,
-    # graven_database.py:353-377): opening also closes any dangling prior
-    # run as KILLED — the crash-safe analog of the reference's UPDATE.
-    seq = store.log_run_start(cfg.run_id, k, tool_meta=tool_meta)
-    while meta.frontier_count > 0 and meta.round < cfg.max_rounds:
-        meta = run_round(spark, store, pages_path, robots, cfg, meta.round)
-        k = meta.round
-    store.log_run_end(seq, k)
-    return CrawlOutputs(store=store, final_round=k)
+            meta = _update_urls(spark, store, meta.round, pages_path, cfg)
+        seq = store.log_run_start(cfg.run_id, meta.round, tool_meta=tool_meta)
+        src = meta.round
+    # the pipeline: each transition runs its depths while its predecessor's
+    # commit writes, then launches its own (frontier.py ``_advance``)
+    try:
+        while meta.frontier_count > 0 and meta.round < cfg.max_rounds:
+            src = _advance(spark, store, pages_path, robots, cfg, src)
+            meta = src.meta
+        if isinstance(src, _Pending):
+            src.join()
+    finally:
+        # no commit write outlives crawl(), also when a round raised
+        if isinstance(src, _Pending):
+            src.wait()
+    store.log_run_end(seq, meta.round)
+    return CrawlOutputs(store=store, final_round=meta.round)

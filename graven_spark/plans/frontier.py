@@ -26,9 +26,15 @@ Scale notes (explicitly engineered, SURVEY.md §4.2):
 - ``seen`` is only ever read with column pruning (url); the Bloom verdict
   is a residual condition of the anti-join, so every candidate still meets
   the seen side;
-- per-round parquet round-trip keeps the iterative plan O(1) per round;
-  every persisted handle, the Bloom shards included, is released before
-  the round returns (nothing accumulates over a long crawl).
+- each depth materializes once, by an eager localCheckpoint, which
+  truncates the iterative plan: it stays O(1) per depth whether the next
+  depth reads it in memory or from the committed round's parquet. The
+  depth's counts are observed on that one action, not counted by others;
+- the crawl loop is a two-stage pipeline: round k's commit writes run on a
+  background thread while round k+1's depths run from round k's in-memory
+  frontier (see ``_advance``). Every persisted handle, the Bloom shards
+  included, is released once the commit that reads it is on disk (nothing
+  accumulates over a long crawl).
 
 Retry/requeue (U4, reference /root/reference/graven/worker/generator.py:71-76
 + scanner.py:80-85): a selected directory URL whose fetch fails re-enters
@@ -41,9 +47,10 @@ queue).
 
 from __future__ import annotations
 
+import threading
 from dataclasses import asdict, dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..core import LISTING_TS_SPARK_FORMAT, PRIORITY_STRIDE, SEED_PRIORITY_BASE
@@ -93,11 +100,11 @@ class CrawlConfig:
     seen_buckets: int = SEEN_BUCKETS_DEFAULT
     # Frontier-size-adaptive round batching (SURVEY.md §7.4.5): when the
     # frontier holds fewer than batch_threshold rows, up to MAX_BATCH_ROUNDS
-    # logical depths are processed IN MEMORY before one parquet round-trip +
-    # commit — deep, narrow crawl tails (chain graphs, retry dribbles) stop
-    # paying per-depth driver/commit overhead. 0 = off (one commit per
-    # depth). Logical round stamps, priorities and lineage are preserved
-    # exactly; only the per-depth frontier *snapshots* are skipped.
+    # logical depths are processed IN MEMORY before one commit — deep,
+    # narrow crawl tails (chain graphs, retry dribbles) stop paying
+    # per-depth commit overhead. 0 = off (one commit per depth). Logical
+    # round stamps, priorities and lineage are preserved exactly; only the
+    # per-depth frontier *snapshots* are skipped.
     batch_threshold: int = 0
     # --update-domain analog: hosts to purge from seen + re-seed on resume.
     # The sentinel "*" (the -u/--update CLI flag) re-opens EVERY recorded
@@ -113,6 +120,16 @@ class CrawlConfig:
             raise ValueError(
                 "jar_limit must be >= 1 — a cap of 0 defers every selected URL "
                 "forever (no round can make progress)"
+            )
+        if self.seen_buckets < 1:
+            raise ValueError(
+                "seen_buckets must be >= 1 — the first compaction writes the "
+                "seen base in that many buckets"
+            )
+        if self.default_budget < 1:
+            raise ValueError(
+                "default_budget must be >= 1 — a host without a robots row "
+                "would get no fetch in any round"
             )
         if isinstance(self.update_domains, str) and self.update_domains != "*":
             # a bare host string would otherwise iterate per character in
@@ -204,6 +221,87 @@ def seed_frontier(
     return first_occurrence(gate_robots(cand, robots)).select(*FRONTIER_COLS)
 
 
+def _checkpoint_counting(
+    df: DataFrame, **conds: Column
+) -> tuple[DataFrame, dict[str, int]]:
+    """``df`` materialized by one eager localCheckpoint, and for each named
+    condition the number of its rows that meet it — observed on that same
+    action, so counting costs no job of its own."""
+    obs = Observation()
+    counts = [F.count(F.when(c, True)).alias(name) for name, c in conds.items()]
+    cp = df.observe(obs, *counts).localCheckpoint(eager=True)
+    return cp, obs.get
+
+
+class _Pending:
+    """A committed transition whose commit was launched: round
+    ``meta.round``'s artifacts are written on a background thread while the
+    next transition builds on ``frontier`` and ``admitted`` in memory.
+
+    ``disk_k`` is the newest round fully on disk when the commit launched
+    (None for the seed round): round ``meta.round``'s seen set is the one at
+    ``disk_k`` plus ``admitted``. ``persisted`` are the frames the commit
+    reads; they are freed once it is done."""
+
+    def __init__(self, store: RoundStore, meta: RoundMeta, artifacts: dict,
+                 disk_k: int | None, frontier: DataFrame, admitted: DataFrame,
+                 persisted: list) -> None:
+        self.meta, self.disk_k = meta, disk_k
+        self.frontier, self.admitted = frontier, admitted
+        self._persisted = persisted
+        self._error: BaseException | None = None
+
+        def write() -> None:
+            try:
+                store.commit(meta.round, meta, artifacts)
+            except BaseException as e:  # re-raised by join()
+                self._error = e
+
+        self._thread = threading.Thread(
+            target=write, name=f"graven-commit-{meta.round:06d}", daemon=True)
+        self._thread.start()
+
+    def wait(self) -> None:
+        """Block until the commit thread ends; free the frames it read."""
+        self._thread.join()
+        for df in self._persisted:
+            df.unpersist()
+        self._persisted = []
+
+    def join(self) -> RoundMeta:
+        """Wait for the commit: the round's meta once it is on disk, or the
+        commit's failure re-raised (the round then has no ``_COMMIT``)."""
+        self.wait()
+        if self._error is not None:
+            raise self._error
+        return self.meta
+
+
+def _seed(
+    spark: SparkSession,
+    store: RoundStore,
+    seeds: DataFrame,
+    robots: DataFrame | None,
+    cfg: CrawlConfig,
+) -> _Pending:
+    """Seed admission → round 0 state, its commit launched (reference:
+    crawler.py:189-203; seed file order is the inter-root priority,
+    cli_parser.py:246-259). The seeded frontier is checkpointed once, so
+    every artifact of the commit derives from the same rows, and its count
+    is observed on that checkpoint."""
+    store.clean_uncommitted(0)
+    frontier0, n = _checkpoint_counting(
+        seed_frontier(seeds, robots, cfg), rows=F.lit(True))
+    admitted = frontier0.select("url")
+    artifacts = {
+        "frontier": frontier0,
+        "seen_delta": admitted,
+        "domains": fold_domains(store.read_domains(spark, 0), [(0, frontier0)]),
+    }
+    meta = round_meta(cfg, 0, SEED_PRIORITY_BASE, n["rows"])
+    return _Pending(store, meta, artifacts, None, frontier0, admitted, [])
+
+
 def init_run(
     spark: SparkSession,
     store: RoundStore,
@@ -211,26 +309,15 @@ def init_run(
     robots: DataFrame | None,
     cfg: CrawlConfig,
 ) -> RoundMeta:
-    """Seed admission → round 0 state (reference: crawler.py:189-203; seed
-    file order is the inter-root priority, cli_parser.py:246-259). The
-    seeded frontier is checkpointed once, so every artifact of the commit
-    derives from the same rows."""
-    store.clean_uncommitted(0)
-    frontier0 = seed_frontier(seeds, robots, cfg).localCheckpoint(eager=True)
-    artifacts = {
-        "frontier": frontier0,
-        "seen_delta": frontier0.select("url"),
-        "domains": fold_domains(store.read_domains(spark, 0), [(0, frontier0)]),
-    }
-    meta = round_meta(cfg, 0, SEED_PRIORITY_BASE, frontier0.count())
-    store.commit(0, meta, artifacts)
-    return meta
+    """Seed the crawl: round 0's meta, returned once round 0 is on disk."""
+    return _seed(spark, store, seeds, robots, cfg).join()
 
 
 @dataclass
 class _RoundFlow:
     """One logical depth's outputs, all still in memory (next_frontier and
-    new are persisted; the rest derive from persisted parents)."""
+    new are filters over the depth's checkpoint; the rest derive from it and
+    from the persisted parents)."""
 
     next_frontier: DataFrame
     new: DataFrame
@@ -252,18 +339,21 @@ def _round_dataflow(
     seen_parts: list[DataFrame],
     shards: DataFrame | None,
     batch_deltas: list[DataFrame],
-    truncate: bool = False,
-    frontier_rows: int | None = None,
+    frontier_rows: int,
 ) -> _RoundFlow:
     """The per-depth dataflow for logical round k: politeness select →
     global FIFO rank → fetch join → link explode → admission → split.
     ``pages``: the pages table, read once per committed transition.
-    ``batch_deltas``: urls admitted by earlier depths of the SAME committed
-    batch — exact anti-join parts (tiny, AQE-broadcast; they are not Bloom
-    -covered, so they must not carry the maybe_seen condition).
-    ``truncate``: materialize the combined admitted/deferred/retries frame
-    via eager localCheckpoint instead of persist — REQUIRED when depths
-    chain in memory (each depth's logical plan builds on the last; 16
+    ``batch_deltas``: urls admitted since the seen set in ``seen_parts`` —
+    by earlier depths of the same committed batch, or by a transition whose
+    commit is still writing — exact anti-join parts (tiny, AQE-broadcast;
+    they are not Bloom-covered, so they must not carry the maybe_seen
+    condition). ``frontier_rows``: ``frontier``'s exact row count (committed
+    or observed).
+
+    The depth runs ONE Spark action on the small-rank path: the eager
+    localCheckpoint of its admitted/deferred/retries frame, which also
+    truncates the plan (the next depth may chain on it in memory; 16
     chained depths of un-truncated plan OOM the driver just *printing* the
     tree). Mid-batch fault tolerance is not lost: a crashed batch recomputes
     from the committed round."""
@@ -275,28 +365,22 @@ def _round_dataflow(
 
     # -- global FIFO rank (W1/W2) ------------------------------------------
     # JVM-only analytic rank over the full round set: one bucket-hash shuffle
-    # (no range sampling, no Python round trip, no join-back). The committed
-    # frontier count rides in as the size hint — tail depths take the
-    # single-window small path (one fewer driver action per depth).
-    ranked, n_selected, pinned = with_global_rank(
+    # (no range sampling, no Python round trip, no join-back). The frontier
+    # count rides in as the size hint — tail depths take the single-window
+    # small path, which runs no action; the selected count is observed at
+    # the checkpoint below.
+    ranked, _, pinned = with_global_rank(
         selected, "priority", "fifo_rank", size_hint=frontier_rows
     )
-    if n_selected == 0:
-        pinned.unpersist()
-        raise RuntimeError(
-            f"round {k}: frontier non-empty but nothing selected — "
-            "politeness budget must be ≥ 1 per active host"
-        )
 
     # -- global per-round cap (T3, cfg.jar_limit): rows ranked past the cap
     # defer with priority intact; the rank is already global, so the cap is
     # one filter — no extra shuffle, no second ordering pass
-    if cfg.jar_limit is not None and n_selected > cfg.jar_limit:
+    if cfg.jar_limit is not None:
         deferred = deferred.unionByName(
             ranked.filter(F.col("fifo_rank") >= cfg.jar_limit).select(*FRONTIER_COLS)
         )
         ranked = ranked.filter(F.col("fifo_rank") < cfg.jar_limit)
-        n_selected = cfg.jar_limit
 
     # -- fetch join (J2): huge pages scan ⋈ broadcast round set -------------
     fetched = (
@@ -368,7 +452,7 @@ def _round_dataflow(
     # separately — two jobs per depth, and the next_frontier job re-ran the
     # politeness flag pass for `deferred` (flagged is not cached). The union
     # computes everything once; `new` and `next_frontier` are filters over
-    # the cached/checkpointed result (no further jobs).
+    # the checkpointed result (no further jobs).
     new_cols = new0.columns
     nullb = F.lit(None).cast("boolean")
     nulls = F.lit(None).cast("string")
@@ -385,10 +469,10 @@ def _round_dataflow(
             *FRONTIER_COLS, nullb.alias("is_dir"), nulls.alias("ts_str"),
             F.lit("r").alias("_tag")))
     )
-    # (A lazy checkpoint folded into the next_count action measured a wash
-    # against eager+count in interleaved A/B — kept eager for the simpler
-    # materialization contract.)
-    combined = combined.localCheckpoint(eager=True) if truncate else combined.persist()
+    # next frontier = deferred ∪ admitted dirs ∪ retries
+    is_next = (F.col("_tag") != "n") | F.coalesce(F.col("is_dir"), F.lit(False))
+    combined, n = _checkpoint_counting(
+        combined, deferred=F.col("_tag") == "d", next=is_next)
     new = combined.filter(F.col("_tag") == "n").select(*new_cols)
 
     new_leaves = new.filter(~F.col("is_dir")).select(
@@ -450,62 +534,74 @@ def _round_dataflow(
         F.when(F.col("_t") == "b", F.col("_b")).otherwise(zero).alias("bytes_fetched"),
     )
 
-    # next frontier = deferred ∪ admitted dirs ∪ retries — a filter over the
-    # already-materialized combined frame, not a separate checkpoint
-    next_frontier = combined.filter(
-        (F.col("_tag") != "n") | F.coalesce(F.col("is_dir"), F.lit(False))
-    ).select(*FRONTIER_COLS)
-    next_count = next_frontier.count()
-    persisted = [fetched, failed, pinned]
-    if not truncate:  # checkpointed frames free via ContextCleaner on GC
-        persisted += [combined]
+    # checkpointed frames free via ContextCleaner on GC
     return _RoundFlow(
-        next_frontier=next_frontier,
+        next_frontier=combined.filter(is_next).select(*FRONTIER_COLS),
         new=new,
         results=results,
         errors=errors_dead.unionByName(errors_parse).unionByName(errors_dead_leaf),
         lineage=lineage,
-        n_selected=n_selected,
-        next_count=next_count,
-        persisted=persisted,
+        # every frontier row is either deferred (politeness or the jar cap)
+        # or selected
+        n_selected=frontier_rows - n["deferred"],
+        next_count=n["next"],
+        persisted=[fetched, failed, pinned],
     )
 
 
-def run_round(
+def _advance(
     spark: SparkSession,
     store: RoundStore,
     pages_path: str,
     robots: DataFrame | None,
     cfg: CrawlConfig,
-    k: int,
-) -> RoundMeta:
-    """Execute one committed transition starting at round k.
+    src: int | _Pending,
+) -> _Pending:
+    """Run one committed transition and launch its commit; returns the
+    pending handle. ``src`` is either a committed round k, read from disk,
+    or the previous transition's pending handle: its in-memory frontier is
+    the input, the seen set and Bloom filter are read at its on-disk round,
+    and its admitted urls join ``batch_deltas`` (an exact anti-join, so the
+    filter's no-false-negative contract holds).
 
-    Normally that is exactly one logical depth (commit round_{k+1}). With
-    ``cfg.batch_threshold > 0`` and a frontier smaller than it, up to
-    ``MAX_BATCH_ROUNDS`` logical depths run back-to-back in memory and
-    commit ONCE at round_{k+n} — same results/errors/lineage/priority
-    arithmetic per logical round, one parquet round-trip and one commit for
-    the whole batch. The batch stops early when the frontier empties, grows
-    back over the threshold, or max_rounds is reached."""
-    # a crashed prior attempt (or aborted update transition) may have left
-    # stale artifacts at ANY index above k (batched commits stride) — sweep
-    # them all; committing around stale state is never allowed
-    store.clean_uncommitted_above(k)
-    meta = store.meta(k)
-    frontier = store.read_frontier(spark, k)
-    seen_base = store.read_seen_base(spark, k)
-    seen_deltas = store.read_seen_deltas(spark, k)
-    seen_parts = [p for p in (seen_base, seen_deltas) if p is not None]
-    # the filter only under the spec that built it (a mismatched filter's
-    # false negative would admit a duplicate); otherwise admission is exact
-    spec_ok = cfg.use_bloom and meta.bloom == asdict(cfg.bloom)
-    shards = store.read_shards(spark, k) if spec_ok else None
+    The depths run while the previous commit is still writing; the
+    transition waits for that commit before it builds its own artifacts
+    (``compaction_due``, ``read_seen`` and ``read_domains`` need round k on
+    disk), so commits land in round order and at most one is in flight.
+
+    Normally a transition is exactly one logical depth (commit
+    round_{k+1}). With ``cfg.batch_threshold > 0`` and a frontier smaller
+    than it, up to ``MAX_BATCH_ROUNDS`` logical depths run back-to-back in
+    memory and commit ONCE at round_{k+n} — same results/errors/lineage/
+    priority arithmetic per logical round, one commit for the whole batch.
+    The batch stops early when the frontier empties, grows back over the
+    threshold, or max_rounds is reached."""
+    if isinstance(src, int):
+        # a crashed prior attempt (or aborted update transition) may have
+        # left stale artifacts at ANY index above k (batched commits
+        # stride) — sweep them all; committing around stale state is never
+        # allowed
+        store.clean_uncommitted_above(src)
+        meta, disk_k, carried = store.meta(src), src, []
+        frontier = store.read_frontier(spark, src)
+    else:
+        meta, disk_k, carried = src.meta, src.disk_k, [src.admitted]
+        frontier = src.frontier
+    k = meta.round
+    seen_parts, shards = [], None
+    if disk_k is not None:
+        seen_parts = [p for p in (store.read_seen_base(spark, disk_k),
+                                  store.read_seen_deltas(spark, disk_k))
+                      if p is not None]
+        # the filter only under the spec that built it (a mismatched
+        # filter's false negative would admit a duplicate); otherwise
+        # admission is exact
+        if cfg.use_bloom and store.meta(disk_k).bloom == asdict(cfg.bloom):
+            shards = store.read_shards(spark, disk_k)
     # ONE shard materialization per committed transition: every depth of a
-    # batched round probes the same filter (new-in-batch urls are handled
-    # by the exact batch_deltas anti-joins)
-    if shards is not None:
-        shards = shards.persist()
+    # batched round probes the same filter (urls it does not cover are
+    # handled by the exact batch_deltas anti-joins)
+    persisted = [] if shards is None else [shards.persist()]
 
     batching = 0 < meta.frontier_count < cfg.batch_threshold
     max_inner = MAX_BATCH_ROUNDS if batching else 1
@@ -515,43 +611,55 @@ def run_round(
     priority_base = meta.priority_base
     logical_k = k
     frontier_rows = meta.frontier_count
-    while True:
-        flow = _round_dataflow(
-            pages, robots, cfg, logical_k, priority_base,
-            frontier, seen_parts, shards,
-            batch_deltas=[f.new for f in flows],
-            truncate=batching,
-            frontier_rows=frontier_rows,
-        )
-        flows.append(flow)
-        priority_base += flow.n_selected * PRIORITY_STRIDE
-        logical_k += 1
-        frontier = flow.next_frontier
-        frontier_rows = flow.next_count
-        if (
-            len(flows) >= max_inner
-            or flow.next_count == 0
-            or logical_k >= cfg.max_rounds
-            or (batching and flow.next_count >= cfg.batch_threshold)
-        ):
-            break
+    try:
+        while True:
+            flow = _round_dataflow(
+                pages, robots, cfg, logical_k, priority_base,
+                frontier, seen_parts, shards,
+                batch_deltas=carried + [f.new for f in flows],
+                frontier_rows=frontier_rows,
+            )
+            flows.append(flow)
+            persisted += flow.persisted
+            if flow.n_selected == 0:
+                raise RuntimeError(
+                    f"round {logical_k}: frontier non-empty but nothing "
+                    "selected — politeness budget must be ≥ 1 per active host"
+                )
+            priority_base += flow.n_selected * PRIORITY_STRIDE
+            logical_k += 1
+            frontier = flow.next_frontier
+            frontier_rows = flow.next_count
+            if (
+                len(flows) >= max_inner
+                or flow.next_count == 0
+                or logical_k >= cfg.max_rounds
+                or (batching and flow.next_count >= cfg.batch_threshold)
+            ):
+                break
+        if isinstance(src, _Pending):
+            src.join()
+    except BaseException:
+        for df in persisted:
+            df.unpersist()
+        raise
 
     commit_k = logical_k
     all_new = flows[0].new
-    for f in flows[1:]:
-        all_new = all_new.unionByName(f.new)
     results = flows[0].results
     errors = flows[0].errors
     lineage = flows[0].lineage
     for f in flows[1:]:
+        all_new = all_new.unionByName(f.new)
         results = results.unionByName(f.results)
         errors = errors.unionByName(f.errors)
         lineage = lineage.unionByName(f.lineage)
+    admitted = all_new.select("url")
 
     # the artifacts are independent and all derive from persisted or
     # checkpointed frames, so the commit writes them concurrently
     artifacts = {
-        "frontier": flows[-1].next_frontier,
+        "frontier": frontier,
         "results_delta": results,
         "errors_delta": errors,
         "lineage": lineage,
@@ -564,18 +672,24 @@ def run_round(
     # — a 10^10-URL seen set is tens of GB); a due round writes the
     # consolidated base in its place, and the Bloom filter beside it
     if store.compaction_due(commit_k):
-        seen_full = store.read_seen(spark, k).unionByName(all_new.select("url"))
+        seen_full = store.read_seen(spark, k).unionByName(admitted)
         artifacts["seen_full"] = seen_full
         if cfg.use_bloom:
             artifacts["shards"] = build_shards(seen_full, cfg.bloom)
     else:
-        artifacts["seen_delta"] = all_new.select("url")
-    next_meta = round_meta(cfg, commit_k, priority_base, flows[-1].next_count)
-    store.commit(commit_k, next_meta, artifacts)
+        artifacts["seen_delta"] = admitted
+    next_meta = round_meta(cfg, commit_k, priority_base, frontier_rows)
+    return _Pending(store, next_meta, artifacts, k, frontier, admitted, persisted)
 
-    for f in flows:
-        for df in f.persisted:
-            df.unpersist()
-    if shards is not None:
-        shards.unpersist()
-    return next_meta
+
+def run_round(
+    spark: SparkSession,
+    store: RoundStore,
+    pages_path: str,
+    robots: DataFrame | None,
+    cfg: CrawlConfig,
+    k: int,
+) -> RoundMeta:
+    """Execute one committed transition starting at committed round k (see
+    ``_advance``); returns the new round's meta once it is on disk."""
+    return _advance(spark, store, pages_path, robots, cfg, k).join()

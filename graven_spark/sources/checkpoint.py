@@ -58,8 +58,12 @@ written before the stamp existed reads as unstamped, a base set in an
 older ``(bucket, longs)`` or ``(bucket, filter)`` layout as no filter, and
 shard sets at rounds without ``seen_full`` are never read.
 
-Reading a round always goes through parquet, which also truncates the
-iterative plan lineage: every round's Spark plan has constant size.
+The iterative plan is truncated by each depth's eager localCheckpoint
+(``plans/frontier.py``), so every round's Spark plan has constant size
+whether the next round reads this round's parquet or builds on the
+checkpoint in memory while this round's commit is still writing. A commit
+runs on one thread at a time and in round order: the next transition waits
+for it before reading round k's seen set or domains from here.
 """
 
 from __future__ import annotations
@@ -380,9 +384,9 @@ class RoundStore:
 
     def maybe_compact_seen(self, spark: SparkSession, k: int) -> bool:
         """No-op that returns False: compaction is a commit artifact now
-        (``run_round`` writes ``seen_full`` in the round that re-baselines).
-        Kept only for callers written against the post-commit compaction;
-        drop it with them."""
+        (``frontier._advance`` writes ``seen_full`` in the round that
+        re-baselines). Kept only for callers written against the
+        post-commit compaction; drop it with them."""
         return False
 
     def read_union(self, spark: SparkSession, name: str, schema: str, upto_k: int) -> DataFrame:

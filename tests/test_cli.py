@@ -43,7 +43,10 @@ def test_cli_rejects_bad_bloom_bits(tmp_path, capsys, flag, value, message):
     (["--sitemap-seeds"], "--sitemap-seeds requires --robots-rfc"),
     (["--seeds", "s", "--robots", "r", "--robots-rfc"],
      "--robots and --robots-rfc are mutually exclusive"),
-], ids=["no_seeds", "sitemap_without_rfc", "robots_and_rfc"])
+    (["--seeds", "s", "--seen-buckets", "0"], "seen_buckets must be >= 1"),
+    (["--seeds", "s", "--budget", "0"], "default_budget must be >= 1"),
+], ids=["no_seeds", "sitemap_without_rfc", "robots_and_rfc", "seen_buckets_zero",
+        "budget_zero"])
 def test_cli_usage_errors_before_session(tmp_path, capsys, monkeypatch, flags, message):
     """Flag combinations no crawl can run exit 2 before a session starts."""
     def no_session(**_kw):

@@ -15,10 +15,11 @@ from pathlib import Path
 
 import pandas as pd
 import pytest
+from pyspark.sql import functions as F
 
 from graven_spark.oracle import crawl_oracle, domains_oracle
 from graven_spark.plans.driver import crawl
-from graven_spark.plans.frontier import CrawlConfig, fold_domains
+from graven_spark.plans.frontier import CrawlConfig, _checkpoint_counting, fold_domains
 from graven_spark.operators.bloom import BloomSpec
 from graven_spark.sources.checkpoint import DOMAINS_SCHEMA
 
@@ -177,6 +178,26 @@ def test_replay_session_independent(spark, smoke_graph, tmp_path):
     cfg = CrawlConfig(use_bloom=True, bloom=BloomSpec(n_buckets=8, bits_per_shard=1 << 16))
     out, ora = _run_both(bare, tmp_path, smoke_graph, with_robots=False, cfg=cfg)
     _assert_match(bare, out, ora)
+
+
+@pytest.mark.parametrize("bare", [False, True], ids=["repo_session", "bare_session"])
+def test_observed_counts_match_checkpoint(spark, bare):
+    """A crawl depth's counts are observed on its one eager localCheckpoint,
+    not counted by jobs of their own. The observed counts must arrive with
+    that checkpoint and equal counts of the checkpointed frame — over a
+    broadcast join and an aggregate, for an empty frame, twice in one
+    session, in the repo session and in a bare one (Arrow off, ANSI on)."""
+    s = _bare_session(spark) if bare else spark
+    for _ in range(2):
+        rows = s.range(200).select((F.col("id") % 13).alias("g"), "id")
+        dim = s.range(13).select(F.col("id").alias("g"),
+                                 (F.col("id") % 2 == 0).alias("even"))
+        agg = (rows.join(F.broadcast(dim), "g")
+               .groupBy("g", "even").agg(F.count("*").alias("n")))
+        for frame in (agg, agg.filter(F.col("n") < 0)):
+            cp, n = _checkpoint_counting(frame, rows=F.lit(True), even=F.col("even"))
+            assert n == {"rows": cp.count(), "even": cp.filter(F.col("even")).count()}
+    assert n == {"rows": 0, "even": 0}
 
 
 def test_oracle_queries_session_independent(spark):

@@ -12,17 +12,19 @@ import glob
 import json
 import os
 import shutil
+import threading
 
 import numpy as np
 import pandas as pd
 import pyarrow as pa
 import pyarrow.parquet as pq
+import pytest
 from pyspark.sql import functions as F
 
 from graven_spark.operators.bloom import probe
 from graven_spark.oracle import crawl_oracle
 from graven_spark.plans.driver import crawl
-from graven_spark.plans.frontier import MAX_BATCH_ROUNDS, CrawlConfig
+from graven_spark.plans.frontier import MAX_BATCH_ROUNDS, CrawlConfig, init_run, run_round
 from graven_spark.sources.checkpoint import DOMAINS_SCHEMA, RoundMeta, RoundStore
 
 from .conftest import _bloom, _write_pages, pages_dict, robots_dict  # noqa: F401
@@ -93,6 +95,87 @@ def test_kill_and_resume_identical(spark, smoke_graph, tmp_path):
     for k in committed:
         probed = probe(store.read_seen(spark, k), store.read_shards(spark, k), spec)
         assert probed.filter(~F.col("maybe_seen")).count() == 0, k
+
+
+def _round_state(spark, store: RoundStore, k: int) -> dict:
+    """Everything committed round k holds, in comparable form."""
+    def rows(df):
+        return sorted(tuple(r) for r in df.collect())
+
+    lineage = store.read_lineage(spark, k).groupBy("round").agg(
+        F.sum("urls_in"), F.sum("urls_out"), F.sum("bytes_fetched"))
+    return {
+        "meta": dataclasses.asdict(store.meta(k)),
+        "frontier": rows(store.read_frontier(spark, k)),
+        "seen": rows(store.read_seen(spark, k)),
+        "results": rows(store.read_results(spark, k)),
+        "errors": rows(store.read_errors(spark, k)),
+        "lineage": rows(lineage),
+        "domains": rows(store.read_domains(spark, k)),
+    }
+
+
+def test_pipelined_crawl_equals_synchronous_rounds(spark, smoke_graph, tmp_path):
+    """``crawl()`` runs each transition's depths while the previous commit
+    writes, from that transition's in-memory frontier. Its committed state
+    must equal, round by round, the state of the synchronous
+    ``init_run`` + ``run_round`` loop (each round read back from disk),
+    with batched commits, compactions and politeness deferrals in the mix;
+    and its Bloom filter has no false negative at any round."""
+    pages_path = _write_pages(smoke_graph, tmp_path)
+    seeds = spark.createDataFrame(smoke_graph.seeds)
+    robots = spark.createDataFrame(
+        smoke_graph.robots,
+        schema="host string, disallow_prefixes array<string>, crawl_delay_tokens int",
+    )
+    cfg = _cfg(compact_every=2, batch_threshold=12)
+
+    sync = RoundStore(str(tmp_path / "sync"), compact_every=2)
+    meta = init_run(spark, sync, seeds, robots, cfg)
+    while meta.frontier_count > 0:
+        meta = run_round(spark, sync, pages_path, robots, cfg, meta.round)
+    piped = crawl(spark, pages_path, seeds, robots, str(tmp_path / "piped"), cfg).store
+
+    committed = piped.committed_rounds()
+    assert committed == sync.committed_rounds()
+    # batched and single-depth commits, and more than one seen base
+    assert any(b - a > 1 for a, b in zip(committed, committed[1:]))
+    assert any(b - a == 1 for a, b in zip(committed, committed[1:]))
+    assert len({piped.newest("seen_full", k) for k in committed} - {None}) > 1
+    _assert_committed_rounds_immutable(piped)
+    for k in committed:
+        assert _round_state(spark, piped, k) == _round_state(spark, sync, k), k
+        probed = probe(piped.read_seen(spark, k), piped.read_shards(spark, k), cfg.bloom)
+        assert probed.filter(~F.col("maybe_seen")).count() == 0, k
+
+
+def test_failed_background_commit_stops_crawl(spark, smoke_graph, tmp_path, monkeypatch):
+    """A commit write that fails on the background thread fails ``crawl()``:
+    that round and every later one stay uncommitted, no commit thread
+    outlives the call, and a resume equals the uninterrupted crawl."""
+    pages_path = _write_pages(smoke_graph, tmp_path)
+    seeds = spark.createDataFrame(smoke_graph.seeds)
+    full = crawl(spark, pages_path, seeds, None, str(tmp_path / "full"), _cfg())
+
+    write = RoundStore._write
+
+    def failing_write(self, k, name, df):
+        if k == 2 and name == "results_delta":
+            raise OSError("results_delta write failed")
+        write(self, k, name, df)
+
+    d = str(tmp_path / "state")
+    monkeypatch.setattr(RoundStore, "_write", failing_write)
+    with pytest.raises(OSError, match="results_delta write failed"):
+        crawl(spark, pages_path, seeds, None, d, _cfg())
+    assert not [t for t in threading.enumerate() if t.name.startswith("graven-commit")]
+    assert RoundStore(d).committed_rounds() == [0, 1]
+
+    monkeypatch.undo()
+    resumed = crawl(spark, pages_path, seeds, None, d, _cfg())
+    assert resumed.store.committed_rounds() == full.store.committed_rounds()
+    for k in full.store.committed_rounds():
+        assert _round_state(spark, resumed.store, k) == _round_state(spark, full.store, k), k
 
 
 def _to_dense_shard_layout(path: str, bits: int) -> None:
