@@ -33,7 +33,7 @@ Scale notes (explicitly engineered, SURVEY.md §4.2):
 - the crawl loop is a two-stage pipeline: round k's commit writes run on a
   background thread while round k+1's depths run from round k's in-memory
   frontier (see ``_advance``). Every persisted handle, the Bloom shards
-  included, is released once the commit that reads it is on disk (nothing
+  included, is released once its transition's commit is on disk (nothing
   accumulates over a long crawl).
 
 Retry/requeue (U4, reference /root/reference/graven/worker/generator.py:71-76
